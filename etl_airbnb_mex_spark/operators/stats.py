@@ -5,6 +5,18 @@ free); *exact* percentiles/median are used so the DuckDB oracle
 (``quantile_cont``) and pandas (linear interpolation) match — the
 ``approx`` flag switches to sketch-based variants for 100 TB runs where
 an exact percentile would force a global sort (SURVEY.md §4.3).
+
+Exact quantiles have one entry point, :func:`exact_quantiles`. It
+reads Spark's optimizer estimate of the projected value column and
+runs :func:`exact_percentiles_native` (one ``percentile`` aggregate,
+fused with the caller's moments) when the estimate is at most
+``NATIVE_QUANTILE_MAX_BYTES``, else
+:func:`exact_percentiles_bucket_select` (shuffle-bounded memory at any
+size). Both return the same row: NaN and NULL are missing (pandas
+skipna, the reference's semantics) and values between two ranks are
+interpolated linearly as by ``quantile_cont`` (bucket-select evaluates
+its exact ``(1 − d)·lo + d·hi``; Spark's ``percentile`` can differ in
+the last bit, far below the 6-dp rounding).
 """
 
 from __future__ import annotations
@@ -13,6 +25,34 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ROUND_DP = 6
+
+#: Largest optimizer estimate (``optimizedPlan().stats().sizeInBytes``
+#: of the projected double column, the figure Spark compares with
+#: ``autoBroadcastJoinThreshold``) that takes the native ``percentile``
+#: aggregate. Its value map holds every distinct value, so on a
+#: high-distinct column bucket-select's two scans win from some size.
+#: Measured with six cut points on local[4] (4 vCPUs, warm JVM, median
+#: of 3; sf1 one run): wall s native / bucket-select, estimate in bytes.
+#: The 150k/300k rows are the first rows of sf0.1 lineitem; sf1 is
+#: sf0.1 tiled ten times (scripts/make_scaledata.py).
+#:
+#:   input               rows   estimate  l_extendedprice  l_quantity
+#:   lineitem sf0.01      60k    143,788      0.33 / 1.42  0.13 / 1.26
+#:   lineitem rows       150k    428,540      0.72 / 1.32
+#:   lineitem rows       300k    762,760      1.32 / 1.21
+#:   lineitem sf0.1      600k  1,492,266      3.17 / 1.27  0.21 / 1.30
+#:   lineitem sf1          6M 15,177,952      6.98 / 2.84  0.45 / 2.55
+#:
+#:   input               rows   estimate     o_totalprice
+#:   orders sf0.01        15k     56,279      0.17 / 1.28
+#:   orders sf0.1        150k    544,753      0.59 / 1.15
+#:   orders sf1          1.5M  4,585,374      0.99 / 1.72
+#:
+#: Native loses only when the column is high-distinct (l_extendedprice
+#: from ~300k rows); the estimate cannot see distinct counts, so the cut
+#: guards that case: 640 KiB lies between 544,753 B (native 2× faster)
+#: and 762,760 B (break-even on l_extendedprice).
+NATIVE_QUANTILE_MAX_BYTES = 640 * 1024
 
 
 def _r(c: Column, dp: int = ROUND_DP) -> Column:
@@ -32,6 +72,93 @@ def _pcts(col: str | Column, ps: tuple[float, ...], approx: bool) -> Column:
     return F.percentile(col, arr)
 
 
+def _pname(p: float) -> str:
+    return f"p{int(p * 100)}"
+
+
+def _no_nan(col: str) -> Column:
+    """``col`` as double with NaN turned into NULL (aggregates skip it)."""
+    v = F.col(col).cast("double")
+    return F.when(~F.isnan(v), v)
+
+
+def _interpolate(lo: Column, hi: Column, k: Column) -> Column:
+    """``quantile_cont``'s ``(1 − d)·lo + d·hi`` at fractional rank k.
+    An integral k returns lo itself: ``0·±Inf`` is NaN, so the formula
+    would turn an exact hit on an infinite value into NaN."""
+    d = k - F.floor(k)
+    return F.when(F.floor(k) == F.ceil(k), lo).otherwise(
+        (1 - d) * lo + d * hi
+    )
+
+
+def exact_percentiles_native(
+    df: DataFrame,
+    col: str,
+    ps: tuple[float, ...],
+    dp: int | None = ROUND_DP,
+    keep_n: bool = False,
+    moments: dict[str, Column] | None = None,
+) -> DataFrame:
+    """Exact percentiles as ONE ``percentile(v, array(ps))`` aggregate
+    over the NaN-masked column, with ``moments`` (aggregate Columns
+    over ``df``'s own columns, e.g. ``{"cnt": F.count(col)}``) in the
+    same aggregate: one scan, two jobs. The value map it builds holds
+    every distinct value, which is why :func:`exact_quantiles` only
+    sends small plans here.
+
+    Returns one row: ``p25 …`` (``dp``-rounded, raw when ``dp`` is
+    None), then ``n`` (the non-NULL, non-NaN count) when ``keep_n``,
+    then the moment columns. Empty input gives NULL quantiles.
+    """
+    moments = moments or {}
+    masked = _no_nan(col)
+    aggs = [_pcts(masked, ps, approx=False).alias("__q")]
+    if keep_n:
+        aggs.append(F.count(masked).alias("n"))
+    aggs += [c.alias(name) for name, c in moments.items()]
+    out = []
+    for i, p in enumerate(ps):
+        q = F.element_at("__q", i + 1)
+        out.append((q if dp is None else F.round(q, dp)).alias(_pname(p)))
+    return df.agg(*aggs).select(
+        *out, *(["n"] if keep_n else []), *moments
+    )
+
+
+def _estimated_bytes(df: DataFrame, col: str) -> int:
+    """Spark's optimizer size estimate of ``col`` projected as double."""
+    plan = df.select(F.col(col).cast("double"))._jdf.queryExecution()
+    return int(plan.optimizedPlan().stats().sizeInBytes())
+
+
+def _quantile_path(df: DataFrame, col: str):
+    """The exact-quantile branch for this input: native when Spark's
+    estimate is at most ``NATIVE_QUANTILE_MAX_BYTES``, else
+    bucket-select."""
+    if _estimated_bytes(df, col) <= NATIVE_QUANTILE_MAX_BYTES:
+        return exact_percentiles_native
+    return exact_percentiles_bucket_select
+
+
+def exact_quantiles(
+    df: DataFrame,
+    col: str,
+    ps: tuple[float, ...],
+    dp: int | None = ROUND_DP,
+    keep_n: bool = False,
+    moments: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The engine's one exact-quantile entry point: the branch
+    :func:`_quantile_path` picks, called with the same arguments. Both
+    branches give the same one-row frame (see
+    :func:`exact_percentiles_native`); the choice changes cost, never
+    the rounded answer."""
+    return _quantile_path(df, col)(
+        df, col, ps, dp=dp, keep_n=keep_n, moments=moments
+    )
+
+
 def describe_stats(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     """A5 — df.describe(): count/mean/std/min/p25/p50/p75/max, one row.
 
@@ -42,243 +169,52 @@ def describe_stats(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     last-bit partition-order determinism (rounding to 6 dp absorbs the
     ~1e-12 relative summation variance, same policy as stddev/corr).
 
-    r13 (VERDICT r12 #10): the EXACT path no longer runs the
-    ``percentile()`` aggregate — its per-partition full-value buffer
-    was the module's last registered 100 TB OOM hazard after
-    ``percentiles``/``filter_quantile`` moved off it in r12. Quantiles
-    now come from :func:`exact_percentiles_bucket_select` (4096-bucket
-    histogram → target-bucket exact sort, memory shuffle-bounded) and
-    join the single-pass moments row through a 1-row broadcast
-    crossJoin. ``approx=True`` keeps the one-pass
-    ``percentile_approx`` sketch (already bounded-memory). NaN is
-    MISSING on the quantile outputs on both paths (the r11 engine-wide
-    percentile contract: the reference computes in pandas, which
-    skips NaN); the moments columns keep Spark aggregate semantics
-    (count includes NaN rows, mean/std poison to NaN) — unchanged
-    from every earlier round.
+    The moments keep Spark aggregate semantics (count includes NaN
+    rows, mean/std/max turn NaN); the quartiles skip NaN. Exact
+    quartiles come from :func:`exact_quantiles` with the moments fused
+    into its aggregate (small plans: one aggregate in all);
+    ``approx=True`` uses the ``percentile_approx`` sketch instead.
     """
+    c = F.col(col)
+    moments = {
+        "cnt": F.count(c),
+        "mean": _r(F.avg(c)),
+        "std": _r(F.stddev_samp(c)),
+        "min": _r(F.min(c)),
+        "max": _r(F.max(c)),
+    }
+    ps = (0.25, 0.50, 0.75)
     if approx:
-        wide = df.agg(
-            F.count(col).alias("cnt"),
-            _r(F.avg(col)).alias("mean"),
-            _r(F.stddev_samp(col)).alias("std"),
-            _r(F.min(col)).alias("min"),
-            _pcts(col, (0.25, 0.50, 0.75), approx).alias("__q"),
-            _r(F.max(col)).alias("max"),
+        q = df.agg(
+            _pcts(_no_nan(col), ps, approx).alias("__q"),
+            *[m.alias(name) for name, m in moments.items()],
+        ).select(
+            *[_r(F.element_at("__q", i + 1)).alias(_pname(p))
+              for i, p in enumerate(ps)],
+            *moments,
         )
-        return wide.select(
-            "cnt", "mean", "std", "min",
-            _r(F.element_at("__q", 1)).alias("p25"),
-            _r(F.element_at("__q", 2)).alias("p50"),
-            _r(F.element_at("__q", 3)).alias("p75"),
-            "max",
-        )
-    moments = df.agg(
-        F.count(col).alias("cnt"),
-        _r(F.avg(col)).alias("mean"),
-        _r(F.stddev_samp(col)).alias("std"),
-        _r(F.min(col)).alias("min"),
-        _r(F.max(col)).alias("max"),
-    )
-    q = exact_percentiles_bucket_select(df, col, ps=(0.25, 0.50, 0.75))
-    # both sides are 1-row frames: the crossJoin is a scalar broadcast
-    return moments.crossJoin(F.broadcast(q)).select(
-        "cnt", "mean", "std", "min", "p25", "p50", "p75", "max"
-    )
+    else:
+        q = exact_quantiles(df, col, ps, moments=moments)
+    return q.select("cnt", "mean", "std", "min", "p25", "p50", "p75", "max")
 
 
 def percentiles(
     df: DataFrame, col: str, ps: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99),
     approx: bool = False,
-    method: str = "agg",
 ) -> DataFrame:
-    """A7 — exact percentiles at the reference's cut points (nb:cell9:37-41).
-
-    ``method='agg'`` (default) is a LAZY single percentile aggregate —
-    safe to compose into larger plans, but its per-partition value map +
-    single-threaded merge is the hot spot (3.1 s at sf0.1) and a 100 TB
-    OOM risk. ``method='sortrank'`` runs :func:`exact_percentiles_sortrank`
-    EAGERLY (range shuffle + per-partition rank pick; 1.2–1.6 s at
-    sf0.1, shuffle-bounded memory — the registered driver query).
-    ``method='bracket'`` is the sketch-bracket alternative in
-    :func:`exact_percentiles_bracket` (no shuffle of the column, but
-    3 blocking jobs whose fixed latency benched slower).
-    ``method='prefix'`` is the r10 fully-LAZY exact path
-    (:func:`exact_percentiles_prefix`): global ranks via the bucketed
-    prefix sum, zero driver round-trips.
-    ``method='bucketselect'`` (r12, the registered driver form) is
-    the fully-lazy path that never ranks the full column
-    (:func:`exact_percentiles_bucket_select`): bucket histogram →
-    in-plan target-bucket selection → exact sort inside the ≤ 2·|ps|
-    target buckets only — the corrected r12 trend showed the prefix
-    form's full-column sort was a 2.7–3× constant factor at sf24+.
-    Rounding goes through F.round on all paths so HALF_UP semantics
-    match the rest of the module and the oracle (Python's round() is
-    half-even on the binary value and diverges on trailing-5 digits).
-
-    NaN is MISSING on every method (r11): the reference computes
-    percentiles in pandas, whose ``quantile`` skips NaN, so NaN-as-
-    missing is the engine contract. Spark's ``percentile()`` aggregate
-    instead counts NaN in n and sorts it greatest (measured: values
-    1..100 + 10 NaN → p50 55.5, p99 NaN), so the dispatcher filters
-    NaN up front for ALL methods — without this the agg and prefix
-    paths silently disagreed on NaN-bearing data (review r11; the
-    prefix operator also filters internally, keeping its direct-call
-    contract).
-    """
-    vd = F.col(col).cast("double")
-    df = df.filter(vd.isNull() | ~F.isnan(vd))
-    if method in ("prefix", "bucketselect"):
-        if approx:
-            raise ValueError(
-                f"method={method!r} computes EXACT percentiles; use "
-                "method='agg' with approx=True for the sketch path"
-            )
-        fn_lazy = (
-            exact_percentiles_bucket_select
-            if method == "bucketselect"
-            else exact_percentiles_prefix
-        )
-        return fn_lazy(df, col, ps)
-    if method not in ("agg", "bracket", "sortrank"):
-        raise ValueError(
-            "method must be 'agg', 'bracket', 'sortrank', 'prefix' or "
-            f"'bucketselect', got {method!r}"
-        )
-    if method != "agg" and approx:
-        raise ValueError(
-            f"method={method!r} computes EXACT percentiles; combining it "
-            "with approx=True is contradictory — use method='agg' with "
-            "approx=True for the sketch-based path"
-        )
-    if method in ("bracket", "sortrank"):
-        fn = (
-            exact_percentiles_bracket
-            if method == "bracket"
-            else exact_percentiles_sortrank
-        )
-        vals = fn(df, col, ps)
-        raw = df.sparkSession.createDataFrame(
-            [tuple(vals[p] for p in ps)],
-            ", ".join(f"`p{int(p * 100)}` double" for p in ps),
-        )
-        return raw.select(
-            *[_r(F.col(f"p{int(p * 100)}")).alias(f"p{int(p * 100)}")
-              for p in ps]
-        )
-    wide = df.agg(_pcts(col, ps, approx).alias("__q"))
+    """A7 — percentiles at the reference's cut points (nb:cell9:37-41),
+    one row ``p25 … p99`` rounded to 6 dp (F.round: HALF_UP, as the
+    oracle). Exact by default through :func:`exact_quantiles`;
+    ``approx=True`` is the ``percentile_approx`` sketch. NaN is missing
+    on both paths (pandas ``quantile`` skips it; Spark's raw
+    aggregates would count it and sort it greatest)."""
+    if not approx:
+        return exact_quantiles(df, col, ps)
+    wide = df.agg(_pcts(_no_nan(col), ps, approx).alias("__q"))
     return wide.select(
-        *[
-            _r(F.element_at("__q", i + 1)).alias(f"p{int(p * 100)}")
-            for i, p in enumerate(ps)
-        ]
+        *[_r(F.element_at("__q", i + 1)).alias(_pname(p))
+          for i, p in enumerate(ps)]
     )
-
-
-def exact_percentiles_bracket(
-    df: DataFrame, col: str, ps: tuple[float, ...],
-    accuracy: int = 10_000,
-) -> dict[float, float | None]:
-    """EXACT linear-interpolated percentiles via bracket refinement —
-    the distributed algorithm that avoids the percentile aggregate's
-    full-column buffer (its per-partition value map + single-threaded
-    merge is the 2.5 s hot spot at sf0.1; at 100 TB it is an OOM risk):
-
-    1. ONE pass: n, min, max + approx_percentile at p ± 3/accuracy
-       (rank error of the KLL-style sketch is n/accuracy, so the true
-       values at ranks ⌊(n-1)p⌋/⌈(n-1)p⌉ provably lie inside the value
-       bracket [v(p−3ε), v(p+3ε)]).
-    2. ONE pass: per bracket, scalar counts of rows strictly below the
-       bracket start and EQUAL to each bracket endpoint, plus the
-       sorted values strictly INSIDE the bracket. Ties never enter the
-       collection — a bracket landing on a 90 %-duplicated value counts
-       the tied mass as two longs instead of collecting it, so the
-       collected interior is rank-bounded (≤ ~24·n/accuracy values)
-       regardless of duplication.
-    3. Driver: reconstruct the rank layout
-       [eq_lo ties][interior values][eq_hi ties] starting at the
-       below-count, index the needed ranks, interpolate.
-
-    Falls back to the exact percentile aggregate if a rank misses the
-    reconstructed segment (cannot happen within the sketch guarantee;
-    belt and braces). NaN is MISSING here too (filtered up front) —
-    direct callers get the same contract as the :func:`percentiles`
-    dispatcher, instead of percentile_approx/percentile counting NaN
-    in n and sorting it greatest (ADVICE r11 #2). Returns {p: value}
-    with None for an empty column.
-    """
-    vd = F.col(col).cast("double")
-    df = df.filter(vd.isNull() | ~F.isnan(vd))
-    eps = 3.0 / accuracy
-    probe_ps: list[float] = []
-    for p in ps:
-        probe_ps += [max(0.0, p - eps), min(1.0, p + eps)]
-    first = df.agg(
-        F.count(F.col(col)).alias("n"),
-        F.min(col).alias("mn"),
-        F.max(col).alias("mx"),
-        F.percentile_approx(
-            col, F.array(*[F.lit(q) for q in probe_ps]), accuracy
-        ).alias("br"),
-    ).collect()[0]
-    n = first["n"]
-    if n == 0:
-        return {p: None for p in ps}
-    if n == 1 or first["mn"] == first["mx"]:
-        return {p: float(first["mn"]) for p in ps}
-    brackets = [
-        (float(first["br"][2 * i]), float(first["br"][2 * i + 1]))
-        for i in range(len(ps))
-    ]
-
-    c = F.col(col)
-    aggs = []
-    for i, (lo, hi) in enumerate(brackets):
-        aggs.append(F.sum((c < F.lit(lo)).cast("long")).alias(f"below_{i}"))
-        aggs.append(F.sum((c == F.lit(lo)).cast("long")).alias(f"eqlo_{i}"))
-        if hi > lo:
-            aggs.append(
-                F.sum((c == F.lit(hi)).cast("long")).alias(f"eqhi_{i}")
-            )
-            aggs.append(
-                F.sort_array(
-                    F.collect_list(F.when((c > lo) & (c < hi), c))
-                ).alias(f"seg_{i}")
-            )
-    second = df.agg(*aggs).collect()[0]
-
-    out: dict[float, float | None] = {}
-    fallback_ps: list[float] = []
-    for i, p in enumerate(ps):
-        lo, hi = brackets[i]
-        k = (n - 1) * p
-        lo_rank, hi_rank = int(k // 1), -int(-k // 1)
-        below = second[f"below_{i}"]
-        eq_lo = second[f"eqlo_{i}"]
-        interior = list(second[f"seg_{i}"]) if hi > lo else []
-        eq_hi = second[f"eqhi_{i}"] if hi > lo else 0
-        # Rank layout: ranks [below, below+eq_lo) hold lo; then the
-        # interior values; then eq_hi copies of hi.
-        values = [lo] * eq_lo + interior + [hi] * eq_hi
-
-        def at_rank(r: int):
-            idx = r - below
-            return values[idx] if 0 <= idx < len(values) else None
-
-        v_lo, v_hi = at_rank(lo_rank), at_rank(hi_rank)
-        if v_lo is not None and v_hi is not None:
-            out[p] = float(v_lo + (k - lo_rank) * (v_hi - v_lo))
-        else:  # outside the sketch guarantee — exact-agg fallback
-            fallback_ps.append(p)
-    if fallback_ps:
-        exact = df.agg(
-            F.percentile(
-                col, F.array(*[F.lit(p) for p in fallback_ps])
-            ).alias("q")
-        ).collect()[0]["q"]
-        for p, v in zip(fallback_ps, exact):
-            out[p] = float(v) if v is not None else None
-    return out
 
 
 def mad_robust(df: DataFrame, col: str) -> DataFrame:
@@ -286,17 +222,14 @@ def mad_robust(df: DataFrame, col: str) -> DataFrame:
     — the outlier-resistant alternative to mean/stddev for skewed
     distributions (A15's IQR cousin). One row: (median, mad).
 
-    r13 (the VERDICT r12 #10 class, extended): both medians now run
-    through :func:`exact_percentiles_bucket_select` instead of the
-    ``median()`` aggregate — this was one of the last two registered
-    plans whose memory grew with the column (a per-partition
-    full-value buffer, twice). The first median broadcasts back as a
-    1-row scalar exactly as before; the deviation column is a pure
-    projection the second bucket-select consumes lazily. Exact
-    linear-interpolated medians for oracle parity; memory is
-    shuffle-bounded at any scale.
+    Both medians are exact and unrounded until the end. The branch is
+    chosen once, on ``df``: the deviation frame's estimate is inflated
+    by its scalar crossJoin and says nothing new about the size. The
+    first median broadcasts back as a 1-row scalar; the deviation
+    column is a pure projection the second median consumes lazily.
     """
-    med = exact_percentiles_bucket_select(df, col, ps=(0.5,), dp=None)
+    median = _quantile_path(df, col)
+    med = median(df, col, (0.5,), dp=None)
     dev = (
         df.filter(F.col(col).isNotNull())
         .crossJoin(F.broadcast(med.select(F.col("p50").alias("__med"))))
@@ -305,7 +238,7 @@ def mad_robust(df: DataFrame, col: str) -> DataFrame:
             F.abs(F.col(col) - F.col("__med")).alias("__ad"),
         )
     )
-    madq = exact_percentiles_bucket_select(dev, "__ad", ps=(0.5,), dp=None)
+    madq = median(dev, "__ad", (0.5,), dp=None)
     return (
         med.select(_r(F.col("p50")).alias("median"))
         .crossJoin(
@@ -385,240 +318,53 @@ def anomaly_zscore(
     )
 
 
-def exact_percentiles_sortrank(
-    df: DataFrame, col: str, ps: tuple[float, ...],
-    num_partitions: int | None = None,
-) -> dict[float, float | None]:
-    """EXACT linear-interpolated percentiles via distributed sort-rank —
-    the fastest exact path measured (1.2–1.6 s vs 3.1 s agg / 2.3 s
-    bracket at sf0.1) and the one whose memory is shuffle-bounded at
-    100 TB (no full-column aggregation buffer, no sketch):
-
-    1. Range-shuffle the non-null column once and ``localCheckpoint`` the
-       partitioned frame — the checkpoint materializes ONE projected
-       column to executor-local storage (same footprint as the shuffle
-       files) and lets the two downstream jobs skip the
-       range-partitioner sample pass + shuffle instead of recomputing
-       them (the lazy single-query formulation re-executes both per
-       branch and benched 5× slower).
-    2. Per-partition row counts (metadata-sized collect: one long per
-       partition) → driver-side prefix sum gives each partition's global
-       rank offset and the total n.
-    3. The ≤ 2·len(ps) needed global ranks map to (partition, local
-       rank) pairs; a ``row_number`` window over ``pid`` filters
-       exactly those rows — a ≤ 2·len(ps)-row collect — and the driver
-       interpolates. NOTE the pid-window is NOT shuffle-free:
-       ``Window.partitionBy("pid")`` hash-partitions on pid, which does
-       not match the range partitioning, so job 3 pays one exchange of
-       the single projected column. That exchange is the same volume as
-       the original range shuffle (one numeric column), so it is a
-       constant-factor cost, not a scale hazard — but it IS a third
-       pass over the column, which is why the checkpoint in step 1
-       matters.
-
-    Same rank semantics as DuckDB ``quantile_cont`` / pandas
-    ``quantile``: value at fractional rank k=(n−1)·p interpolated
-    between floor/ceil ranks. NaN is MISSING here too (dropped with
-    NULL below) — direct callers get the same contract as the
-    :func:`percentiles` dispatcher and the prefix sibling, instead of
-    Spark's sort order placing NaN greatest (ADVICE r11 #2). Returns
-    {p: value}, None for an empty column.
-    """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    part = (
-        df.select(F.col(col).alias("v"))
-        .filter(F.col("v").isNotNull() & ~F.isnan(F.col("v").cast("double")))
-        .repartitionByRange(num_partitions, "v")
-        .localCheckpoint()
-    )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in part.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    n = sum(counts.values())
-    if n == 0:
-        return {p: None for p in ps}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    # needed global ranks (0-based) → (pid, 1-based local row_number)
-    ranks: set[int] = set()
-    for p in ps:
-        k = (n - 1) * p
-        ranks.add(int(k // 1))
-        ranks.add(-int(-k // 1))
-    need: dict[int, tuple[int, int]] = {}
-    for rank in ranks:
-        pid = max(q for q in offsets if offsets[q] <= rank)
-        need[rank] = (pid, rank - offsets[pid] + 1)
-    from pyspark.sql import Window
-
-    wloc = Window.partitionBy("pid").orderBy("v")
-    pred = F.lit(False)
-    for pid, rn in need.values():
-        pred = pred | ((F.col("pid") == pid) & (F.col("rn") == rn))
-    rows = (
-        part.withColumn("pid", F.spark_partition_id())
-        .withColumn("rn", F.row_number().over(wloc))
-        .filter(pred)
-        .collect()
-    )
-    by_loc = {(r["pid"], r["rn"]): r["v"] for r in rows}
-    out: dict[float, float | None] = {}
-    for p in ps:
-        k = (n - 1) * p
-        lo, hi = int(k // 1), -int(-k // 1)
-        v_lo, v_hi = by_loc[need[lo]], by_loc[need[hi]]
-        out[p] = float(v_lo + (k - lo) * (v_hi - v_lo))
-    return out
-
-
-def exact_percentiles_prefix(
-    df: DataFrame,
-    col: str,
-    ps: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99),
-    dp: int = ROUND_DP,
-) -> DataFrame:
-    """Exact linear-interpolated percentiles as ONE lazy plan — the r10
-    registered form, superseding :func:`exact_percentiles_sortrank`
-    for the driver query (VERDICT r9 #2/#3: the sort-rank form pays a
-    localCheckpoint materialization plus TWO driver round-trips —
-    partition-totals collect, offset re-plan — a fixed ~1.5–2 s of
-    job-scheduling latency that dominates its wall at every measured
-    SF, while its shuffle volume is identical to this plan's).
-
-    Plan: :func:`global_order_prefix` (rank=True) assigns every
-    non-null value its global sort rank with NO driver round-trip
-    (bucketed two-level prefix, one full-column shuffle keyed on
-    bucket — the same single-column volume the sort-rank form range-
-    shuffles); the row count joins in as a broadcast 1-row aggregate;
-    the needed ranks ``k_p = (n−1)·p`` select ≤ 2·|ps| rows in-plan;
-    a global aggregate over those picks v_lo/v_hi per cut point and
-    interpolates ``v_lo + (k−⌊k⌋)·(v_hi−v_lo)`` — the quantile_cont /
-    pandas formula, evaluated in double exactly as the oracle does.
-    Memory stays shuffle-bounded (never the percentile() aggregate's
-    full-column buffer); no collect, no re-plan, one action.
-
-    Returns the 1-row wide frame (p25 … p99 columns, ``dp``-rounded);
-    empty/all-null input yields one all-null row (the agg-method
-    contract).
-
-    NaN rows are excluded alongside nulls (r11, ADVICE r10 #4): the
-    engine contract is pandas ``quantile`` skipna semantics — the
-    reference computes these numbers in pandas, which treats NaN as
-    missing. (Spark's raw ``percentile()`` aggregate does NOT: it
-    counts NaN in n and sorts it greatest, so a high cut point
-    returns NaN — which is why :func:`percentiles` filters NaN for
-    every method at the dispatcher and this operator also filters
-    for direct callers.)
-    """
-    vals = (
-        df.select(F.col(col).cast("double").alias("v"))
-        .filter(F.col("v").isNotNull() & ~F.isnan("v"))
-    )
-    ranked = global_order_prefix(vals, "v", rank=True)
-    cnt = vals.agg(F.count(F.lit(1)).alias("__n"))
-    k = lambda p: (F.col("__n") - 1) * F.lit(p)  # noqa: E731
-    pick = F.lit(False)
-    for p in ps:
-        pick = pick | (F.col("rk") - 1 == F.floor(k(p))) | (
-            F.col("rk") - 1 == F.ceil(k(p))
-        )
-    hits = ranked.crossJoin(F.broadcast(cnt)).filter(pick)
-    aggs = [F.max("__n").alias("__n")]
-    for i, p in enumerate(ps):
-        aggs.append(
-            F.max(F.when(F.col("rk") - 1 == F.floor(k(p)), F.col("v")))
-            .alias(f"__lo_{i}")
-        )
-        aggs.append(
-            F.max(F.when(F.col("rk") - 1 == F.ceil(k(p)), F.col("v")))
-            .alias(f"__hi_{i}")
-        )
-    out_cols = []
-    for i, p in enumerate(ps):
-        frac = k(p) - F.floor(k(p))
-        out_cols.append(
-            F.round(
-                F.col(f"__lo_{i}")
-                + frac * (F.col(f"__hi_{i}") - F.col(f"__lo_{i}")),
-                dp,
-            ).alias(f"p{int(p * 100)}")
-        )
-    return hits.groupBy().agg(*aggs).select(*out_cols)
-
-
 def exact_percentiles_bucket_select(
     df: DataFrame,
     col: str,
     ps: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99),
     dp: int | None = ROUND_DP,
-    n_buckets: int = 4096,
     keep_n: bool = False,
+    moments: dict[str, Column] | None = None,
+    n_buckets: int = 4096,
     extra_scalar_aggs: dict | None = None,
 ) -> DataFrame:
-    """Exact linear-interpolated percentiles as ONE lazy plan that
-    never ranks the full column — the r12 registered form, superseding
-    :func:`exact_percentiles_prefix` for the driver query.
-
-    The prefix form assigns EVERY row its global rank (a full
-    per-bucket window sort of the whole column) to then keep ≤ 2·|ps|
-    rows — at sf24 that full sort was the wall (57 s vs a 21 s oracle,
-    the corrected r12 trend). Selecting quantiles only needs exact
-    ranks INSIDE the buckets that contain the target ranks:
+    """Exact percentiles as ONE lazy plan that never ranks the full
+    column and never holds it in memory — the large-plan branch of
+    :func:`exact_quantiles`. Selecting quantiles only needs exact ranks
+    INSIDE the buckets that contain the target ranks:
 
     1. Pass 1 — 4096-bucket histogram: equal-width bucket id from the
        finite-masked 1-row min/max broadcast, ONE hash agg keyed on
        bucket (map-side combine collapses each task to ≤4096 longs).
-    2. In-plan target selection: exclusive bucket offsets via the
-       single-partition window over the ≤4096-row bucket-total frame
-       (the audited metadata-scale window), total n from the same
-       frame; a bucket is a TARGET iff [offset, offset+count) contains
-       ⌊k_p⌋ or ⌈k_p⌉ for some cut point k_p = (n−1)·p — ≤ 2·|ps|
-       buckets, broadcast.
+    2. In-plan target selection: exclusive bucket offsets and the
+       total n from ONE single-partition window over the ≤4096-row
+       bucket-total frame (the audited metadata-scale window); a bucket
+       is a TARGET iff [offset, offset+count) contains ⌊k_p⌋ or ⌈k_p⌉
+       for some cut point k_p = (n−1)·p — ≤ 2·|ps| buckets, broadcast.
     3. Pass 2 — candidates = rows in target buckets (broadcast hash
-       semi-join prunes ~99.7 % of rows before any shuffle); a
-       per-bucket window sorts ONLY the candidates (offset +
-       row_number − 1 = exact 0-based global rank); the usual pick /
-       interpolate tail runs on ≤ 2·|ps| rows.
+       join prunes ~99.7 % of rows before any shuffle); a per-bucket
+       window sorts ONLY the candidates (offset + row_number − 1 =
+       exact 0-based global rank); the pick / interpolate tail runs on
+       ≤ 2·|ps| rows.
 
-    Two single-column scans replace the full-column shuffle + sort +
-    lazy checkpoint: shuffle volume drops from n rows to
-    (4096 bucket partials + n/4096·2·|ps| candidates). Degenerate
-    cases degrade, never break: hi == lo (or a point-mass bucket
-    holding a target rank) makes that bucket's whole mass the
-    candidate set — the one-window fallback the prefix form also has.
-    NULL order values cannot reach a target bucket (filtered with NaN
-    up front; pandas skipna contract, same as every sibling); ±Inf
-    pin to the edge buckets exactly as in :func:`global_order_prefix`
-    and sort correctly inside them.
+    Shuffle volume is 4096 bucket partials + n/4096·2·|ps| candidates.
+    Degenerate cases degrade, never break: hi == lo (or a point-mass
+    bucket holding a target rank) makes that bucket's whole mass the
+    candidate set. NULL and NaN are filtered up front (pandas skipna);
+    ±Inf pin to the edge buckets as in :func:`global_order_prefix` and
+    sort correctly inside them.
 
-    Returns the 1-row wide frame (p25 … p99, ``dp``-rounded);
-    empty/all-null input yields one all-null row (the agg-method
-    contract).
+    Returns the same row as :func:`exact_percentiles_native`: ``p25 …``
+    (``dp``-rounded, raw when ``dp`` is None), ``n`` when ``keep_n``
+    (0 on empty input), then the ``moments``, which are computed in a
+    separate aggregate over ``df`` and joined as a 1-row broadcast.
 
-    ``extra_scalar_aggs`` (r16): scalar aggregate Columns over the
-    internal value column ``v`` (the ``col`` cast to double, NULL/NaN
-    filtered), e.g. ``{"mean": F.round(F.avg("v"), 6)}``. They are
-    computed INSIDE the pass-1 limits aggregate — zero additional
-    column scans — ride the existing 1-row broadcast through the
-    candidate path (column pruning keeps them out of the histogram
-    branch), and come back as columns of the output row. This is how
-    percentiles_approx fuses its moments + sketch pass with the exact
-    bracket: one fewer full-column aggregate pass and no scalar
-    crossJoin (the local wall is job-chain-floor-dominated and
-    measures flat; the pass elimination is the at-scale win — a
-    column scan saved is a column scan saved at 100 TB). On EMPTY
-    input these columns are NULL
-    (there are no candidate rows to carry the broadcast), so a
-    count-like extra reads NULL, not 0 — callers needing oracle
-    count() parity wrap with coalesce.
+    ``extra_scalar_aggs``: scalar aggregate Columns over the internal
+    value column ``v`` (``col`` as double, NULL/NaN filtered), computed
+    inside the pass-1 limits aggregate — no extra column scan — and
+    returned as output columns after the quantiles. On EMPTY input
+    they are NULL (no candidate row carries the broadcast), so a
+    count-like extra reads NULL, not 0.
     """
     extra_scalar_aggs = extra_scalar_aggs or {}
     vals = (
@@ -648,15 +394,8 @@ def exact_percentiles_bucket_select(
     bt = binned.groupBy("__bkt").agg(
         F.count(F.lit(1)).cast("long").alias("__bn")
     )
+    # offsets and total over the same partition/order spec: one WindowExec
     wb = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    # r16 (optimization round, guide §2.4): total n comes from the SAME
-    # ≤4096-row single-partition window frame as the exclusive offsets
-    # (unbounded-following frame, identical partition/order spec → ONE
-    # WindowExec), replacing the r12 form's separate sum-aggregate +
-    # broadcast crossJoin — that branch re-read bt's exchange, ran a
-    # two-stage aggregate and a BroadcastExchange + BNLJ of its own:
-    # two extra sequential AQE stages per percentile call, pure
-    # job-chain floor at every scale.
     wn = Window.orderBy("__bkt").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -705,27 +444,18 @@ def exact_percentiles_bucket_select(
         aggs.append(F.max(F.col(f"__x_{xk}")).alias(f"__xx_{xk}"))
     out_cols = []
     for i, p in enumerate(ps):
-        frac = k(p) - F.floor(k(p))
-        interp = F.col(f"__lo_{i}") + frac * (
-            F.col(f"__hi_{i}") - F.col(f"__lo_{i}")
-        )
-        # dp=None -> emit the raw interpolated double (consumers that
-        # derive further arithmetic from the quantile, e.g.
-        # iqr_outliers' fences, must not round early)
-        out_cols.append(
-            (interp if dp is None else F.round(interp, dp))
-            .alias(f"p{int(p * 100)}")
-        )
+        q = _interpolate(F.col(f"__lo_{i}"), F.col(f"__hi_{i}"), k(p))
+        out_cols.append((q if dp is None else F.round(q, dp)).alias(_pname(p)))
     if keep_n:
-        # expose the total the bucket histogram already summed —
-        # consumers that also need count(col) (iqr_outliers' pct
-        # denominator) save a full extra column scan. NOTE this n
-        # counts non-null, non-NaN values (the quantile population),
-        # not bare count(col).
-        out_cols.append(F.col("__n").alias("n"))
+        out_cols.append(F.coalesce(F.col("__n"), F.lit(0)).alias("n"))
     for xk in extra_scalar_aggs:
         out_cols.append(F.col(f"__xx_{xk}").alias(xk))
-    return hits.groupBy().agg(*aggs).select(*out_cols)
+    q = hits.groupBy().agg(*aggs).select(*out_cols)
+    if not moments:
+        return q
+    mom = df.agg(*[c.alias(name) for name, c in moments.items()])
+    # both sides are 1-row frames: the crossJoin is a scalar broadcast
+    return mom.crossJoin(F.broadcast(q)).select(*q.columns, *moments)
 
 
 def global_order_prefix(
@@ -745,13 +475,12 @@ def global_order_prefix(
     ``weight_col`` is None) and, with ``rank=True``, ``rk`` (global
     ``row_number`` ordered by ``(order_col, *tie_cols)``).
 
-    This supersedes the sort-rank partition-offset pattern
-    (:func:`exact_percentiles_sortrank`'s shape) for the prefix-sum
-    consumers (``roc_auc``, ``gini_concentration``): that pattern pays
-    a ``localCheckpoint`` materialization plus TWO driver round-trips
-    (partition totals collect, offset re-plan) per run — a fixed
-    ~1.5–2 s of job-scheduling latency that the r7 sf2 probe showed
-    dominating the wall. Here the offsets stay in-plan:
+    This replaces the sort-rank partition-offset pattern (range
+    shuffle + ``localCheckpoint`` + per-partition counts collected to
+    the driver) for the prefix-sum consumers (``roc_auc``,
+    ``gini_concentration``): that pattern pays TWO driver round-trips
+    per run, a fixed ~1.5–2 s of job-scheduling latency at sf2. Here
+    the offsets stay in-plan:
 
     1. ONE 1-row min/max aggregate, broadcast, buckets every row into
        ``n_buckets`` equal-width bins — ``floor`` of a monotone
@@ -882,14 +611,11 @@ def equidepth_histogram_prefix(
     df: DataFrame, col: str, k: int, tiebreak: str, dp: int = 2,
 ) -> DataFrame:
     """Equi-DEPTH histogram (k bins of ~equal row count) as ONE lazy
-    plan — the r11 registered form, superseding
-    :func:`operators.windows.equidepth_histogram` for the driver query
-    exactly as :func:`exact_percentiles_prefix` superseded the
-    sort-rank percentile form (VERDICT r10 #3: the sortrank shape pays
-    a per-partition-counts collect plus an offset re-plan — two driver
-    round-trips of fixed job-scheduling latency that dominated its
-    wall at every measured SF, 11.5× vs the oracle at sf2 — while its
-    shuffle volume is identical to this plan's).
+    plan, the registered form. It replaces
+    :func:`operators.windows.equidepth_histogram`'s sort-rank shape,
+    whose per-partition-counts collect and offset re-plan are two
+    driver round-trips of fixed latency (11.5× the oracle at sf2) for
+    the same shuffle volume as this plan.
 
     Plan: :func:`global_order_prefix` (rank=True) assigns every row
     its exact global ``(col, tiebreak)`` sort rank with no driver
@@ -994,23 +720,14 @@ def iqr_outliers(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     Reference: nb:cell11-12. Quantile pass then a scalar-broadcast
     filter+agg — no per-row Python.
 
-    r13 (VERDICT r12 #10): the exact Q1/Q3 come from
-    :func:`exact_percentiles_bucket_select` instead of the
-    ``percentile()`` aggregate, removing this operator's per-partition
-    full-value buffer (the same 100 TB OOM hazard ``percentiles``/
-    ``filter_quantile`` shed in r12 and ``describe_stats`` sheds this
-    round). The unrounded quantiles feed the ±1.5·IQR bounds so the
-    fence arithmetic is bit-identical to the oracle's
-    quantile_cont-derived bounds; ``approx=True`` keeps the one-pass
-    ``percentile_approx`` sketch.
-
-    r14 (ADVICE r13 #1): the outlier filter excludes NaN on float
-    columns — Spark's total ordering places NaN above every double, so
-    ``c > hi`` was true for NaN rows while the keep_n denominator (per
-    the r11 NaN-as-missing contract, matching pandas) excludes them;
-    the numerator now describes the same NaN-free population as the
-    denominator, and the approx path's ``total`` is aligned to the
-    same contract.
+    Exact Q1/Q3 and the pct denominator come from one
+    :func:`exact_quantiles` call (``keep_n``), unrounded, so the
+    ±1.5·IQR fences are computed from the same doubles as the oracle's
+    quantile_cont-derived bounds; ``approx=True`` uses the one-pass
+    ``percentile_approx`` sketch. NaN is missing throughout: it is
+    neither in the quartiles, nor in the denominator, nor counted as an
+    outlier (Spark orders NaN above every double, so ``c > hi`` alone
+    would count it).
     """
     c = F.col(col)
     is_float = df.schema[col].dataType.typeName() in ("float", "double")
@@ -1029,15 +746,8 @@ def iqr_outliers(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
             "total",
         )
     else:
-        # keep_n fuses the pct denominator into the histogram pass the
-        # quantiles already make (one column scan saved). total is
-        # therefore the NaN-free non-null population — equal to
-        # count(col) except on NaN-bearing columns, where the NaN-as-
-        # missing percentile contract (r11) extends to the pct
-        # denominator so numerator and denominator describe the same
-        # population.
-        qq = exact_percentiles_bucket_select(
-            df, col, ps=(0.25, 0.75), dp=None, keep_n=True
+        qq = exact_quantiles(
+            df, col, (0.25, 0.75), dp=None, keep_n=True
         ).select(
             F.col("p25").alias("q1"),
             F.col("p75").alias("q3"),
@@ -1339,9 +1049,8 @@ def skyline_2d(
        to distinct-key cardinality in one shuffle.
     2. A point is then on the skyline iff the running max of
        ``max_col`` over strictly-smaller ``min_col`` is below its own.
-       That cumulative max is computed DISTRIBUTED, the
-       sort-rank-percentile pattern (:func:`exact_percentiles_sortrank`):
-       range-shuffle on min_col + localCheckpoint, per-partition maxes
+       That cumulative max is computed DISTRIBUTED, the sort-rank
+       pattern: range-shuffle on min_col + localCheckpoint, per-partition maxes
        collected (one row per partition — metadata, not data),
        driver-side exclusive prefix max, folded back per partition via
        a pid CASE literal over an intra-partition window. No global

@@ -175,21 +175,16 @@ def filter_notnull(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_extendedprice <= (
       SELECT quantile_cont(l_extendedprice, 0.95) FROM lineitem)
     """,
-    "P3 — quantile-threshold filter (nb:cell9:44-45): exact p95 via the "
-    "r12 bucket-select plan (operators/stats.py:"
-    "exact_percentiles_bucket_select — bucket histogram, in-plan target "
-    "bucket, exact sort of ~0.3% of rows), then scalar-broadcast "
-    "filter. Replaces the percentile() aggregate threshold, whose "
-    "per-partition full-value buffer was this query's documented "
-    "100 TB OOM risk; the swap keeps the threshold EXACT (6-dp "
-    "rounding cannot move a comparison against 2-dp prices) and stays "
-    "one lazy action.",
+    "P3 — quantile-threshold filter (nb:cell9:44-45): exact p95 from "
+    "stats.exact_quantiles (native percentile aggregate when the "
+    "column's plan estimate is small, bucket-select otherwise; same "
+    "value either way), then a 1-row broadcast filter. The threshold "
+    "is exact: 6-dp rounding cannot move a comparison against 2-dp "
+    "prices.",
 )
 def filter_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    thresh = stats.exact_percentiles_bucket_select(
-        li, "l_extendedprice", ps=(0.95,)
-    )
+    thresh = stats.exact_quantiles(li, "l_extendedprice", (0.95,))
     return (
         li.crossJoin(F.broadcast(thresh))
         .filter(F.col("l_extendedprice") <= F.col("p95"))
@@ -360,12 +355,13 @@ def groupby_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(max(l_quantity), 6) AS max
     FROM lineitem
     """,
-    "A5 — df.describe() block (nb:cell7:30-35); stddev is sample (ddof=1).",
+    "A5 — df.describe() block (nb:cell7:30-35); stddev is sample (ddof=1). "
+    "The moments and the exact quartiles come from one "
+    "stats.exact_quantiles call: a single fused aggregate when the "
+    "column's plan estimate is small, bucket-select joined to the "
+    "moments otherwise.",
 )
 def describe_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Delegates to the one-pass operator (single array-percentile buffer;
-    # see stats._pcts). The oracle's mean uses the decimal-sum/count form
-    # which equals round(avg) at 6 dp for this column's value domain.
     return stats.describe_stats(load_table(spark, sf_dir, "lineitem"), "l_quantity")
 
 
@@ -381,28 +377,26 @@ def describe_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
     "A6 — scalar stats family: mean/median/min/max/sample-std "
-    "(nb:cell9:30-34). r13: the median comes from the bucket-select "
-    "plan (stats.exact_percentiles_bucket_select) instead of the "
-    "median() aggregate's per-partition full-value buffer — the same "
-    "OOM-hazard removal as percentiles/describe_stats/outliers_iqr; "
-    "the moments stay one single-pass agg, joined by a 1-row scalar "
-    "broadcast.",
+    "(nb:cell9:30-34). The moments ride the exact median's "
+    "stats.exact_quantiles call: one fused aggregate when the column's "
+    "plan estimate is small, bucket-select joined to the moments "
+    "otherwise.",
 )
 def scalar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    moments = o.agg(
-        F.round(dsum("o_totalprice") / F.count("o_totalprice"), 6).alias(
-            "mean_price"
+    moments = {
+        "mean_price": F.round(
+            dsum("o_totalprice") / F.count("o_totalprice"), 6
         ),
-        F.round(F.min("o_totalprice"), 6).alias("min_price"),
-        F.round(F.max("o_totalprice"), 6).alias("max_price"),
-        F.round(F.stddev_samp("o_totalprice"), 4).alias("std_price"),
-    )
-    med = stats.exact_percentiles_bucket_select(
-        o, "o_totalprice", ps=(0.5,)
-    ).select(F.col("p50").alias("median_price"))
-    return moments.crossJoin(F.broadcast(med)).select(
-        "mean_price", "median_price", "min_price", "max_price", "std_price"
+        "min_price": F.round(F.min("o_totalprice"), 6),
+        "max_price": F.round(F.max("o_totalprice"), 6),
+        "std_price": F.round(F.stddev_samp("o_totalprice"), 4),
+    }
+    return stats.exact_quantiles(
+        o, "o_totalprice", (0.5,), moments=moments
+    ).select(
+        "mean_price", F.col("p50").alias("median_price"),
+        "min_price", "max_price", "std_price",
     )
 
 
@@ -417,24 +411,15 @@ def scalar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(quantile_cont(l_extendedprice, 0.99), 6) AS p99
     FROM lineitem
     """,
-    "A7 — exact percentiles at the reference's cut points (nb:cell9:37-41); "
+    "A7 — exact percentiles at the reference's cut points (nb:cell9:37-41) "
+    "from stats.exact_quantiles: one native percentile aggregate when the "
+    "column's plan estimate is small, bucket-select (memory bounded at "
+    "any size) otherwise; the answer is the same either way. "
     "approx_percentile is the documented 100 TB swap (SURVEY.md §4.3).",
 )
 def percentiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # method="bucketselect" (r12): ONE lazy action, zero driver
-    # round-trips, and — unlike the r10 "prefix" form it replaces —
-    # NEVER ranks the full column: a 4096-bucket histogram selects the
-    # <= 2|ps| buckets containing the target ranks in-plan, and only
-    # those buckets' rows (~0.3% of the column) are sorted. The
-    # corrected r12 trend showed the prefix form's full-column
-    # window sort was a 2.7-3x constant factor at sf24+ (57s vs a 21s
-    # oracle at sf24). Memory stays shuffle-bounded at 100 TB (never
-    # the percentile() aggregate's full-column buffer). agg stays the
-    # lazy composable default; prefix/sortrank/bracket remain as API
-    # alternatives.
     return stats.percentiles(
-        load_table(spark, sf_dir, "lineitem"), "l_extendedprice",
-        method="bucketselect",
+        load_table(spark, sf_dir, "lineitem"), "l_extendedprice"
     )
 
 
@@ -572,7 +557,9 @@ def corr_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_totalprice < lo OR o_totalprice > hi
     """,
     "A15 — IQR outlier detection summary (nb:cell11-12): Q1/Q3 → ±1.5·IQR "
-    "bounds → count/%/min/max.",
+    "bounds → count/%/min/max. Q1/Q3 and the row count come from one "
+    "stats.exact_quantiles call (native aggregate for small plan "
+    "estimates, bucket-select otherwise), then a 1-row broadcast filter.",
 )
 def outliers_iqr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.iqr_outliers(load_table(spark, sf_dir, "orders"), "o_totalprice")

@@ -19,9 +19,12 @@ here and expected to be overridden (or AQE-coalesced) on a real cluster.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("etl_airbnb_mex_spark")
 
 #: Runtime SQL confs required for oracle parity (DuckDB / pandas semantics).
 PARITY_CONF: dict[str, str] = {
@@ -79,15 +82,24 @@ def shj_local_map_threshold(
 
 
 def ensure_parity_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime parity confs to an existing session (idempotent)."""
+    """Apply runtime parity confs to an existing session (idempotent).
+
+    A conf that cannot be set is logged as a warning naming the key; it
+    is harmless only if the session already holds the parity value (a
+    static conf set at build time, say). If the value read back differs
+    from the parity value, queries would give different answers, so
+    this raises instead of running on.
+    """
     for key, value in PARITY_CONF.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            # A conf may be non-runtime-settable on some builds; parity
-            # queries that depend on it use try_cast / explicit formats
-            # as a second line of defense.
-            pass
+        except Exception as exc:
+            log.warning("parity conf %s=%s not set: %s", key, value, exc)
+        actual = spark.conf.get(key, None)
+        if actual != value:
+            raise RuntimeError(
+                f"parity conf {key} is {actual!r}, expected {value!r}"
+            )
     return spark
 
 

@@ -52,7 +52,7 @@ def main() -> None:
             out.append(
                 "(driver-composed result — a multi-pass algorithm ran "
                 "eagerly; see the operator's docstring for its passes, "
-                "e.g. operators/stats.exact_percentiles_bracket)"
+                "e.g. operators/stats.skyline_2d)"
             )
         out.append("```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(

@@ -8,7 +8,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -946,98 +946,6 @@ def test_lsh_rejects_remainder_planes(spark, sf_dir):
         lsh_table_signatures(F.col("x"), [[1.0] * 64] * 3, 2)
 
 
-def test_bracket_percentiles_equal_exact_agg(spark, sf_dir):
-    """The two-phase bracket algorithm must equal the exact percentile
-    aggregate bit-for-bit on real data and on adversarial shapes
-    (duplicates, skew, tiny n)."""
-    from etl_airbnb_mex_spark.operators.stats import (
-        exact_percentiles_bracket,
-    )
-
-    ps = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99)
-    cases = [
-        load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_extendedprice").alias("x")
-        ),
-        # heavy duplicates + skew: 90% zeros, long tail
-        spark.range(2000).select(
-            F.when(F.col("id") % 10 != 0, 0.0)
-            .otherwise(F.col("id").cast("double")).alias("x")
-        ),
-        # tiny n around the rank-arithmetic edges
-        spark.range(3).select(F.col("id").cast("double").alias("x")),
-    ]
-    for df in cases:
-        truth = df.agg(
-            F.percentile("x", F.array(*[F.lit(p) for p in ps]))
-        ).collect()[0][0]
-        got = exact_percentiles_bracket(df, "x", ps)
-        for p, t in zip(ps, truth):
-            assert got[p] == pytest.approx(t, abs=1e-9), (p, got[p], t)
-
-
-def test_sortrank_percentiles_equal_exact_agg(spark, sf_dir):
-    """The distributed sort-rank algorithm (the registered driver path)
-    must equal the exact percentile aggregate bit-for-bit on real data
-    and adversarial shapes: duplicates/skew (all mass in few range
-    partitions), tiny n (ranks at partition edges), single value,
-    empty column, and NULLs interleaved."""
-    from etl_airbnb_mex_spark.operators.stats import (
-        exact_percentiles_sortrank,
-    )
-
-    ps = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99)
-    cases = [
-        load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_extendedprice").alias("x")
-        ),
-        spark.range(2000).select(
-            F.when(F.col("id") % 10 != 0, 0.0)
-            .otherwise(F.col("id").cast("double")).alias("x")
-        ),
-        spark.range(3).select(F.col("id").cast("double").alias("x")),
-        spark.range(1).select(F.lit(42.0).alias("x")),
-        # NULLs interleaved — must be excluded from ranks like the agg
-        spark.range(100).select(
-            F.when(F.col("id") % 3 == 0, None)
-            .otherwise(F.col("id").cast("double")).alias("x")
-        ),
-    ]
-    for df in cases:
-        truth = df.agg(
-            F.percentile("x", F.array(*[F.lit(p) for p in ps]))
-        ).collect()[0][0]
-        got = exact_percentiles_sortrank(df, "x", ps)
-        for p, t in zip(ps, truth):
-            assert got[p] == pytest.approx(t, abs=1e-9), (p, got[p], t)
-    # empty column → all None
-    empty = spark.range(5).select(F.lit(None).cast("double").alias("x"))
-    assert all(
-        v is None for v in exact_percentiles_sortrank(empty, "x", ps).values()
-    )
-
-
-def test_bracket_percentiles_ties_do_not_collect_column(spark):
-    """Regression (review finding): a bracket landing on a 90%-duplicated
-    value must count the tied mass, not collect it — values are exact
-    AND the collected interior stays rank-bounded."""
-    from etl_airbnb_mex_spark.operators.stats import (
-        exact_percentiles_bracket,
-    )
-
-    ps = (0.25, 0.5, 0.75, 0.99)
-    df = spark.range(200_000).select(
-        F.when(F.col("id") % 10 != 0, 0.0)
-        .otherwise(F.col("id").cast("double")).alias("x")
-    )
-    truth = df.agg(
-        F.percentile("x", F.array(*[F.lit(p) for p in ps]))
-    ).collect()[0][0]
-    got = exact_percentiles_bracket(df, "x", ps)
-    for p, t in zip(ps, truth):
-        assert got[p] == pytest.approx(t, abs=1e-9), (p, got[p], t)
-
-
 @given(
     value=st.one_of(
         st.none(),
@@ -1129,14 +1037,6 @@ def test_split_by_hash_safe_for_huge_and_negative_keys(spark):
         return "train" if b < 80 else ("val" if b < 90 else "test")
 
     assert out == {k: ref_split(ref_bucket(k)) for k in keys}
-
-
-def test_percentiles_rejects_bracket_plus_approx(spark):
-    from etl_airbnb_mex_spark.operators.stats import percentiles
-
-    df = spark.range(10).select(F.col("id").cast("double").alias("v"))
-    with pytest.raises(ValueError, match="contradictory"):
-        percentiles(df, "v", method="bracket", approx=True)
 
 
 def test_pii_scrub_redacts_all_and_only_pii(spark):
@@ -1640,13 +1540,14 @@ def test_equidepth_prefix_matches_sortrank_form(spark):
 
 
 def test_percentiles_nan_is_missing_on_every_method(spark):
-    """ADVICE r10 #4 + review r11: the engine contract is pandas
-    skipna — NaN neither counts in n nor ranks last, on EVERY method.
-    Spark's raw percentile() aggregate violates this by itself
-    (counts NaN, sorts it greatest → p99 = NaN), so the dispatcher
-    must filter; agg and prefix must agree on NaN-bearing data."""
+    """The engine contract is pandas skipna — NaN neither counts in n
+    nor ranks last — on both exact branches, the dispatcher and the
+    sketch. Spark's raw percentile() aggregate violates this by itself
+    (counts NaN, sorts it greatest → p99 = NaN), so every path masks
+    NaN first."""
     from etl_airbnb_mex_spark.operators.stats import (
-        exact_percentiles_prefix,
+        exact_percentiles_bucket_select,
+        exact_percentiles_native,
         percentiles,
     )
 
@@ -1656,18 +1557,20 @@ def test_percentiles_nan_is_missing_on_every_method(spark):
         + [(None,)] * 3,
         "v double",
     )
+    ps = (0.5, 0.99)
     # finite values 1..100: p50 = 50.5, p99 = 99.01 (quantile_cont)
     for label, frame in (
-        ("prefix-direct", exact_percentiles_prefix(df, "v", ps=(0.5, 0.99))),
-        ("agg", percentiles(df, "v", ps=(0.5, 0.99), method="agg")),
-        ("prefix", percentiles(df, "v", ps=(0.5, 0.99), method="prefix")),
+        ("native", exact_percentiles_native(df, "v", ps)),
+        ("bucketselect", exact_percentiles_bucket_select(df, "v", ps)),
+        ("dispatch", percentiles(df, "v", ps)),
     ):
         row = frame.collect()[0]
         assert row["p50"] == 50.5, (label, row)
         assert abs(row["p99"] - 99.01) < 1e-9, (label, row)
-    # sortrank path agrees too (eager, returns the same wide frame)
-    row = percentiles(df, "v", ps=(0.5, 0.99), method="sortrank").collect()[0]
-    assert row["p50"] == 50.5 and abs(row["p99"] - 99.01) < 1e-9
+    # the sketch skips NaN too (its values are approximate: p99 stays
+    # finite and inside the data)
+    row = percentiles(df, "v", ps, approx=True).collect()[0]
+    assert 1.0 <= row["p99"] <= 100.0, row
 
 
 def test_iqr_outliers_nan_excluded_from_both_sides(spark):
@@ -2559,42 +2462,16 @@ def test_global_order_prefix_degenerate_and_guard(spark):
         global_order_prefix(df, "v", weight_col="v", rank=True)
 
 
-def test_exact_percentiles_prefix_matches_agg(spark):
-    """The r10 lazy prefix path must reproduce the percentile()
-    aggregate (and therefore quantile_cont/pandas interpolation)
-    exactly — duplicates, odd/even counts, nulls, and single-row
-    inputs included."""
-    from etl_airbnb_mex_spark.operators.stats import percentiles
-
-    rows = [Row(v=float(x)) for x in
-            [5, 1, 9, 1, 7, 3, 3, 8, 2, 6, 4, 4, 4, 10]]
-    rows += [Row(v=None), Row(v=None)]
-    df = spark.createDataFrame(rows, "v double")
-    ps = (0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
-    got = percentiles(df, "v", ps=ps, method="prefix").collect()[0]
-    want = percentiles(df, "v", ps=ps, method="agg").collect()[0]
-    assert got.asDict() == want.asDict()
-
-    one = spark.createDataFrame([Row(v=42.0)], "v double")
-    got1 = percentiles(one, "v", ps=ps, method="prefix").collect()[0]
-    assert all(got1[f"p{int(p * 100)}"] == 42.0 for p in ps)
-
-    # approx=True is contradictory on the exact path
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        percentiles(df, "v", method="prefix", approx=True)
-
-
 def test_exact_percentiles_bucket_select_matches_agg(spark):
-    """The r12 registered path (bucket histogram -> in-plan target
-    buckets -> sort candidates only) must reproduce the percentile()
-    aggregate exactly across the edge zoo: duplicates, odd/even
-    counts, nulls, NaN-as-missing, +/-Inf pinned to edge buckets,
-    all-equal columns (degenerate hi==lo -> one-bucket fallback),
-    single row, and empty input."""
+    """The large-plan branch (bucket histogram -> in-plan target
+    buckets -> sort candidates only) must reproduce the native
+    percentile() aggregate branch exactly across the edge zoo:
+    duplicates, odd/even counts, nulls, NaN-as-missing, +/-Inf pinned
+    to edge buckets, all-equal columns (degenerate hi==lo -> one-bucket
+    fallback), single row, and empty input."""
     from etl_airbnb_mex_spark.operators.stats import (
         exact_percentiles_bucket_select,
-        percentiles,
+        exact_percentiles_native,
     )
 
     ps = (0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
@@ -2602,13 +2479,12 @@ def test_exact_percentiles_bucket_select_matches_agg(spark):
             [5, 1, 9, 1, 7, 3, 3, 8, 2, 6, 4, 4, 4, 10]]
     rows += [Row(v=None), Row(v=None), Row(v=float("nan"))]
     df = spark.createDataFrame(rows, "v double")
-    got = percentiles(df, "v", ps=ps, method="bucketselect").collect()[0]
-    want = percentiles(df, "v", ps=ps, method="agg").collect()[0]
+    got = exact_percentiles_bucket_select(df, "v", ps).collect()[0]
+    want = exact_percentiles_native(df, "v", ps).collect()[0]
     assert got.asDict() == want.asDict()
 
     # +/-Inf pin to the edge buckets and sort exactly (quantile over
-    # [-inf, 1..8, inf]: p10 of 10 values = rank 0.9 -> interpolates
-    # off -inf; direct-call contract, NaN filtered internally)
+    # [-inf, 1..8, inf])
     inf = float("inf")
     df2 = spark.createDataFrame(
         [Row(v=-inf)] + [Row(v=float(x)) for x in range(1, 9)]
@@ -2626,13 +2502,125 @@ def test_exact_percentiles_bucket_select_matches_agg(spark):
     assert all(goteq[f"p{int(p*100)}"] == 7.0 for p in ps)
 
     one = spark.createDataFrame([Row(v=42.0)], "v double")
-    got1 = percentiles(one, "v", ps=ps, method="bucketselect").collect()[0]
-    assert all(got1[f"p{int(p * 100)}"] == 42.0 for p in ps)
+    for branch in (exact_percentiles_bucket_select, exact_percentiles_native):
+        got1 = branch(one, "v", ps).collect()[0]
+        assert all(got1[f"p{int(p * 100)}"] == 42.0 for p in ps), branch
 
+    # empty input: one all-NULL row, and keep_n reads 0 on both branches
     empty = spark.createDataFrame([], "v double")
-    got0 = exact_percentiles_bucket_select(empty, "v", ps=ps).collect()
-    assert len(got0) == 1 and all(x is None for x in got0[0])
+    for branch in (exact_percentiles_bucket_select, exact_percentiles_native):
+        got0 = branch(empty, "v", ps, keep_n=True).collect()
+        assert len(got0) == 1, branch
+        assert all(got0[0][f"p{int(p * 100)}"] is None for p in ps), branch
+        assert got0[0]["n"] == 0, branch
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        percentiles(df, "v", method="bucketselect", approx=True)
+
+def test_bucket_select_exact_hit_on_infinity(spark):
+    """A cut point whose rank lands exactly on -Inf (or between two
+    -Inf ranks, or between -Inf and a finite value) is -Inf, as in
+    DuckDB quantile_cont and Spark's percentile(). Interpolating as
+    ``lo + 0·(hi − lo)`` gave NaN there, because ``-inf − -inf`` is
+    NaN."""
+    from etl_airbnb_mex_spark.operators.stats import (
+        exact_percentiles_bucket_select,
+        exact_percentiles_native,
+    )
+
+    inf = float("inf")
+    df = spark.createDataFrame(
+        [(v,) for v in (-inf, -inf, 1.0, 2.0, 3.0, inf)], "v double"
+    )
+    ps = (0.2, 0.25, 0.5, 0.9)
+    want = {"p20": -inf, "p25": -inf, "p50": 1.5, "p90": inf}
+    for branch in (exact_percentiles_bucket_select, exact_percentiles_native):
+        assert branch(df, "v", ps).collect()[0].asDict() == want, branch
+
+
+_PS = (0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
+_INF = float("inf")
+_NAN = float("nan")
+#: Finite values are quarters: sums and interpolations stay exact in
+#: binary, so a 6-dp comparison never straddles a rounding boundary.
+_QUANTILE_VALUES = st.lists(
+    st.one_of(
+        st.integers(-4000, 4000).map(lambda i: i / 4),
+        st.sampled_from([0.0, 1.5, 2.25]),  # ties
+        st.sampled_from([None, _NAN, _INF, -_INF]),
+    ),
+    max_size=30,
+)
+
+
+def _same(a, b) -> bool:
+    if a is None or b is None:
+        return a is None and b is None
+    return a == b or (math.isnan(a) and math.isnan(b))
+
+
+def _same_row(got: dict, want: dict) -> bool:
+    return got.keys() == want.keys() and all(
+        _same(got[k], want[k]) for k in want
+    )
+
+
+@given(vals=_QUANTILE_VALUES)
+@example(vals=[])
+@example(vals=[2.5])
+@example(vals=[_NAN, None])
+@example(vals=[-_INF, -_INF, 1.0, 2.0, 3.0, _INF])
+@HSETTINGS
+def test_quantile_branches_match_duckdb(spark, vals):
+    """Both exact branches give the same row — quantiles and fused
+    moments — and the quantiles equal DuckDB quantile_cont over the
+    non-NaN values at 6 dp. describe_stats equals the oracle shape:
+    count includes NaN, the moments follow IEEE, the quartiles skip
+    NaN. DuckDB refuses stddev over non-finite input, so the oracle
+    spells out the IEEE result (NaN) for that case."""
+    import duckdb
+
+    from etl_airbnb_mex_spark.operators.stats import (
+        describe_stats,
+        exact_percentiles_bucket_select,
+        exact_percentiles_native,
+    )
+
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    moments = {"cnt": F.count("v"), "mx": F.max("v")}
+    native = exact_percentiles_native(df, "v", _PS, moments=moments)
+    bucket = exact_percentiles_bucket_select(df, "v", _PS, moments=moments)
+    got_native = native.collect()[0].asDict()
+    got_bucket = bucket.collect()[0].asDict()
+    assert _same_row(got_bucket, got_native), (got_bucket, got_native)
+
+    con = duckdb.connect()
+    # as text: the Python binding would turn NaN into NULL
+    con.execute(
+        "CREATE TABLE t AS SELECT CAST(unnest(?::VARCHAR[]) AS DOUBLE) AS v",
+        [[None if v is None else repr(v) for v in vals]],
+    )
+    q = lambda p: (  # noqa: E731
+        f"round(quantile_cont(v, {p}) FILTER (WHERE NOT isnan(v)), 6)"
+    )
+    names = [f"p{int(p * 100)}" for p in _PS] + ["cnt", "mx"]
+    row = con.execute(
+        f"SELECT {', '.join(q(p) for p in _PS)}, count(v), max(v) FROM t"
+    ).fetchone()
+    want = dict(zip(names, row))
+    assert _same_row(got_native, want), (got_native, want)
+
+    want_desc = con.execute(
+        f"""SELECT count(v) AS cnt, round(avg(v), 6) AS mean,
+                   CASE WHEN count(v) < 2 THEN NULL
+                        WHEN bool_or(NOT isfinite(v)) THEN 'nan'::DOUBLE
+                        ELSE round(stddev_samp(v) FILTER (WHERE isfinite(v)), 6)
+                   END AS std,
+                   round(min(v), 6) AS min, {q(0.25)} AS p25,
+                   {q(0.5)} AS p50, {q(0.75)} AS p75,
+                   round(max(v), 6) AS max
+            FROM t"""
+    ).fetchone()
+    got_desc = describe_stats(df, "v").collect()[0]
+    assert len(got_desc) == len(want_desc)
+    assert all(_same(g, w) for g, w in zip(got_desc, want_desc)), (
+        got_desc, want_desc,
+    )

@@ -528,3 +528,44 @@ def test_shj_threshold_formula_matches_shipped_conf():
         shj_local_map_threshold(0, 32)
     with pytest.raises(ValueError):
         shj_local_map_threshold(8 * gib, 32, hashmap_expansion=0.5)
+
+
+class _ReadOnlyConf:
+    """A session conf whose ``set`` always fails; ``get`` reads
+    ``values``."""
+
+    def __init__(self, values: dict[str, str]):
+        self.values = values
+
+    def set(self, key, value):
+        raise RuntimeError(f"cannot modify {key}")
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+
+class _FakeSession:
+    def __init__(self, values: dict[str, str]):
+        self.conf = _ReadOnlyConf(values)
+
+
+def test_ensure_parity_conf_logs_and_raises_on_conf_failure(caplog):
+    """A parity conf that cannot be set is logged with its key; when the
+    session does not already hold the parity value, it raises instead
+    of running queries under different semantics."""
+    import logging
+
+    from etl_airbnb_mex_spark.session import PARITY_CONF, ensure_parity_conf
+
+    held = _FakeSession(dict(PARITY_CONF))
+    with caplog.at_level(logging.WARNING, logger="etl_airbnb_mex_spark"):
+        assert ensure_parity_conf(held) is held
+    warned = [r for r in caplog.records if r.name == "etl_airbnb_mex_spark"]
+    assert len(warned) == len(PARITY_CONF)
+    for key, record in zip(PARITY_CONF, warned):
+        assert record.levelno == logging.WARNING
+        assert key in record.getMessage()
+
+    wrong = dict(PARITY_CONF, **{"spark.sql.ansi.enabled": "true"})
+    with pytest.raises(RuntimeError, match="spark.sql.ansi.enabled"):
+        ensure_parity_conf(_FakeSession(wrong))

@@ -244,23 +244,14 @@ def test_physical_plans_have_no_scale_killers(spark, sf_dir):
 #:   zipf_slope — rank over the top_k-bounded vocabulary slice.
 _GLOBAL_WINDOW_OK: set[str] = {
     "ks_drift_binned",  # CDF race over the AGGREGATED ≤200-row bin axis
-    # r12: bucket-select p95 threshold — the offsets window runs over
-    # the ≤4096-row bucket-total frame (per-window check below)
-    "filter_quantile",
-    "percentiles",  # r10 prefix path: bucket-total window (≤4096 rows)
-    # r16 (VERDICT r15 #1): percentiles_approx's exact bracket runs on
-    # the same bucket-select path — same ≤4096-row offsets window
+    # percentiles_approx's exact bracket calls bucket-select directly —
+    # its offsets window runs over the ≤4096-row bucket-total frame.
+    # The other exact-quantile queries (percentiles, describe_stats,
+    # scalar_stats, outliers_iqr, mad_robust, filter_quantile) plan the
+    # native percentile aggregate on these small tables; their
+    # bucket-select plan is guarded on a large input by
+    # test_large_input_quantiles_keep_bounded_bucket_window.
     "percentiles_approx",
-    # r13 (VERDICT r12 #10): describe_stats / outliers_iqr moved their
-    # exact quantiles off the percentile() aggregate onto the same
-    # bucket-select path — same ≤4096-row offsets window
-    "describe_stats",
-    "outliers_iqr",
-    # r13 extension of the same class: the last two registered GLOBAL
-    # percentile/median-buffer plans (scalar_stats' median, mad_robust's
-    # two chained medians) re-based on bucket-select
-    "scalar_stats",
-    "mad_robust",
     "flagship_topn_pct",
     "pct_of_total",
     "window_lag_delta",
@@ -324,25 +315,56 @@ _GLOBAL_WINDOW_OK: set[str] = {
 #: is allowlisted.
 _BOUNDED_AXIS_WINDOW_OK: dict[str, str] = {
     "roc_auc_exact": "__bkt",
-    # r12: bucket-select threshold (offsets window over the 4096-row
-    # bucket-total frame) replaced the percentile() aggregate's
-    # full-value buffer
-    "filter_quantile": "__bkt",
     "gini_concentration": "__bkt",
-    "percentiles": "__bkt",
     "histogram_equidepth": "__bkt",
     "roc_auc": "score",
-    # r13: the same bucket-select offsets window (VERDICT r12 #10)
-    "describe_stats": "__bkt",
-    "outliers_iqr": "__bkt",
-    "scalar_stats": "__bkt",
-    "mad_robust": "__bkt",
     # r16: total-fold window that sits DIRECTLY on its bounded grouped
     # aggregate ((source, lang) cell axis). woe_iv's fold compiles to
     # two CHAINED unpartitioned Windows (the IV sum reads the totals
     # window's output), so only the per-query allowlist can express it.
     "source_mix_report": "source",
 }
+
+
+def _unpartitioned_windows(df) -> list:
+    """Window nodes with an empty partitionSpec in ``df``'s optimized
+    logical plan."""
+    hits = []
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "Window":
+            if node.partitionSpec().isEmpty():
+                hits.append(node)
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.length()))
+    return hits
+
+
+def _assert_bounded_axis(name: str, windows: list, axis: str) -> None:
+    """Each unpartitioned window must sit DIRECTLY on an Aggregate whose
+    GROUPING LIST contains the bounding column (matched as a column
+    reference in the grouping clause — 'token#' — not a bare substring
+    an aggregate EXPRESSION could satisfy)."""
+    for node in windows:
+        child = node.child()
+        # column-pruning Projects between Window and Aggregate are
+        # plan noise, not a different input frame
+        while child.getClass().getSimpleName() in (
+            "Project", "SubqueryAlias",
+        ):
+            child = child.child()
+        kind = child.getClass().getSimpleName()
+        desc = child.toString()
+        # Aggregate [score#12L], [score#12L, sum(...)]: grouping
+        # list = the first [...] group
+        first_line = desc.split("\n")[0]
+        grouping = first_line.split("]")[0] if "[" in first_line else ""
+        assert kind == "Aggregate" and f"{axis}#" in grouping, (
+            f"{name}: unpartitioned Window over {kind} — only the "
+            f"bounded-axis prefix (Aggregate grouped by {axis}) is "
+            f"audited for this query; got: {desc[:200]}"
+        )
 
 
 def test_no_unaudited_single_partition_windows(spark, sf_dir):
@@ -354,22 +376,9 @@ def test_no_unaudited_single_partition_windows(spark, sf_dir):
     bucket-prefix queries, each window must be the bucket-total prefix
     itself). Asserting set-equality keeps the allowlist honest in both
     directions."""
-
-    def unpartitioned_windows(df) -> list:
-        hits = []
-        stack = [df._jdf.queryExecution().optimizedPlan()]
-        while stack:
-            node = stack.pop()
-            if node.getClass().getSimpleName() == "Window":
-                if node.partitionSpec().isEmpty():
-                    hits.append(node)
-            ch = node.children()
-            stack.extend(ch.apply(i) for i in range(ch.length()))
-        return hits
-
     flagged: dict[str, list] = {}
     for name, fn in all_queries().items():
-        hits = unpartitioned_windows(fn(spark, sf_dir))
+        hits = _unpartitioned_windows(fn(spark, sf_dir))
         if hits:
             flagged[name] = hits
     new = set(flagged) - _GLOBAL_WINDOW_OK
@@ -384,32 +393,35 @@ def test_no_unaudited_single_partition_windows(spark, sf_dir):
     )
     # Per-WINDOW check for the bounded-axis queries: the allowlist is
     # per-query, so without this a regression reintroducing a data-axis
-    # global window inside roc_auc/gini would still pass (ADVICE r8 #4;
-    # unified across __bkt/quantized axes in r12, review r12). The
-    # window must sit DIRECTLY on an Aggregate whose GROUPING LIST
-    # contains the bounding column (matched as a column reference in
-    # the grouping clause — 'token#' — not a bare substring an
-    # aggregate EXPRESSION could satisfy).
+    # global window inside roc_auc/gini would still pass.
     for name, axis in _BOUNDED_AXIS_WINDOW_OK.items():
-        for node in flagged.get(name, []):
-            child = node.child()
-            # column-pruning Projects between Window and Aggregate are
-            # plan noise, not a different input frame
-            while child.getClass().getSimpleName() in (
-                "Project", "SubqueryAlias",
-            ):
-                child = child.child()
-            kind = child.getClass().getSimpleName()
-            desc = child.toString()
-            # Aggregate [score#12L], [score#12L, sum(...)]: grouping
-            # list = the first [...] group
-            first_line = desc.split("\n")[0]
-            grouping = first_line.split("]")[0] if "[" in first_line else ""
-            assert kind == "Aggregate" and f"{axis}#" in grouping, (
-                f"{name}: unpartitioned Window over {kind} — only the "
-                f"bounded-axis prefix (Aggregate grouped by {axis}) is "
-                f"audited for this query; got: {desc[:200]}"
-            )
+        _assert_bounded_axis(name, flagged.get(name, []), axis)
+
+
+def test_large_input_quantiles_keep_bounded_bucket_window(spark):
+    """Above ``NATIVE_QUANTILE_MAX_BYTES`` the exact-quantile operators
+    plan bucket-select, whose only unpartitioned window is the bucket
+    offsets prefix over the ≤4096-row bucket-total frame. The registry
+    tables are too small to reach that branch, so a planned-only large
+    input guards it here."""
+    from pyspark.sql import functions as F
+
+    from etl_airbnb_mex_spark.operators import stats
+
+    big = spark.range(2_000_000).select(
+        (F.col("id") % 9973).cast("double").alias("v")
+    )
+    assert stats._estimated_bytes(big, "v") > stats.NATIVE_QUANTILE_MAX_BYTES
+    plans = {
+        "percentiles": stats.percentiles(big, "v"),
+        "describe_stats": stats.describe_stats(big, "v"),
+        "outliers_iqr": stats.iqr_outliers(big, "v"),
+        "mad_robust": stats.mad_robust(big, "v"),
+    }
+    for name, df in plans.items():
+        hits = _unpartitioned_windows(df)
+        assert hits, f"{name}: large input did not plan bucket-select"
+        _assert_bounded_axis(name, hits, "__bkt")
 
 
 #: Queries whose physical plan legitimately evaluates Python — every
