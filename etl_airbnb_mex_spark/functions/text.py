@@ -38,11 +38,6 @@ def title_case(col: Column | str) -> Column:
     return F.initcap(F.trim(_col(col)))
 
 
-def contains_ci(col: Column | str, needle: str) -> Column:
-    """F7 — case-insensitive substring containment (boolean)."""
-    return F.contains(F.lower(_col(col)), F.lit(needle.lower()))
-
-
 #: F13 lexicons (src/transformacion.py:356-359). 'terrible' and 'horrible'
 #: appear TWICE in the reference's negative list and therefore count twice
 #: per comment (SURVEY.md §7.4.7) — duplicates preserved deliberately.

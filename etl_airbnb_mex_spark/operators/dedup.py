@@ -1,4 +1,5 @@
-"""Deduplication operators (SURVEY.md §2.3 D1–D3, §2.11 near-dup family).
+"""Deduplication operators (SURVEY.md §2.3 D1, §2.11 near-dup family).
+The D2/D3 duplicate counts are ``plans.analytics.duplicados``.
 
 Scale notes: exact dedup is one hash shuffle on the dedup key; keep-first
 dedup uses a window (single shuffle, no global sort); MinHash-LSH near-dup
@@ -27,25 +28,6 @@ def dedup_keep_first(
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def dup_fullrow_count(df: DataFrame) -> DataFrame:
-    """D2 — count of fully-duplicated rows: count(*) - count(distinct *)
-    (nb:cell6:26-27)."""
-    total = df.count()
-    distinct = df.distinct().count()
-    return df.sparkSession.createDataFrame(
-        [(total - distinct,)], "dup_rows long"
-    )
-
-
-def dup_key_count(df: DataFrame, key: str) -> DataFrame:
-    """D3 — duplicate-key count: count(key) - count(distinct key)
-    (nb:cell6:29-31). At 100 TB scale swap countDistinct for
-    approx_count_distinct (single pass, no distinct shuffle)."""
-    return df.agg(
-        (F.count(key) - F.countDistinct(key)).alias("dup_keys")
     )
 
 

@@ -18,16 +18,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def fk_join(
-    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi join on a foreign key. Planner picks sort-merge or
-    shuffled-hash; AQE demotes to broadcast when the build side turns out
-    small at runtime."""
-    return fact.join(dim, fact[fact_key] == dim[dim_key], how)
-
-
 def broadcast_dim_join(
     fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str,
     how: str = "inner",

@@ -611,11 +611,10 @@ def equidepth_histogram_prefix(
     df: DataFrame, col: str, k: int, tiebreak: str, dp: int = 2,
 ) -> DataFrame:
     """Equi-DEPTH histogram (k bins of ~equal row count) as ONE lazy
-    plan, the registered form. It replaces
-    :func:`operators.windows.equidepth_histogram`'s sort-rank shape,
-    whose per-partition-counts collect and offset re-plan are two
-    driver round-trips of fixed latency (11.5× the oracle at sf2) for
-    the same shuffle volume as this plan.
+    plan, the registered form. A sort-rank shape that collects
+    per-partition counts and re-plans with offsets costs two driver
+    round-trips of fixed latency (11.5× the oracle at sf2) for the same
+    shuffle volume as this plan.
 
     Plan: :func:`global_order_prefix` (rank=True) assigns every row
     its exact global ``(col, tiebreak)`` sort rank with no driver
@@ -629,8 +628,8 @@ def equidepth_histogram_prefix(
     stays shuffle-bounded (the widest state is the 4096-long bucket
     prefix); no collect, no re-plan, one action.
 
-    Same bin semantics as the windows.py form: deterministic given a
-    unique ``tiebreak``, counts differ by ≤1 across bins. Rows with a
+    Bins are deterministic given a unique ``tiebreak``; counts differ
+    by ≤1 across bins. Rows with a
     null ``col`` rank first (Spark ascending order), matching a true
     global sort.
     """

@@ -90,60 +90,3 @@ def scd2_intervals(
             Window.partitionBy(key).orderBy(ts_col, tiebreak)
         ).alias("valid_to"),
     )
-
-
-def equidepth_histogram(
-    df: DataFrame, col: str, k: int, tiebreak: str,
-) -> DataFrame:
-    """Equi-DEPTH histogram (k bins of ~equal row count) via a
-    distributed exact global rank — the scale-safe alternative to
-    ``ntile() OVER (ORDER BY ...)``, whose single unbounded window
-    funnels the whole table through ONE task.
-
-    Plan: repartitionByRange on (col, tiebreak) gives a global sort
-    order across partitions; row_number within each range partition plus
-    driver-collected per-partition offsets (32 longs — rank metadata,
-    not data) yields the exact global rank with no single-task sort.
-    Bin assignment is ``floor((rank-1)·k/n)`` — deterministic given the
-    unique tiebreak, and expressible identically in ANSI SQL, which is
-    what the oracle checks.
-    """
-    d = df.select(col, tiebreak).repartitionByRange(
-        32, F.col(col), F.col(tiebreak)
-    ).withColumn("__pid", F.spark_partition_id())
-    part_counts = {
-        r["__pid"]: r["cnt"]
-        for r in d.groupBy("__pid").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).collect()
-    }
-    n = sum(part_counts.values())
-    offsets = {}
-    acc = 0
-    for pid in sorted(part_counts):
-        offsets[pid] = acc
-        acc += part_counts[pid]
-    off_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid in sorted(offsets)
-              for x in (pid, offsets[pid])]
-        ),
-        F.col("__pid"),
-    )
-    w = Window.partitionBy("__pid").orderBy(col, tiebreak)
-    ranked = d.withColumn(
-        "rank", F.row_number().over(w) + off_expr
-    )
-    return (
-        ranked.withColumn(
-            "bin",
-            (F.floor((F.col("rank") - 1) * k / F.lit(n)) + 1).cast("long"),
-        )
-        .groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.min(col), 2).alias("lo"),
-            F.round(F.max(col), 2).alias("hi"),
-        )
-        .orderBy("bin")
-    )

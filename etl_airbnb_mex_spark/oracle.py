@@ -190,22 +190,3 @@ def compare_query(
             )
             reasons.append("value mismatch: " + detail)
     return CompareResult(name, not reasons, len(s_rows), len(o_rows), reasons)
-
-
-def compare_all(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> list[CompareResult]:
-    _load()
-    con = duckdb_connection(sf_dir)
-    results = []
-    try:
-        for name in names or sorted(REGISTRY):
-            try:
-                results.append(compare_query(spark, sf_dir, name, con))
-            except Exception as exc:  # noqa: BLE001 — harness reports, not raises
-                results.append(
-                    CompareResult(name, False, -1, -1, [f"error: {exc!r}"])
-                )
-    finally:
-        con.close()
-    return results

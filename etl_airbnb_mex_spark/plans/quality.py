@@ -20,13 +20,3 @@ def quality_report(df: DataFrame, top: int | None = None) -> DataFrame:
     if top is not None:
         out = out.limit(top)
     return out
-
-
-def quality_flags(df: DataFrame, threshold_pct: float = 5.0) -> DataFrame:
-    """Columns whose null percentage exceeds ``threshold_pct`` (the
-    reference's >5 % warning screen, src/transformacion.py:431-432)."""
-    from pyspark.sql import functions as F
-
-    return quality_report(df).filter(
-        (100.0 - F.col("completeness_pct")) > threshold_pct
-    )

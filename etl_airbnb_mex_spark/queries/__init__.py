@@ -60,19 +60,12 @@ def register(name: str, oracle: str | None, doc: str = ""):
 
 
 #: Driver-surface ordering. The driver verifies only the FIRST 50
-#: registry entries in iteration order, so each round the window must
-#: rotate to the entries with the weakest driver provenance. Round 12
-#: rotation = exactly the queue frozen in r11 (VERDICT r11 "Next
-#: round" #1) plus this round's lockstep slots: FIRST the ten entries
-#: whose code changed in r12 — the lockstep rule (changed code must
-#: get a fresh driver row the same round) outranks everything — then
-#: hll_distinct_rollup (rows-only; ceded its r11 slot, the last entry
-#: whose provenance predates r5) and the full 33-entry r6-provenance
-#: queue, alphabetical. 10 + 34 = 44 slots; 6 spare. After this round
-#: no oracle-bearing entry's provenance predates r8 (the r6 batch was
-#: untouched code re-verified here; r7 had no entries of its own).
-#: Every name was re-verified by the local oracle replica this
-#: session before the window was frozen.
+#: registry entries in iteration order, so at most 50 names lead it:
+#: first every entry whose code changed since its last driver row
+#: (changed code gets a fresh row in the same run), then the
+#: oracle-bearing entries with the oldest driver provenance. Every
+#: oracle-bearing entry outside this window has a driver row in some
+#: ``CORRECTNESS_r*.json`` (tests/test_registry.py checks both).
 _PRIORITY: tuple[str, ...] = (
     # -- code changed in r16 (lockstep rule) --
     "approx_distinct",     # r16: converted to bounded-assertion form
@@ -147,34 +140,13 @@ _PRIORITY: tuple[str, ...] = (
     "activity_streaks",
     "basket_lift",
 )
-# Round-16 window: 7 lockstep slots (the four sketch entries
-# converted to bounded-assertion oracles — their first driver hash
-# ever, VERDICT r15 #1; q5_local_supplier_volume, whose shared
-# builder was touched in r15 without a fresh row, VERDICT r15 #2; and
-# the q9 pair, whose shared builder gained the cents_encoded path
-# this round, VERDICT r15 #3) + the new ivf_build_probe lifecycle
-# entry (VERDICT r15 #5) + the full 40-entry r11 cohort (bpe_merges
-# was its 41st member and sits in the lockstep slots) + the 2
-# alphabetically-first r12-cohort entries in the spare slots = 50 of
-# 50. After this round the oldest provenance anywhere becomes r12.
-# Every cohort name re-verified by the local oracle replica this
-# session before the window was frozen.
-
-#: Emptied in round 7: dedup_simhash / ngram_jaccard graduated into the
-#: window (they were the last entries with no driver row ever). The
-#: mechanism stays for any future deliberately-tail-ordered demo.
-_DEMOTED: tuple[str, ...] = ()
 
 
 def _ordered() -> list[QuerySpec]:
     _load()
     prio = [REGISTRY[n] for n in _PRIORITY if n in REGISTRY]
-    rest = [
-        s for s in REGISTRY.values()
-        if s.name not in _PRIORITY and s.name not in _DEMOTED
-    ]
-    demoted = [REGISTRY[n] for n in _DEMOTED if n in REGISTRY]
-    return prio + rest + demoted
+    rest = [s for s in REGISTRY.values() if s.name not in _PRIORITY]
+    return prio + rest
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

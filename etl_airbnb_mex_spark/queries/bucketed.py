@@ -8,10 +8,9 @@ key (``write_bucketed_table``, sources/writers.py) establishes
 HashPartitioning ONCE at write time; every subsequent join/groupBy on
 that key then needs NO Exchange on the bucketed side(s).
 
-Until r14 this lived only in ``scripts/bucketed_qsuite.py`` + sidecar
-rows (1.7–2.3× at sf4/sf24); registering the variants makes the
-deployment answer a TESTED API SURFACE: each twin runs the IDENTICAL
-logical plan as its plain entry (the plan bodies are shared
+Each twin is a registered query (sidecar rows: 1.7–2.3× at sf4/sf24),
+so the deployment answer is a TESTED API SURFACE: each twin runs the
+IDENTICAL logical plan as its plain entry (the plan bodies are shared
 frame-parameterized builders — ``_q5_from_frames`` /
 ``_q21_from_frames`` / ``_join_inner_fk_from_frames`` — so the twins
 CANNOT drift), carries the SAME oracle SQL (layout is an optimization,
@@ -58,21 +57,17 @@ from . import REGISTRY, register
 from . import decision as _decision
 from . import extensions as _extensions
 
-#: layout-time commitment, shared with scripts/bucketed_qsuite.py —
-#: both join sides must agree on it (sources/writers.py docstring)
+#: layout-time commitment — both join sides must agree on it
+#: (sources/writers.py docstring)
 N_BUCKETS = 32
 
-#: layout key -> (source table, bucket/sort columns). li_pk/p_pk exist
-#: for the q9 partsupp-side layout A/B (VERDICT r14 #1,
-#: scripts/q9_layout_ab.py) — same cache machinery, no registered twin
-#: unless the measurement pays.
+#: layout key -> (source table, bucket/sort columns); every key is read
+#: by a registered twin.
 _LAYOUTS: dict[str, tuple[str, tuple[str, ...]]] = {
     "li_ok": ("lineitem", ("l_orderkey",)),
     "o_ok": ("orders", ("o_orderkey",)),
     "o_ck": ("orders", ("o_custkey",)),
     "c_ck": ("customer", ("c_custkey",)),
-    "li_pk": ("lineitem", ("l_partkey",)),
-    "p_pk": ("part", ("p_partkey",)),
     "li_ok_q9c": ("lineitem", ("l_orderkey",)),
 }
 

@@ -964,12 +964,10 @@ def _q9_from_frames(
     cents_encoded: bool = False,
 ) -> DataFrame:
     """The registered q9 plan, parameterized by its input frames so the
-    layout A/B (scripts/q9_layout_ab.py, VERDICT r14 #1) and the
-    bucketed twin execute the IDENTICAL logical plan over a different
-    table layout. ``n`` and ``p`` arrive pre-filtered/projected and
-    pre-hinted — the registered caller broadcasts both (nation is
-    spec-bounded; ECONOMY part is ~1/6 of an SF-scaled dim), while the
-    layout A/B may pass a bucketed part with a merge hint instead.
+    plain entry and the bucketed twin execute the IDENTICAL logical
+    plan over a different table layout. ``n`` and ``p`` arrive
+    pre-filtered/projected and pre-hinted — both callers broadcast them
+    (nation is spec-bounded; ECONOMY part is ~1/6 of an SF-scaled dim).
 
     ``cents_encoded=True`` (r16, VERDICT r15 #3): ``li`` carries the
     margin inputs PRE-ENCODED as integer cents (``l_eprice_e2`` /

@@ -2878,15 +2878,10 @@ def dq_checks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Equi-depth histogram (10 ~equal-count bins over c_acctbal) via the "
     "fully-lazy bucketed global rank "
     "(operators/stats.py:equidepth_histogram_prefix): one action, zero "
-    "driver round-trips — re-registered r11 (VERDICT r10 #3) off the "
-    "sortrank form (operators/windows.py:equidepth_histogram, kept as "
-    "the API alternative), whose partition-counts collect + offset "
-    "re-plan were a fixed two-job scheduling floor (11.5x vs the "
-    "oracle at sf2) on identical shuffle volume. NO single-task ntile "
-    "sort in either form. Bin = floor((rank-1)*k/n) + 1 (1-based, "
-    "ADVICE r11 #3), computed with INTEGER floor-division on longs on "
-    "both sides (ADVICE r11 #4 — structural oracle equivalence, no "
-    "2^53 double-rounding bound to reason about).",
+    "driver round-trips, no single-task ntile sort. Bin = "
+    "floor((rank-1)*k/n) + 1 (1-based), computed with INTEGER "
+    "floor-division on longs on both sides, so it equals the oracle "
+    "structurally with no 2^53 double-rounding bound to reason about.",
 )
 def histogram_equidepth_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import equidepth_histogram_prefix

@@ -42,6 +42,16 @@ PARITY_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+#: ``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold``: the
+#: :func:`shj_local_map_threshold` bound for an 8g heap and 32 slots,
+#: rounded down to a power of two (reasoning at its use in get_spark).
+#: Fewer slots only raise the bound, so it holds on any smaller box.
+SHJ_LOCAL_MAP_THRESHOLD = 16 * 1024 * 1024
+
+#: ``spark.sql.files.maxPartitionBytes`` (reasoning at its use in
+#: get_spark).
+MAX_PARTITION_BYTES = 16 * 1024 * 1024
+
 
 def shj_local_map_threshold(
     heap_bytes: int,
@@ -111,11 +121,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    Local dev/test runs ``local[$SPARK_GRAFT_CPUS]`` (default 32); on a
-    real cluster the master comes from spark-submit and this factory only
-    contributes conf.
+    Local dev/test runs ``local[$SPARK_GRAFT_CPUS]``, by default as many
+    threads as the CPUs this process may run on; on a real cluster the
+    master comes from spark-submit and this factory only contributes
+    conf. ``extra_conf`` overrides any conf set here.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -160,11 +173,10 @@ def get_spark(
         # tested so the formula can't rot); 16 MiB = the local-shape
         # bound rounded down to a power of two. On a real cluster
         # recompute via shj_local_map_threshold(executor_mem, cores)
-        # and set SPARK_GRAFT_SHJ_THRESHOLD.
+        # and pass it through extra_conf or spark-submit.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD",
-                           str(16 * 1024 * 1024)),
+            str(SHJ_LOCAL_MAP_THRESHOLD),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -180,11 +192,7 @@ def get_spark(
         # partitions, and openCostInBytes keeps tiny dims at one task.
         # On a real 100 TB cluster, set 128m+ via spark-submit (inputs
         # arrive as thousands of files; this knob stops mattering).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                           str(16 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         # Managed-table warehouse (bucketed tables): keep out of the repo.
         .config(
             "spark.sql.warehouse.dir",

@@ -23,10 +23,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: State-store posture for STATEFUL streams at scale (r17, VERDICT r16
-#: #6 — previously set only inside scripts/streaming_bench.py; an
-#: engine optimization must ship with the engine, the bench merely
-#: inherits it):
+#: State-store posture for STATEFUL streams at scale. It ships with
+#: the engine, so every caller of :func:`configure_state_store` gets
+#: the same posture:
 #:
 #: * RocksDB provider — state spills to local disk instead of executor
 #:   heap; the 100 TB posture for stateful streaming (the HDFS-backed

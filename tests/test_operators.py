@@ -1476,67 +1476,76 @@ def test_scd2_intervals_state_changes(spark):
     ]
 
 
-def test_equidepth_histogram_exact_ranks(spark):
-    """Distributed rank must reproduce floor((rank-1)k/n) bins exactly —
-    counts differ by at most 1 across bins and cover all rows."""
-    from etl_airbnb_mex_spark.operators.windows import equidepth_histogram
+def _equidepth_reference(rows, k):
+    """Pure-Python sort-rank equi-depth histogram: sort by (v, id) with
+    NULLs first, bin = (rank-1)*k // n + 1, then per bin the row count
+    and the min/max of the non-NULL values rounded HALF_UP to 2 dp (as
+    Spark's ``round`` does)."""
+    from decimal import ROUND_HALF_UP, Decimal
 
-    n, k = 1007, 10
-    df = spark.createDataFrame(
-        [((i * 7919) % n / 3.0, i) for i in range(n)], "v double, id long"
+    def r2(x):
+        if x is None:
+            return None
+        return float(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_UP))
+
+    ordered = sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0.0, r[1]))
+    n = len(ordered)
+    bins: dict[int, list] = {}
+    for rank, (v, _) in enumerate(ordered, start=1):
+        bins.setdefault((rank - 1) * k // n + 1, []).append(v)
+    out = []
+    for b, vs in sorted(bins.items()):
+        vals = [v for v in vs if v is not None]
+        out.append((
+            b, len(vs),
+            r2(min(vals)) if vals else None,
+            r2(max(vals)) if vals else None,
+        ))
+    return out
+
+
+def _equidepth_rows(spark, rows, k):
+    from etl_airbnb_mex_spark.operators.stats import (
+        equidepth_histogram_prefix,
     )
-    rows = equidepth_histogram(df, "v", k=k, tiebreak="id").collect()
-    assert [r["bin"] for r in rows] == list(range(1, k + 1))
-    counts = [r["cnt"] for r in rows]
+
+    df = spark.createDataFrame(rows, "v double, id long")
+    return [tuple(r) for r in
+            equidepth_histogram_prefix(df, "v", k=k, tiebreak="id").collect()]
+
+
+def test_equidepth_histogram_exact_ranks(spark):
+    """The global rank must reproduce floor((rank-1)k/n) bins exactly —
+    counts differ by at most 1 across bins and cover all rows."""
+    n, k = 1007, 10
+    data = [((i * 7919) % n / 3.0, i) for i in range(n)]
+    rows = _equidepth_rows(spark, data, k)
+    assert rows == _equidepth_reference(data, k)
+    assert [r[0] for r in rows] == list(range(1, k + 1))
+    counts = [r[1] for r in rows]
     assert sum(counts) == n
     assert max(counts) - min(counts) <= 1
     # bins are ordered, non-overlapping value ranges
     for a, b in zip(rows, rows[1:]):
-        assert a["hi"] <= b["lo"]
+        assert a[3] <= b[2]
 
 
 def test_equidepth_prefix_matches_sortrank_form(spark):
-    """The r11 lazy prefix form (one action, zero driver round-trips)
-    must reproduce the sortrank form's bins EXACTLY — same rank
-    semantics, same floor((rank-1)k/n) expression, same rounding."""
-    from etl_airbnb_mex_spark.operators.stats import (
-        equidepth_histogram_prefix,
-    )
-    from etl_airbnb_mex_spark.operators.windows import equidepth_histogram
-
+    """The lazy prefix form (one action, zero driver round-trips) must
+    reproduce a plain sort-rank's bins EXACTLY — same rank semantics,
+    same floor((rank-1)k/n) expression, same rounding."""
     n, k = 1007, 10
-    df = spark.createDataFrame(
-        [((i * 7919) % n / 3.0, i) for i in range(n)], "v double, id long"
-    )
-    old = [tuple(r) for r in
-           equidepth_histogram(df, "v", k=k, tiebreak="id").collect()]
-    new = [tuple(r) for r in
-           equidepth_histogram_prefix(df, "v", k=k, tiebreak="id").collect()]
-    assert new == old
     # heavy ties (41 distinct values across 1007 rows): the unique
-    # tiebreak must keep both forms deterministic and identical
-    df2 = spark.createDataFrame(
-        [(float(i % 41), i) for i in range(n)], "v double, id long"
-    )
-    old2 = [tuple(r) for r in
-            equidepth_histogram(df2, "v", k=k, tiebreak="id").collect()]
-    new2 = [tuple(r) for r in
-            equidepth_histogram_prefix(df2, "v", k=k, tiebreak="id").collect()]
-    assert new2 == old2
-    # nulls rank FIRST in both forms (Spark ascending sort order): a
-    # null-heavy first bin, identical between the two plans. The
-    # registered oracle column (c_acctbal) is null-free, so this
-    # contract is pytest-held, not driver-held.
-    df3 = spark.createDataFrame(
-        [(None if i % 5 == 0 else float(i), i) for i in range(n)],
-        "v double, id long",
-    )
-    old3 = [tuple(r) for r in
-            equidepth_histogram(df3, "v", k=k, tiebreak="id").collect()]
-    new3 = [tuple(r) for r in
-            equidepth_histogram_prefix(df3, "v", k=k, tiebreak="id").collect()]
-    assert new3 == old3
-    assert old3[0][1] >= 100 and old3[0][2] is None  # null-led first bin
+    # tiebreak must keep the bins deterministic
+    ties = [(float(i % 41), i) for i in range(n)]
+    assert _equidepth_rows(spark, ties, k) == _equidepth_reference(ties, k)
+    # nulls rank FIRST (Spark ascending sort order): a null-led first
+    # bin. The registered oracle column (c_acctbal) is null-free, so
+    # this contract is pytest-held, not driver-held.
+    nulls = [(None if i % 5 == 0 else float(i), i) for i in range(n)]
+    got = _equidepth_rows(spark, nulls, k)
+    assert got == _equidepth_reference(nulls, k)
+    assert got[0][1] >= 100 and got[0][2] is None  # null-led first bin
 
 
 def test_percentiles_nan_is_missing_on_every_method(spark):

@@ -502,14 +502,17 @@ def test_shj_threshold_formula_matches_shipped_conf():
     side drifts, this test names which (VERDICT r11 #10)."""
     import pytest
 
-    from etl_airbnb_mex_spark.session import shj_local_map_threshold
+    from etl_airbnb_mex_spark.session import (
+        SHJ_LOCAL_MAP_THRESHOLD,
+        shj_local_map_threshold,
+    )
 
     gib = 1024 ** 3
     # local shape: 8g heap, 32 slots, 0.6 pool, 6x expansion -> 25.6 MiB
     local_bound = shj_local_map_threshold(8 * gib, 32)
     assert local_bound == int(8 * gib * 0.6 / 32 / 6.0) == 26_843_545
     # the shipped conf (16 MiB) must be within the safe region
-    assert 16 * 1024 * 1024 <= local_bound
+    assert SHJ_LOCAL_MAP_THRESHOLD <= local_bound
     # synthetic triples: a big-executor cluster shape and a skinny one
     assert shj_local_map_threshold(
         64 * gib, 16, execution_fraction=0.6, hashmap_expansion=4.0
@@ -522,7 +525,7 @@ def test_shj_threshold_formula_matches_shipped_conf():
     r10_gate = 64 * 1024 * 1024
     assert r10_gate * 32 * 6.0 > 8 * gib * 0.6
     # and the fixed gate does not
-    assert 16 * 1024 * 1024 * 32 * 6.0 <= 8 * gib * 0.6
+    assert SHJ_LOCAL_MAP_THRESHOLD * 32 * 6.0 <= 8 * gib * 0.6
     # degenerate shapes must raise, not return nonsense
     with pytest.raises(ValueError):
         shj_local_map_threshold(0, 32)
@@ -569,3 +572,30 @@ def test_ensure_parity_conf_logs_and_raises_on_conf_failure(caplog):
     wrong = dict(PARITY_CONF, **{"spark.sql.ansi.enabled": "true"})
     with pytest.raises(RuntimeError, match="spark.sql.ansi.enabled"):
         ensure_parity_conf(_FakeSession(wrong))
+
+
+def test_get_spark_defaults_to_affinity_cpus():
+    """With ``SPARK_GRAFT_CPUS`` unset, the local master and the shuffle
+    partitions match the CPUs this process may run on, so a default
+    session never oversubscribes the machine."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["PYTHONPATH"] = str(pathlib.Path(__file__).resolve().parent.parent)
+    env["SPARK_DRIVER_MEM"] = "1g"
+    probe = (
+        "from etl_airbnb_mex_spark.session import get_spark\n"
+        "s = get_spark(app_name='cpu-default-probe')\n"
+        "print(s.sparkContext.defaultParallelism,"
+        " s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], env=env, capture_output=True,
+        text=True, timeout=300, check=True,
+    ).stdout.split()
+    cpus = len(os.sched_getaffinity(0))
+    assert out[-2:] == [str(cpus), str(cpus)]

@@ -1,12 +1,10 @@
 """Registry-surface invariants the driver contract depends on.
 
 The driver verifies only the FIRST 50 entries of ``queries()`` in
-iteration order (VERDICT.md r1/r2), so ordering is part of the
-contract: each round the window rotates to the entries with the weakest
-driver provenance. Round 5's window = the 2 fixed r4 hash failures +
-the 41 never-checked round-4 oracle additions + the 4 never-ran
-rows-only plans + 3 stale refreshes (queries/__init__.py:_PRIORITY) —
-with it, every oracle-bearing entry has a driver row from some round.
+iteration order, so ordering is part of the contract: the window
+(queries/__init__.py:_PRIORITY) holds the entries with the weakest
+driver provenance, and every oracle-bearing entry outside it has a
+driver row in some ``CORRECTNESS_r*.json``.
 """
 
 from __future__ import annotations
@@ -16,7 +14,6 @@ import pathlib
 
 from etl_airbnb_mex_spark.queries import (
     REGISTRY,
-    _DEMOTED,
     _PRIORITY,
     all_oracle_sql,
     all_queries,
@@ -104,11 +101,6 @@ def test_ordering_is_complete_and_stable():
     names = list(all_queries())
     assert len(names) == len(set(names))
     assert set(names) == set(REGISTRY)
-    # demoted demos trail everything else (vacuous while _DEMOTED is
-    # empty — the r7 window absorbed the last two demoted entries)
-    if _DEMOTED:
-        tail = names[-len(_DEMOTED):]
-        assert tail == [n for n in _DEMOTED if n in REGISTRY]
     # oracle map iterates in the same order, filtered
     oracle_names = list(all_oracle_sql())
     filtered = [n for n in names if REGISTRY[n].oracle is not None]
@@ -569,19 +561,35 @@ def test_no_container_columns_in_oracle_surface():
                 idx += len(marker)
 
 
-def test_bench_headline_names_are_registered():
-    """Every name bench.py times must be a live registry entry —
-    protects the driver's BENCH artifact from silent KeyErrors when
-    queries are renamed or demoted."""
-    import importlib.util
+def test_cited_python_files_exist():
+    """Every ``scripts/*.py`` path and bare ``*.py`` file name cited in
+    the engine, the tests, README.md or .claude/ names a file in the
+    repo, so deleting a tool cannot leave a dangling citation."""
+    import re
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", _REPO / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    missing = [n for n in bench.HEADLINE if n not in REGISTRY]
-    assert not missing, f"bench HEADLINE names not in registry: {missing}"
+    scripts = re.compile(r"\bscripts/(\{[\w,]+\}|\w+)\.py\b")
+    bare = re.compile(r"(?<![\w/.{,-])(\w+\.py)\b")
+    sources = [_REPO / "README.md"] + [
+        p for d in ("etl_airbnb_mex_spark", "tests", ".claude")
+        for p in sorted((_REPO / d).rglob("*")) if p.suffix in (".py", ".md")
+    ]
+    names = {p.name for p in _REPO.glob("*.py")} | {
+        p.name for d in ("etl_airbnb_mex_spark", "tests", "scripts", "perfbench")
+        for p in (_REPO / d).rglob("*.py")
+    }
+    missing = []
+    for src in sources:
+        text = src.read_text()
+        where = src.relative_to(_REPO)
+        for m in scripts.finditer(text):
+            for stem in m.group(1).strip("{}").split(","):
+                if not (_REPO / "scripts" / f"{stem}.py").is_file():
+                    missing.append(f"{where}: {stem}.py in scripts")
+        missing += [
+            f"{where}: {m.group(1)}" for m in bare.finditer(text)
+            if m.group(1) not in names
+        ]
+    assert not missing, "citations of missing files:\n" + "\n".join(missing)
 
 
 def test_all_oracle_sql_parses_in_duckdb(sf_dir):
