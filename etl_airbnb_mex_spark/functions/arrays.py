@@ -11,11 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .cleaning import _col
 from .text import strip_non_alnum
-
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def parse_string_array(col: Column | str) -> Column:

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 
 def _col(c: Column | str) -> Column:
+    """A column name or Column as a Column — every function in this
+    package accepts either."""
     return F.col(c) if isinstance(c, str) else c
 
 

@@ -13,9 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+from .cleaning import _col
 
 
 def robust_to_timestamp(col: Column | str) -> Column:

@@ -11,9 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+from .cleaning import _col
 
 
 def strip_non_alnum(col: Column | str) -> Column:

@@ -11,9 +11,6 @@ window — one shuffle on (key, time), linear in input size.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -134,34 +131,6 @@ def range_bin_join(
         & (p[point_col] <= iv[hi_col]),
     )
     return joined.drop("__bin")
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    key: str,
-    num_buckets: int = 32,
-    sort_by: str | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by the join key:
-    two tables bucketed identically join WITHOUT any shuffle — the
-    pre-partitioning is the 100 TB answer to repeated fact-fact joins on
-    the same key (pay the shuffle once at write time, never at read).
-    """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # A stale location with no catalog entry (e.g. a previous session's
-    # in-memory metastore) blocks managed-table creation; clear it.
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    if warehouse.startswith("file:"):
-        warehouse = warehouse[len("file:"):]
-    leftover = os.path.join(warehouse, table)
-    if os.path.isdir(leftover):
-        shutil.rmtree(leftover, ignore_errors=True)
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table)
 
 
 def bloom_prefilter_join(

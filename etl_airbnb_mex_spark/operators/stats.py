@@ -2,9 +2,9 @@
 
 Every statistic is a single hash-aggregate pass (partial + final for
 free); *exact* percentiles/median are used so the DuckDB oracle
-(``quantile_cont``) and pandas (linear interpolation) match — the
-``approx`` flag switches to sketch-based variants for 100 TB runs where
-an exact percentile would force a global sort (SURVEY.md §4.3).
+(``quantile_cont``) and pandas (linear interpolation) match. The
+``percentile_approx`` sketch is used only where a query asks for it
+(``percentiles_approx``).
 
 Exact quantiles have one entry point, :func:`exact_quantiles`. It
 reads Spark's optimizer estimate of the projected value column and
@@ -17,6 +17,14 @@ skipna, the reference's semantics) and values between two ranks are
 interpolated linearly as by ``quantile_cont`` (bucket-select evaluates
 its exact ``(1 − d)·lo + d·hi``; Spark's ``percentile`` can differ in
 the last bit, far below the 6-dp rounding).
+
+Operators that need a global sort order — bucket-select,
+:func:`global_order_prefix` (and the equi-depth histogram on it) and
+:func:`skyline_2d` — share one bucketed order, :func:`_bucketed`:
+equal-width buckets between the finite limits of a 1-row aggregate,
+per-bucket totals with their exclusive offsets on a ≤4096-row frame,
+and exact order only inside a bucket. No global sort, no driver
+round-trip.
 """
 
 from __future__ import annotations
@@ -61,17 +69,6 @@ def _r(c: Column, dp: int = ROUND_DP) -> Column:
     return F.round(c, dp)
 
 
-def _pcts(col: str | Column, ps: tuple[float, ...], approx: bool) -> Column:
-    """ONE percentile aggregate for all cut points: each F.percentile call
-    buffers the full column independently, so k separate calls cost k
-    sort buffers — the array form costs one (measured 15.2 s → one-pass
-    at sf0.1)."""
-    arr = F.array(*[F.lit(p) for p in ps])
-    if approx:
-        return F.percentile_approx(col, arr)
-    return F.percentile(col, arr)
-
-
 def _pname(p: float) -> str:
     return f"p{int(p * 100)}"
 
@@ -113,7 +110,10 @@ def exact_percentiles_native(
     """
     moments = moments or {}
     masked = _no_nan(col)
-    aggs = [_pcts(masked, ps, approx=False).alias("__q")]
+    # one array-valued aggregate for all cut points: k separate
+    # percentile calls would each buffer the whole column
+    arr = F.array(*[F.lit(p) for p in ps])
+    aggs = [F.percentile(masked, arr).alias("__q")]
     if keep_n:
         aggs.append(F.count(masked).alias("n"))
     aggs += [c.alias(name) for name, c in moments.items()]
@@ -159,7 +159,7 @@ def exact_quantiles(
     )
 
 
-def describe_stats(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
+def describe_stats(df: DataFrame, col: str) -> DataFrame:
     """A5 — df.describe(): count/mean/std/min/p25/p50/p75/max, one row.
 
     Reference: nb:cell7:30-35. std is sample stddev (pandas ddof=1).
@@ -172,8 +172,8 @@ def describe_stats(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     The moments keep Spark aggregate semantics (count includes NaN
     rows, mean/std/max turn NaN); the quartiles skip NaN. Exact
     quartiles come from :func:`exact_quantiles` with the moments fused
-    into its aggregate (small plans: one aggregate in all);
-    ``approx=True`` uses the ``percentile_approx`` sketch instead.
+    into the same pass (the native aggregate on small plans,
+    bucket-select's limits aggregate on large ones).
     """
     c = F.col(col)
     moments = {
@@ -183,38 +183,19 @@ def describe_stats(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
         "min": _r(F.min(c)),
         "max": _r(F.max(c)),
     }
-    ps = (0.25, 0.50, 0.75)
-    if approx:
-        q = df.agg(
-            _pcts(_no_nan(col), ps, approx).alias("__q"),
-            *[m.alias(name) for name, m in moments.items()],
-        ).select(
-            *[_r(F.element_at("__q", i + 1)).alias(_pname(p))
-              for i, p in enumerate(ps)],
-            *moments,
-        )
-    else:
-        q = exact_quantiles(df, col, ps, moments=moments)
+    q = exact_quantiles(df, col, (0.25, 0.50, 0.75), moments=moments)
     return q.select("cnt", "mean", "std", "min", "p25", "p50", "p75", "max")
 
 
 def percentiles(
     df: DataFrame, col: str, ps: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99),
-    approx: bool = False,
 ) -> DataFrame:
-    """A7 — percentiles at the reference's cut points (nb:cell9:37-41),
-    one row ``p25 … p99`` rounded to 6 dp (F.round: HALF_UP, as the
-    oracle). Exact by default through :func:`exact_quantiles`;
-    ``approx=True`` is the ``percentile_approx`` sketch. NaN is missing
-    on both paths (pandas ``quantile`` skips it; Spark's raw
-    aggregates would count it and sort it greatest)."""
-    if not approx:
-        return exact_quantiles(df, col, ps)
-    wide = df.agg(_pcts(_no_nan(col), ps, approx).alias("__q"))
-    return wide.select(
-        *[_r(F.element_at("__q", i + 1)).alias(_pname(p))
-          for i, p in enumerate(ps)]
-    )
+    """A7 — exact percentiles at the reference's cut points
+    (nb:cell9:37-41), one row ``p25 … p99`` rounded to 6 dp (F.round:
+    HALF_UP, as the oracle), through :func:`exact_quantiles`. NaN is
+    missing (pandas ``quantile`` skips it; Spark's raw aggregates would
+    count it and sort it greatest)."""
+    return exact_quantiles(df, col, ps)
 
 
 def mad_robust(df: DataFrame, col: str) -> DataFrame:
@@ -318,6 +299,84 @@ def anomaly_zscore(
     )
 
 
+#: Equal-width buckets of the bucketed global order: the per-bucket
+#: frame is at most this many rows at any input size.
+_BUCKETS = 4096
+
+
+def _limits(
+    df: DataFrame, v: Column, aggs: dict[str, Column] | None = None
+) -> DataFrame:
+    """The 1-row limits frame of the bucketed order: min and max of the
+    FINITE values of ``v`` (a NaN or infinite limit would poison every
+    bucket through the width) and the caller's ``aggs``, all in ONE
+    aggregate over ``df``."""
+    inf = float("inf")
+    # Spark orders NaN above +Inf, so this also masks NaN
+    finite = F.when((v > -inf) & (v < inf), v)
+    return df.agg(
+        F.min(finite).alias("__lo"),
+        F.max(finite).alias("__hi"),
+        *[c.alias(name) for name, c in (aggs or {}).items()],
+    )
+
+
+def _bucketed(
+    df: DataFrame,
+    v: Column,
+    lim: DataFrame,
+    weight: Column,
+    agg=F.sum,
+) -> tuple[DataFrame, DataFrame]:
+    """The bucketed global order behind bucket-select,
+    :func:`global_order_prefix` and :func:`skyline_2d`.
+
+    ``binned`` is ``df`` with the broadcast ``lim`` columns and
+    ``__bkt``: an equal-width bucket of the double ``v`` between
+    ``__lo`` and ``__hi`` — ``floor`` of a monotone transform, so
+    bucket order is ``v``'s order. Bucket order equals Spark's
+    ascending sort end to end (NULL < −Inf < finite < +Inf < NaN):
+    NULL takes bucket −1, −Inf bucket 0, +Inf and NaN the top bucket,
+    where the caller's within-bucket ``orderBy`` places them exactly.
+    A column with ``hi == lo`` collapses to bucket 0, and with no
+    finite value the limits are NULL and only the pinned branches run.
+
+    ``buckets`` has one row per occupied bucket: ``__bn`` =
+    ``agg(weight)``, ``__boff`` = ``agg`` over every earlier bucket (0
+    for an empty sum, NULL for an empty max) and ``__gtot`` = ``agg``
+    over all of them. Both windows share one spec and run on the
+    ≤``_BUCKETS``-row bucket frame, never on the data.
+    """
+    lo, hi = F.col("__lo"), F.col("__hi")
+    top = F.lit(_BUCKETS - 1).cast("long")
+    bkt = (
+        F.when(v.isNull(), F.lit(-1).cast("long"))
+        .when(F.isnan(v) | (v == float("inf")), top)
+        .when((v == float("-inf")) | (hi == lo), F.lit(0).cast("long"))
+        .otherwise(
+            F.least(
+                F.floor((v - lo) / ((hi - lo) / _BUCKETS)).cast("long"), top
+            )
+        )
+    )
+    binned = df.crossJoin(F.broadcast(lim)).withColumn("__bkt", bkt)
+    order = Window.orderBy("__bkt")
+    off = agg("__bn").over(order.rowsBetween(Window.unboundedPreceding, -1))
+    if agg is F.sum:
+        off = F.coalesce(off, F.lit(0))
+    buckets = binned.groupBy("__bkt").agg(agg(weight).alias("__bn")).select(
+        "__bkt",
+        "__bn",
+        off.alias("__boff"),
+        agg("__bn").over(
+            order.rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        ).alias("__gtot"),
+    )
+    return binned, buckets
+
+
 def exact_percentiles_bucket_select(
     df: DataFrame,
     col: str,
@@ -325,22 +384,20 @@ def exact_percentiles_bucket_select(
     dp: int | None = ROUND_DP,
     keep_n: bool = False,
     moments: dict[str, Column] | None = None,
-    n_buckets: int = 4096,
-    extra_scalar_aggs: dict | None = None,
 ) -> DataFrame:
     """Exact percentiles as ONE lazy plan that never ranks the full
     column and never holds it in memory — the large-plan branch of
     :func:`exact_quantiles`. Selecting quantiles only needs exact ranks
     INSIDE the buckets that contain the target ranks:
 
-    1. Pass 1 — 4096-bucket histogram: equal-width bucket id from the
-       finite-masked 1-row min/max broadcast, ONE hash agg keyed on
-       bucket (map-side combine collapses each task to ≤4096 longs).
-    2. In-plan target selection: exclusive bucket offsets and the
-       total n from ONE single-partition window over the ≤4096-row
-       bucket-total frame (the audited metadata-scale window); a bucket
-       is a TARGET iff [offset, offset+count) contains ⌊k_p⌋ or ⌈k_p⌉
-       for some cut point k_p = (n−1)·p — ≤ 2·|ps| buckets, broadcast.
+    1. Pass 1 — the 1-row limits aggregate over ``df`` (finite
+       min/max, with the caller's ``moments`` in the same frame), then
+       the :func:`_bucketed` histogram:
+       ONE hash agg keyed on bucket (map-side combine collapses each
+       task to ≤4096 longs) with exclusive offsets and the total n.
+    2. In-plan target selection: a bucket is a TARGET iff
+       [offset, offset+count) contains ⌊k_p⌋ or ⌈k_p⌉ for some cut
+       point k_p = (n−1)·p — ≤ 2·|ps| buckets, broadcast.
     3. Pass 2 — candidates = rows in target buckets (broadcast hash
        join prunes ~99.7 % of rows before any shuffle); a per-bucket
        window sorts ONLY the candidates (offset + row_number − 1 =
@@ -351,63 +408,24 @@ def exact_percentiles_bucket_select(
     Degenerate cases degrade, never break: hi == lo (or a point-mass
     bucket holding a target rank) makes that bucket's whole mass the
     candidate set. NULL and NaN are filtered up front (pandas skipna);
-    ±Inf pin to the edge buckets as in :func:`global_order_prefix` and
-    sort correctly inside them.
+    ±Inf pin to the edge buckets and sort correctly inside them.
 
     Returns the same row as :func:`exact_percentiles_native`: ``p25 …``
     (``dp``-rounded, raw when ``dp`` is None), ``n`` when ``keep_n``
-    (0 on empty input), then the ``moments``, which are computed in a
-    separate aggregate over ``df`` and joined as a 1-row broadcast.
-
-    ``extra_scalar_aggs``: scalar aggregate Columns over the internal
-    value column ``v`` (``col`` as double, NULL/NaN filtered), computed
-    inside the pass-1 limits aggregate — no extra column scan — and
-    returned as output columns after the quantiles. On EMPTY input
-    they are NULL (no candidate row carries the broadcast), so a
-    count-like extra reads NULL, not 0.
+    (0 on empty input), then the ``moments`` (aggregate Columns over
+    ``df``'s own columns), read from the 1-row limits frame, so they
+    keep their empty-input values (a count reads 0). Spark's column
+    pruning gives that read its own copy of the limits aggregate,
+    holding only the moments.
     """
-    extra_scalar_aggs = extra_scalar_aggs or {}
-    vals = (
-        df.select(F.col(col).cast("double").alias("v"))
-        .filter(F.col("v").isNotNull() & ~F.isnan("v"))
+    moments = moments or {}
+    v = F.col(col).cast("double")
+    lim = _limits(df, v, moments)
+    vals = df.select(v.alias("v")).filter(
+        F.col("v").isNotNull() & ~F.isnan("v")
     )
-    inf = float("inf")
-    vn = F.when((F.col("v") > -inf) & (F.col("v") < inf), F.col("v"))
-    lim = vals.agg(
-        F.min(vn).alias("__lo"),
-        F.max(vn).alias("__hi"),
-        *[c.alias(f"__x_{k}") for k, c in extra_scalar_aggs.items()],
-    )
-    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(n_buckets))
-    bkt = (
-        F.when(F.col("v") == inf, F.lit(n_buckets - 1).cast("long"))
-        .when(F.col("v") == -inf, F.lit(0).cast("long"))
-        .when(F.col("__hi") == F.col("__lo"), F.lit(0).cast("long"))
-        .otherwise(
-            F.least(
-                F.floor((F.col("v") - F.col("__lo")) / width).cast("long"),
-                F.lit(n_buckets - 1).cast("long"),
-            )
-        )
-    )
-    binned = vals.crossJoin(F.broadcast(lim)).withColumn("__bkt", bkt)
-    bt = binned.groupBy("__bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("__bn")
-    )
-    # offsets and total over the same partition/order spec: one WindowExec
-    wb = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    wn = Window.orderBy("__bkt").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    off = bt.select(
-        "__bkt",
-        F.coalesce(F.sum("__bn").over(wb), F.lit(0))
-        .cast("long")
-        .alias("__boff"),
-        "__bn",
-        F.sum("__bn").over(wn).cast("long").alias("__n"),
-    )
-    k = lambda p: (F.col("__n") - 1) * F.lit(p)  # noqa: E731
+    binned, buckets = _bucketed(vals, F.col("v"), lim, F.lit(1))
+    k = lambda p: (F.col("__gtot") - 1) * F.lit(p)  # noqa: E731
     in_bucket = F.lit(False)
     for p in ps:
         for edge in (F.floor(k(p)), F.ceil(k(p))):
@@ -415,7 +433,7 @@ def exact_percentiles_bucket_select(
                 (edge >= F.col("__boff"))
                 & (edge < F.col("__boff") + F.col("__bn"))
             )
-    targets = off.filter(in_bucket).select("__bkt", "__boff", "__n")
+    targets = buckets.filter(in_bucket).select("__bkt", "__boff", "__gtot")
     cand = binned.join(F.broadcast(targets), "__bkt")
     ww = Window.partitionBy("__bkt").orderBy("v")
     ranked = cand.withColumn(
@@ -426,36 +444,24 @@ def exact_percentiles_bucket_select(
         pick = pick | (F.col("__r0") == F.floor(k(p))) | (
             F.col("__r0") == F.ceil(k(p))
         )
-    hits = ranked.filter(pick)
-    aggs = []
-    for i, p in enumerate(ps):
-        aggs.append(
-            F.max(F.when(F.col("__r0") == F.floor(k(p)), F.col("v")))
-            .alias(f"__lo_{i}")
-        )
-        aggs.append(
-            F.max(F.when(F.col("__r0") == F.ceil(k(p)), F.col("v")))
-            .alias(f"__hi_{i}")
-        )
-    aggs.append(F.max("__n").alias("__n"))
-    for xk in extra_scalar_aggs:
-        # every candidate row carries the broadcast scalar; max of a
-        # constant is the constant (deterministic, unlike first)
-        aggs.append(F.max(F.col(f"__x_{xk}")).alias(f"__xx_{xk}"))
+    aggs = [F.max("__gtot").alias("__gtot")]
     out_cols = []
     for i, p in enumerate(ps):
+        aggs += [
+            F.max(F.when(F.col("__r0") == F.floor(k(p)), F.col("v")))
+            .alias(f"__lo_{i}"),
+            F.max(F.when(F.col("__r0") == F.ceil(k(p)), F.col("v")))
+            .alias(f"__hi_{i}"),
+        ]
         q = _interpolate(F.col(f"__lo_{i}"), F.col(f"__hi_{i}"), k(p))
         out_cols.append((q if dp is None else F.round(q, dp)).alias(_pname(p)))
     if keep_n:
-        out_cols.append(F.coalesce(F.col("__n"), F.lit(0)).alias("n"))
-    for xk in extra_scalar_aggs:
-        out_cols.append(F.col(f"__xx_{xk}").alias(xk))
-    q = hits.groupBy().agg(*aggs).select(*out_cols)
+        out_cols.append(F.coalesce(F.col("__gtot"), F.lit(0)).alias("n"))
+    q = ranked.filter(pick).groupBy().agg(*aggs).select(*out_cols)
     if not moments:
         return q
-    mom = df.agg(*[c.alias(name) for name, c in moments.items()])
     # both sides are 1-row frames: the crossJoin is a scalar broadcast
-    return mom.crossJoin(F.broadcast(q)).select(*q.columns, *moments)
+    return lim.crossJoin(F.broadcast(q)).select(*q.columns, *moments)
 
 
 def global_order_prefix(
@@ -463,142 +469,44 @@ def global_order_prefix(
     order_col: str,
     tie_cols: tuple[str, ...] = (),
     weight_col: str | None = None,
-    n_buckets: int = 4096,
     rank: bool = False,
-    materialize: bool = True,
-    keep_total: bool = False,
 ) -> DataFrame:
     """Exact EXCLUSIVE prefix sum (and optional 1-based global rank)
     over the global ``order_col`` order — LAZY, one Spark action, no
     driver round-trips. Returns ``df`` plus ``cum`` (sum of
     ``weight_col`` over all strictly-earlier rows; weight 1 when
-    ``weight_col`` is None) and, with ``rank=True``, ``rk`` (global
-    ``row_number`` ordered by ``(order_col, *tie_cols)``).
+    ``weight_col`` is None), ``__gtot`` (the grand total of the weight)
+    and, with ``rank=True``, ``rk`` (global ``row_number`` ordered by
+    ``(order_col, *tie_cols)``). The consumers are ``roc_auc_exact``,
+    ``gini_concentration`` and :func:`equidepth_histogram_prefix`.
 
-    This replaces the sort-rank partition-offset pattern (range
-    shuffle + ``localCheckpoint`` + per-partition counts collected to
-    the driver) for the prefix-sum consumers (``roc_auc``,
-    ``gini_concentration``): that pattern pays TWO driver round-trips
-    per run, a fixed ~1.5–2 s of job-scheduling latency at sf2. Here
-    the offsets stay in-plan:
+    The offsets stay in-plan on the :func:`_bucketed` order: bucket
+    totals get their exclusive prefix on the ≤4096-row bucket
+    frame, broadcast back, and a per-bucket window (parallelism =
+    occupied buckets, ~n/4096 rows each) adds the within-bucket prefix.
+    Ranks equal a true global sort's, NULL, NaN and ±Inf included.
 
-    1. ONE 1-row min/max aggregate, broadcast, buckets every row into
-       ``n_buckets`` equal-width bins — ``floor`` of a monotone
-       transform, so bucket order == value order (a degenerate
-       ``hi == lo`` column collapses to bucket 0, documented
-       single-partition fallback).
-    2. Bucket totals (≤ ``n_buckets`` rows) get their own exclusive
-       prefix via a single-partition window — bounded by the bucket
-       count, NEVER by the data (4096 longs), so the classic
-       single-partition-window hazard does not apply.
-    3. Bucket offsets broadcast-join back; a per-bucket window
-       (parallelism = occupied buckets, ~n/4096 rows each) adds the
-       within-bucket prefix.
-
-    NULL order values take a dedicated first bucket and NaN the last,
-    matching Spark's ascending sort (nulls first, NaN greatest) so
-    ranks equal a true global sort's. ±Inf order values are likewise
-    explicit since r10 (closing the documented precondition): limits
-    come from the FINITE values only, −Inf pins to bucket 0 and +Inf
-    to the top bucket — inside those buckets the within-bucket
-    ``orderBy`` places −Inf before every finite value and +Inf after
-    (but before NaN, Spark's sort order), so ranks again equal a true
-    global sort's with no precondition left on the order column.
-
-    ``df`` feeds three branches (min/max, bucket totals, the main
-    join). ReuseExchange dedups the upstream SHUFFLE, but each branch
-    still re-runs the post-shuffle operators — for a high-cardinality
-    caller groupBy that is ~3× the final-aggregate cost (measured
-    +3 s on roc_auc's 583k-distinct-score axis at sf2). With
-    ``materialize=True`` (default) the input is lazily
-    ``localCheckpoint``-ed so the grouped frame computes once and the
-    three branches read the (order-axis-sized, never raw-data-sized)
-    materialized blocks — still ONE action, still zero driver
-    round-trips. Skew bound: equal-width bins assume the order column
-    is not pathologically point-massed; the worst case degrades to
-    the one-window plan, never breaks.
+    ``df`` feeds three branches (limits, bucket totals, the main
+    join). ReuseExchange dedups an upstream shuffle, but each branch
+    would still re-run the post-shuffle operators — for a
+    high-cardinality caller groupBy that is ~3× the final-aggregate
+    cost. The input is therefore lazily ``localCheckpoint``-ed: the
+    grouped frame computes once and the three branches read its
+    blocks — still ONE action, zero driver round-trips. Skew bound:
+    equal-width bins assume the order column is not pathologically
+    point-massed; the worst case degrades to the one-window plan, never
+    breaks.
     """
-    if materialize:
-        df = df.localCheckpoint(eager=False)
-    w_expr = F.col(weight_col) if weight_col else F.lit(1).cast("long")
-    v = F.col(order_col).cast("double")
-    # FINITE-masked limits: a NaN max would poison every bucket via a
-    # NaN width, and an infinite lo/hi would do the same through
-    # inf−inf. Limits therefore come from finite values only; the
-    # non-finite classes get pinned buckets below.
-    inf = float("inf")
-    vn = F.when((~F.isnan(v)) & (v > -inf) & (v < inf), v)
-    lim = df.agg(
-        F.min(vn).alias("__lo"),
-        F.max(vn).alias("__hi"),
-    )
-    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(n_buckets))
-    # Bucket order must equal Spark's ascending sort order end to end
-    # (null < −Inf < finite < +Inf < NaN): NULL order_col sorts FIRST
-    # → dedicated bucket -1 (the r8 form let nulls fall through
-    # floor→null→least→LAST bucket while still sorting nulls-first
-    # inside it — ranks inconsistent with a true global sort, ADVICE
-    # r8 #3); −Inf shares bucket 0 and +Inf/NaN the top bucket, where
-    # the within-bucket orderBy already places them exactly right
-    # (−Inf before every finite, +Inf after every finite, NaN last) —
-    # so ±Inf is handled, not a precondition (VERDICT r9 #6). When NO
-    # finite value exists, lo/hi are null, the floor branch is never
-    # reached, and the pinned branches still order correctly.
-    bkt = (
-        F.when(F.col(order_col).isNull(), F.lit(-1).cast("long"))
-        .when(F.isnan(v), F.lit(n_buckets - 1).cast("long"))
-        .when(v == inf, F.lit(n_buckets - 1).cast("long"))
-        .when(v == -inf, F.lit(0).cast("long"))
-        .when(F.col("__hi") == F.col("__lo"), F.lit(0).cast("long"))
-        .otherwise(
-            F.least(
-                F.floor((v - F.col("__lo")) / width).cast("long"),
-                F.lit(n_buckets - 1).cast("long"),
-            )
-        )
-    )
-    binned = df.crossJoin(F.broadcast(lim)).withColumn("__bkt", bkt)
-    wb = (
-        Window.orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # keep_total (r16, guide §2.4): expose the total weight as __gtot,
-    # summed over the SAME ≤n_buckets-row single-partition window frame
-    # as the offsets (one WindowExec) — consumers that also need n
-    # (equidepth's bin arithmetic) save a second full pass over the
-    # input plus a broadcast crossJoin.
-    bt_cols = [
-        F.col("__bkt"),
-        F.coalesce(F.sum("__bn").over(wb), F.lit(0))
-        .cast("long")
-        .alias("__boff"),
-    ]
-    if keep_total:
-        wn = Window.orderBy("__bkt").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        bt_cols.append(
-            F.sum("__bn").over(wn).cast("long").alias("__gtot")
-        )
-    bt = (
-        binned.groupBy("__bkt")
-        .agg(F.sum(w_expr).cast("long").alias("__bn"))
-        .select(*bt_cols)
-    )
     if rank and weight_col is not None:
         raise ValueError("rank=True requires unit weights (weight_col=None)")
+    df = df.localCheckpoint(eager=False)
+    v = F.col(order_col).cast("double")
+    w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
+    binned, buckets = _bucketed(df, v, _limits(df, v), w)
     ww = Window.partitionBy("__bkt").orderBy(order_col, *tie_cols)
-    out = binned.join(F.broadcast(bt), "__bkt").withColumn(
-        "cum",
-        (
-            F.col("__boff")
-            + F.coalesce(
-                F.sum(w_expr).over(
-                    ww.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-        ).cast("long"),
+    before = F.sum(w).over(ww.rowsBetween(Window.unboundedPreceding, -1))
+    out = binned.join(F.broadcast(buckets.drop("__bn")), "__bkt").withColumn(
+        "cum", (F.col("__boff") + F.coalesce(before, F.lit(0))).cast("long")
     )
     if rank:
         out = out.withColumn(
@@ -618,15 +526,14 @@ def equidepth_histogram_prefix(
 
     Plan: :func:`global_order_prefix` (rank=True) assigns every row
     its exact global ``(col, tiebreak)`` sort rank with no driver
-    round-trip; the total row count joins in as a broadcast 1-row
-    aggregate; bin = ``(rank−1)·k div n + 1`` with INTEGER
-    floor-division on longs — structurally the oracle SQL's
-    ``(rn - 1) * k // n + 1`` (ADVICE r11 #4: the previous
-    double-division form agreed only via IEEE correct rounding below
-    2^53; integer div removes the bound) — then one k-row hash agg
-    per bin. Memory
-    stays shuffle-bounded (the widest state is the 4096-long bucket
-    prefix); no collect, no re-plan, one action.
+    round-trip, and its grand total ``__gtot`` is the row count n (NULL
+    bucket included) from the same bucket-total window; bin =
+    ``(rank−1)·k div n + 1`` with INTEGER floor-division on longs —
+    structurally the oracle SQL's ``(rn - 1) * k // n + 1`` (a double
+    division would agree only via IEEE correct rounding below 2^53) —
+    then one k-row hash agg per bin. Memory stays shuffle-bounded (the
+    widest state is the 4096-long bucket prefix); no collect, no
+    re-plan, one action.
 
     Bins are deterministic given a unique ``tiebreak``; counts differ
     by ≤1 across bins. Rows with a
@@ -634,15 +541,7 @@ def equidepth_histogram_prefix(
     global sort.
     """
     d = df.select(F.col(col).alias("__v"), F.col(tiebreak).alias("__t"))
-    # keep_total rides the total row count (= sum of the bucket counts,
-    # null bucket included) out of the prefix machinery's own
-    # bucket-total window — the r11 form's separate d.agg(count) was a
-    # SECOND full pass over the input (it aggregated the raw frame, not
-    # the localCheckpoint) plus a broadcast crossJoin: one full scan +
-    # two AQE stages removed (r16, guide §2.3/§2.4).
-    ranked = global_order_prefix(
-        d, "__v", tie_cols=("__t",), rank=True, keep_total=True
-    )
+    ranked = global_order_prefix(d, "__v", tie_cols=("__t",), rank=True)
     return (
         ranked.withColumn(
             "bin",
@@ -712,7 +611,7 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     ).orderBy("col_a", "col_b")
 
 
-def iqr_outliers(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
+def iqr_outliers(df: DataFrame, col: str) -> DataFrame:
     """A15 — IQR outlier summary: Q1/Q3 → bounds ±1.5·IQR → count, %,
     outlier min/max. One row.
 
@@ -722,8 +621,7 @@ def iqr_outliers(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     Exact Q1/Q3 and the pct denominator come from one
     :func:`exact_quantiles` call (``keep_n``), unrounded, so the
     ±1.5·IQR fences are computed from the same doubles as the oracle's
-    quantile_cont-derived bounds; ``approx=True`` uses the one-pass
-    ``percentile_approx`` sketch. NaN is missing throughout: it is
+    quantile_cont-derived bounds. NaN is missing throughout: it is
     neither in the quartiles, nor in the denominator, nor counted as an
     outlier (Spark orders NaN above every double, so ``c > hi`` alone
     would count it).
@@ -731,27 +629,13 @@ def iqr_outliers(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
     c = F.col(col)
     is_float = df.schema[col].dataType.typeName() in ("float", "double")
     not_nan = (~F.isnan(c)) if is_float else F.lit(True)
-    # NaN-masked view of the column: the approx quantiles AND the pct
-    # denominator both skip NaN (NaN ranks above every double, so an
-    # unmasked percentile_approx inflates q3 on NaN-bearing columns).
-    masked = F.when(not_nan, c) if is_float else c
-    if approx:
-        qq = df.agg(
-            _pcts(masked, (0.25, 0.75), approx).alias("__q"),
-            F.count(masked).alias("total"),
-        ).select(
-            F.element_at("__q", 1).alias("q1"),
-            F.element_at("__q", 2).alias("q3"),
-            "total",
-        )
-    else:
-        qq = exact_quantiles(
-            df, col, (0.25, 0.75), dp=None, keep_n=True
-        ).select(
-            F.col("p25").alias("q1"),
-            F.col("p75").alias("q3"),
-            F.col("n").alias("total"),
-        )
+    qq = exact_quantiles(
+        df, col, (0.25, 0.75), dp=None, keep_n=True
+    ).select(
+        F.col("p25").alias("q1"),
+        F.col("p75").alias("q3"),
+        F.col("n").alias("total"),
+    )
     q = qq.select(
         "q1", "q3", "total",
         (F.col("q1") - 1.5 * (F.col("q3") - F.col("q1"))).alias("lo"),
@@ -1030,72 +914,45 @@ def two_proportion_ztest(
     )
 
 
-def skyline_2d(
-    df: DataFrame, min_col: str, max_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def skyline_2d(df: DataFrame, min_col: str, max_col: str) -> DataFrame:
     """2-D Pareto skyline: the distinct points not dominated by any
     other — q dominates p when q.min_col ≤ p.min_col AND
     q.max_col ≥ p.max_col with at least one strict (e.g. cheaper AND
     bigger parts).
 
     Sort-based O(n log n) plan, never the naive O(n²) dominance
-    self-join, and never a single-partition global window:
+    self-join, and never a single-partition window over the data:
 
     1. Hash-agg to one row per distinct ``min_col`` keeping
        ``max(max_col)`` — within an equal min_col only the largest
        max_col can survive, so this both dedups and shrinks the input
-       to distinct-key cardinality in one shuffle.
+       to distinct-key cardinality in one shuffle. The result is
+       lazily ``localCheckpoint``-ed: it feeds the limits, the bucket
+       maxima and the main join.
     2. A point is then on the skyline iff the running max of
        ``max_col`` over strictly-smaller ``min_col`` is below its own.
-       That cumulative max is computed DISTRIBUTED, the sort-rank
-       pattern: range-shuffle on min_col + localCheckpoint, per-partition maxes
-       collected (one row per partition — metadata, not data),
-       driver-side exclusive prefix max, folded back per partition via
-       a pid CASE literal over an intra-partition window. No global
-       single-partition sort anywhere; memory is shuffle-bounded.
+       That is an exclusive prefix MAX over the :func:`_bucketed`
+       order of ``min_col``: the bucket maxima get their exclusive
+       prefix on the ≤4096-row bucket frame, and a per-bucket window
+       adds the max of the earlier rows in the same bucket. One lazy
+       plan; no driver round-trip.
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     reduced = (
-        df.filter(
-            F.col(min_col).isNotNull() & F.col(max_col).isNotNull()
-        )
+        df.filter(F.col(min_col).isNotNull() & F.col(max_col).isNotNull())
         .groupBy(min_col)
         .agg(F.max(max_col).alias("__m"))
-        .repartitionByRange(num_partitions, min_col)
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    pmax = {
-        r["pid"]: r["m"]
-        for r in reduced.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.max("__m").alias("m"))
-        .collect()
-    }
-    prefix: dict[int, float | None] = {}
-    best: float | None = None
-    for pid in sorted(pmax):
-        prefix[pid] = best
-        best = pmax[pid] if best is None else max(best, pmax[pid])
-    carry = F.lit(None).cast(reduced.schema["__m"].dataType)
-    for pid, bound in prefix.items():
-        if bound is not None:
-            carry = F.when(F.col("__pid") == pid, F.lit(bound)).otherwise(
-                carry
-            )
-    wloc = (
-        Window.partitionBy("__pid")
-        .orderBy(min_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    v = F.col(min_col).cast("double")
+    binned, buckets = _bucketed(
+        reduced, v, _limits(reduced, v), F.col("__m"), F.max
     )
-    bound = F.greatest(
-        F.coalesce(F.max("__m").over(wloc), carry), carry
+    before = Window.partitionBy("__bkt").orderBy(min_col).rowsBetween(
+        Window.unboundedPreceding, -1
     )
+    bound = F.greatest(F.max("__m").over(before), F.col("__boff"))
     return (
-        reduced.withColumn("__pid", F.spark_partition_id())
+        binned.join(F.broadcast(buckets.select("__bkt", "__boff")), "__bkt")
         .withColumn("__bound", bound)
         .filter(
             F.col("__bound").isNull() | (F.col("__bound") < F.col("__m"))

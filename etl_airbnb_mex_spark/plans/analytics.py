@@ -62,9 +62,13 @@ def distribuciones_numericas(df: DataFrame, col: str) -> DataFrame:
 
 
 def trim_quantile(df: DataFrame, col: str, q: float = 0.99) -> DataFrame:
-    """P3 — keep rows <= the exact q-quantile (two-pass: percentile agg
-    broadcast, then filter)."""
-    thresh = df.agg(F.percentile(col, F.lit(q)).alias("__q"))
+    """P3 — keep rows <= the exact q-quantile (two-pass: quantile
+    broadcast, then filter). NaN is missing, as in pandas: it is not in
+    the quantile and NaN rows are dropped (Spark orders NaN above every
+    value, so ``<=`` never keeps them)."""
+    thresh = stats.exact_quantiles(df, col, (q,), dp=None).select(
+        F.col(stats._pname(q)).alias("__q")
+    )
     return df.crossJoin(F.broadcast(thresh)).filter(
         F.col(col) <= F.col("__q")
     ).drop("__q")
@@ -81,21 +85,29 @@ def analisis_categorico(
 
 def analisis_precios(df: DataFrame, price_col: str = "price_clean") -> dict[str, DataFrame]:
     """nb:cell9 — price suite: scalar stats (A6), exact percentiles (A7),
-    and the grouped mean/median/count by room type (A4)."""
+    and the grouped mean/median/count by room type (A4). The medians
+    skip NaN as pandas does; the scalar moments ride the exact median's
+    ``stats.exact_quantiles`` call."""
+    moments = {
+        "mean_price": F.round(F.avg(price_col), 6),
+        "min_price": F.round(F.min(price_col), 6),
+        "max_price": F.round(F.max(price_col), 6),
+        "std_price": F.round(F.stddev_samp(price_col), 6),
+    }
     return {
-        "stats": df.agg(
-            F.round(F.avg(price_col), 6).alias("mean_price"),
-            F.round(F.median(price_col), 6).alias("median_price"),
-            F.round(F.min(price_col), 6).alias("min_price"),
-            F.round(F.max(price_col), 6).alias("max_price"),
-            F.round(F.stddev_samp(price_col), 6).alias("std_price"),
+        "stats": stats.exact_quantiles(
+            df, price_col, (0.5,), moments=moments
+        ).select(
+            "mean_price", F.col("p50").alias("median_price"),
+            "min_price", "max_price", "std_price",
         ),
         "percentiles": stats.percentiles(df, price_col),
         "por_room_type": (
             df.groupBy("room_type_normalizado")
             .agg(
                 F.round(F.avg(price_col), 6).alias("mean"),
-                F.round(F.median(price_col), 6).alias("median"),
+                F.round(F.median(stats._no_nan(price_col)), 6)
+                .alias("median"),
                 F.count(price_col).alias("count"),
             )
             .orderBy("room_type_normalizado")

@@ -358,8 +358,8 @@ def groupby_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "A5 — df.describe() block (nb:cell7:30-35); stddev is sample (ddof=1). "
     "The moments and the exact quartiles come from one "
     "stats.exact_quantiles call: a single fused aggregate when the "
-    "column's plan estimate is small, bucket-select joined to the "
-    "moments otherwise.",
+    "column's plan estimate is small, otherwise bucket-select with the "
+    "moments in its 1-row limits aggregate.",
 )
 def describe_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.describe_stats(load_table(spark, sf_dir, "lineitem"), "l_quantity")
@@ -379,8 +379,8 @@ def describe_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "A6 — scalar stats family: mean/median/min/max/sample-std "
     "(nb:cell9:30-34). The moments ride the exact median's "
     "stats.exact_quantiles call: one fused aggregate when the column's "
-    "plan estimate is small, bucket-select joined to the moments "
-    "otherwise.",
+    "plan estimate is small, otherwise bucket-select with the moments "
+    "in its 1-row limits aggregate.",
 )
 def scalar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -414,8 +414,9 @@ def scalar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "A7 — exact percentiles at the reference's cut points (nb:cell9:37-41) "
     "from stats.exact_quantiles: one native percentile aggregate when the "
     "column's plan estimate is small, bucket-select (memory bounded at "
-    "any size) otherwise; the answer is the same either way. "
-    "approx_percentile is the documented 100 TB swap (SURVEY.md §4.3).",
+    "any size) otherwise; the answer is the same either way. The "
+    "approx_percentile sketch is checked separately by "
+    "percentiles_approx.",
 )
 def percentiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.percentiles(

@@ -817,39 +817,37 @@ def approx_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS approx_in_bracket
     FROM lineitem
     """,
-    "The documented 100 TB swap for the exact percentile aggregate "
-    "(operators/stats.py: approx=True): approx_percentile's GK-style "
+    "The approx_percentile sketch next to the exact quartiles: the "
     "sketch is mergeable with bounded memory per partition — no "
-    "per-partition value map, no single-threaded merge. Bounded-"
-    "assertion form (VERDICT r15 #1): the plan computes the sketch "
-    "quartiles AND the exact quartiles (bucket-select path, never a "
-    "full-column buffer), emits the EXACT values plus one boolean "
-    "asserting every sketch value lies inside the exact [p−0.01, "
-    "p+0.01] value bracket. The sketch's rank error at the default "
-    "accuracy is n/10000 ≈ 0.01%·n — two orders inside the ±1%-rank "
-    "bracket — so the boolean is TRUE under ANY partial-merge order "
-    "and the driver can hash-assert the whole row. In the bench "
-    "HEADLINE so the swap stays performance-proven (VERDICT.md r1 #7).",
+    "per-partition value map, no single-threaded merge. The plan "
+    "computes the sketch quartiles AND the exact quartiles "
+    "(stats.exact_percentiles_bucket_select, never a full-column "
+    "buffer) and emits the EXACT values plus one boolean asserting "
+    "every sketch value lies inside the exact [p−0.01, p+0.01] value "
+    "bracket. The sketch and the moments are bucket-select's moments: "
+    "columns of its 1-row limits frame (cnt reads 0 on empty input). "
+    "The sketch's rank error at the default accuracy is n/10000 ≈ "
+    "0.01%·n — two orders inside the ±1%-rank bracket — so the boolean is "
+    "TRUE under ANY partial-merge order and the row can be "
+    "hash-asserted whole.",
 )
 def percentiles_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.stats import _pcts, exact_percentiles_bucket_select
+    from ..operators.stats import _no_nan, exact_percentiles_bucket_select
 
     li = load_table(spark, sf_dir, "lineitem")
-    # moments + GK sketch fused into bucket-select's pass-1 limits
-    # aggregate (extra_scalar_aggs, r16): one fewer full-column pass,
-    # no scalar crossJoin; local wall is floor-dominated (flat), the
-    # pass cut is the at-scale win
+    x = F.col("l_extendedprice")
+    sketch_ps = F.array(*[F.lit(p) for p in (0.25, 0.50, 0.75)])
     fused = exact_percentiles_bucket_select(
         li, "l_extendedprice",
         ps=(0.24, 0.25, 0.26, 0.49, 0.50, 0.51, 0.74, 0.75, 0.76),
         dp=None,
-        extra_scalar_aggs={
-            "cnt": F.count("v"),
-            "mean": F.round(F.avg("v"), 6),
-            "std": F.round(F.stddev_samp("v"), 6),
-            "min": F.round(F.min("v"), 6),
-            "__q": _pcts("v", (0.25, 0.50, 0.75), True),
-            "max": F.round(F.max("v"), 6),
+        moments={
+            "cnt": F.count(x),
+            "mean": F.round(F.avg(x), 6),
+            "std": F.round(F.stddev_samp(x), 6),
+            "min": F.round(F.min(x), 6),
+            "__q": F.percentile_approx(_no_nan("l_extendedprice"), sketch_ps),
+            "max": F.round(F.max(x), 6),
         },
     )
     in_bracket = (
@@ -861,8 +859,7 @@ def percentiles_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.element_at("__q", 3) <= F.col("p76"))
     )
     return fused.select(
-        F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-        "mean", "std", "min",
+        "cnt", "mean", "std", "min",
         F.round(F.col("p25"), 6).alias("p25"),
         F.round(F.col("p50"), 6).alias("p50"),
         F.round(F.col("p75"), 6).alias("p75"),
@@ -4214,10 +4211,11 @@ def ab_test_ztest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "2-D Pareto skyline (cheapest-AND-biggest parts): sort-based "
     "O(n log n), never the O(n²) dominance self-join — per-price max "
-    "agg, then a DISTRIBUTED cumulative max (range shuffle + "
-    "per-partition maxes + driver prefix over one row per partition, "
-    "the sort-rank-percentile pattern; no single-partition global "
-    "window) (operators/stats.py:skyline_2d).",
+    "agg, then an exclusive prefix MAX over the bucketed price order: "
+    "bucket maxima prefixed on the ≤4096-row bucket frame, broadcast "
+    "back, plus a per-bucket window — one lazy plan, no driver "
+    "round-trip, no single-partition window over the data "
+    "(operators/stats.py:skyline_2d).",
 )
 def skyline_pareto_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import skyline_2d

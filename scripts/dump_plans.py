@@ -83,9 +83,9 @@ def main() -> None:
             out.extend(lines)
         else:
             out.append(
-                "(driver-composed result — a multi-pass algorithm ran "
-                "eagerly; see the operator's docstring for its passes, "
-                "e.g. operators/stats.skyline_2d)"
+                "(no plan captured — the result was composed on the "
+                "driver from eagerly run passes; see the operator's "
+                "docstring for them)"
             )
         out.append("```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(

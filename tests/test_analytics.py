@@ -81,6 +81,26 @@ def test_precios(listings):
     assert by_room["Casa/Departamento completo"]["count"] == 4
 
 
+def test_price_quantiles_skip_nan(spark):
+    """NaN is missing in the quantile helpers, as in pandas: on 1..100
+    plus 5 NaN, ``df[df.p <= df.p.quantile(0.99)]`` keeps 99 rows and
+    every median is 50.5. A raw ``percentile``/``median`` aggregate
+    sorts NaN above every value: the q99 threshold turns NaN (keeping
+    all 105 rows) and the median reads 53.0."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(float(i), "Habitación privada") for i in range(1, 101)]
+        + [(nan, "Habitación privada")] * 5,
+        "price_clean double, room_type_normalizado string",
+    )
+    trimmed = an.trim_quantile(df, "price_clean", 0.99).collect()
+    assert len(trimmed) == 99
+    assert max(r["price_clean"] for r in trimmed) == 99.0
+    suite = an.analisis_precios(df)
+    assert suite["stats"].collect()[0]["median_price"] == 50.5
+    assert suite["por_room_type"].collect()[0]["median"] == 50.5
+
+
 def test_reviews_suite(reviews):
     suite = an.analisis_reviews(reviews)
     rng = suite["rango_fechas"].collect()[0]

@@ -152,32 +152,26 @@ _SCALAR_BNLJ_OK: set[str] = {
     "psi_drift",
     "woe_iv",
     "mutual_info",
-    # r8: global_order_prefix's 1-row min/max broadcast (bucket
-    # bounds) — operators/stats.py:global_order_prefix
+    # The bucketed global order (operators/stats.py:_bucketed) bins
+    # every row against the 1-row limits aggregate (finite min/max and
+    # any fused caller aggregates), broadcast: global_order_prefix
+    # (roc_auc_exact, gini_concentration, histogram_equidepth),
+    # bucket-select (percentiles_approx, whose final 1-row × 1-row
+    # crossJoin reads the moments from that same limits frame) and
+    # skyline_2d (skyline_pareto). roc_auc is the quantized twin of
+    # roc_auc_exact.
     "roc_auc",
     "roc_auc_exact",
     "gini_concentration",
-    # r10: percentiles re-registered on the prefix path — the same
-    # global_order_prefix 1-row min/max broadcast, plus the 1-row
-    # row-count broadcast for the k_p rank targets
-    "percentiles",
-    # r11: histogram_equidepth re-registered on the same prefix path —
-    # identical audited pair of 1-row broadcasts (min/max bucket
-    # bounds + total row count for the bin expression)
     "histogram_equidepth",
-    # r13: describe_stats on bucket-select (VERDICT r12 #10) — the
-    # 1-row min/max + total broadcasts plus the 1-row moments ×
-    # 1-row quantiles crossJoin (outliers_iqr was already listed)
-    "describe_stats",
-    # r13: scalar_stats' median moved onto the same bucket-select
-    # path — same 1-row broadcast pattern (mad_robust already listed)
-    "scalar_stats",
-    # r16: percentiles_approx on the bucket-select path — the
-    # operator's own audited 1-row limits broadcast (min/max + the
-    # fused extra_scalar_aggs), the same crossJoin every bucket-select
-    # consumer above carries; the entry's former OUTER 1-row×1-row
-    # crossJoin was removed by the fuse
     "percentiles_approx",
+    "skyline_pareto",
+    # Above NATIVE_QUANTILE_MAX_BYTES the exact-quantile queries plan
+    # bucket-select: the same limits broadcast plus the 1-row moments ×
+    # 1-row quantiles crossJoin (the native branch has no join).
+    "percentiles",
+    "describe_stats",
+    "scalar_stats",
 }
 
 
@@ -275,23 +269,21 @@ _GLOBAL_WINDOW_OK: set[str] = {
     "chi_square_assoc",
     "psi_drift",
     "source_mix_report",
-    # r8: global_order_prefix's bucket-offset window runs over the
-    # ≤4096-row BUCKET-TOTAL frame (operators/stats.py), never the
-    # order axis. These entries get a STRONGER per-window check below
-    # (_BOUNDED_AXIS_WINDOW_OK): a per-query allowlist alone would also
-    # excuse a future regression reintroducing a data-axis global
-    # window inside the same query (ADVICE.md r8 #4).
-    # r12: roc_auc moved OFF the bucket prefix — its quantized score
-    # axis is grid-bounded (~10k rows at any scale), so the prefix is
-    # one plain window over the aggregated axis (stronger per-window
-    # check in _BOUNDED_AXIS_WINDOW_OK below; VERDICT r11 #5)
+    # The bucketed global order's offset window runs over the
+    # ≤4096-row BUCKET-TOTAL frame (operators/stats.py:_bucketed),
+    # never the order axis: global_order_prefix (roc_auc_exact,
+    # gini_concentration, histogram_equidepth) and skyline_2d
+    # (skyline_pareto). These entries get a STRONGER per-window check
+    # below (_BOUNDED_AXIS_WINDOW_OK): a per-query allowlist alone would
+    # also excuse a future regression reintroducing a data-axis global
+    # window inside the same query. roc_auc's quantized score axis is
+    # grid-bounded (~10k rows at any scale), so its prefix is one plain
+    # window over the aggregated axis (same stronger check).
     "roc_auc",
     "roc_auc_exact",
     "gini_concentration",
-    # r11: histogram_equidepth re-registered on the same prefix path —
-    # the same ≤4096-row bucket-total window, same stronger per-window
-    # check below
     "histogram_equidepth",
+    "skyline_pareto",
 }
 
 #: Queries whose ONLY legitimate unpartitioned window is a prefix
@@ -309,6 +301,7 @@ _BOUNDED_AXIS_WINDOW_OK: dict[str, str] = {
     "roc_auc_exact": "__bkt",
     "gini_concentration": "__bkt",
     "histogram_equidepth": "__bkt",
+    "skyline_pareto": "__bkt",
     "roc_auc": "score",
     # r16: total-fold window that sits DIRECTLY on its bounded grouped
     # aggregate ((source, lang) cell axis). woe_iv's fold compiles to
