@@ -46,10 +46,14 @@ def dedup_text_exact(
     document text itself — at 100 TB the shuffle payload must be the
     fingerprint, not the payload column).
 
-    r17 (optimization round, guide §2.3/§2.4): keep-lowest-id is
-    ``min(id) GROUP BY hash`` — only (id, hash) survive, so the
-    row_number window this ran through r16 was a strictly worse plan
-    for the same rows: the window SORTS every partition and ships every
+    Precondition: ``id_col`` holds no NULLs. Keep-lowest-id is
+    ``min(id) GROUP BY hash``, and ``min()`` skips NULL ids, where a
+    ``row_number`` window ordered by id (NULLs first in Spark) would
+    keep them; a hash whose ids are all NULL comes out with a NULL id.
+
+    Keep-lowest-id is an aggregate, not a window: only (id, hash)
+    survive, so a ``row_number`` window would be a strictly worse plan
+    for the same rows. The window SORTS every partition and ships every
     (id, hash) row through the exchange, while the hash aggregate's
     map-side partial min collapses same-task duplicates before the
     shuffle and never sorts. (``dedup_keep_first`` still needs its
@@ -142,8 +146,8 @@ def minhash_signatures(
     dedup, and the estimate column is a signature-agreement rate either
     way).
 
-    Docs with no shingles (fewer than ``shingle_n`` tokens) drop out, the
-    same as the previous ``size(sig) > 0`` filter.
+    Docs with no shingles (fewer than ``shingle_n`` tokens) drop out:
+    the explode emits no row for them, so they never get a signature.
     """
     base = df.select(
         F.col(id_col).alias("id"),
@@ -184,11 +188,11 @@ def minhash_near_dup_pairs(
     ``bands`` bands → hash each band → *equi-join on (band_id,
     band_hash)*. The band join is the LSH trick: only documents agreeing
     on an entire band meet, so the shuffle is O(n·bands), not O(n²).
-    Buckets larger than ``max_bucket`` are dropped (a k-doc bucket emits
-    k²/2 pairs; a degenerate hot bucket — e.g. boilerplate — would
-    otherwise quadratically dominate the job, the LSH equivalent of join
-    skew). Returns distinct candidate pairs (id_a < id_b) with estimated
-    Jaccard (signature agreement rate).
+    Buckets larger than ``max_bucket`` are always dropped (a k-doc
+    bucket emits k²/2 pairs; a degenerate hot bucket — e.g. boilerplate
+    — would otherwise quadratically dominate the job, the LSH equivalent
+    of join skew). Returns distinct candidate pairs (id_a < id_b) with
+    estimated Jaccard (signature agreement rate).
     """
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(
@@ -224,32 +228,30 @@ def minhash_near_dup_pairs(
             )
         ).alias("band"),
     ).select("id", "sig", "band.band_id", "band.band_hash")
-    if max_bucket is not None:
-        # Hot-bucket guard as a count window: ONE shuffle on the band
-        # keys and the signature pipeline runs once. (A broadcast
-        # anti-join against an oversized-buckets aggregate was tried and
-        # measured no faster — and since the broadcast side is its own
-        # plan branch, it recomputes every signature a second time at
-        # scale, where that is the dominant cost.)
-        w = Window.partitionBy("band_id", "band_hash")
-        banded = (
-            banded.withColumn("__bc", F.count(F.lit(1)).over(w))
-            .filter(F.col("__bc") <= max_bucket)
-            .drop("__bc")
-        )
+    # Hot-bucket guard as a count window: ONE shuffle on the band keys
+    # and the signature pipeline runs once. (A broadcast anti-join
+    # against an oversized-buckets aggregate measured no faster — and
+    # since the broadcast side is its own plan branch, it recomputes
+    # every signature a second time at scale, where that is the
+    # dominant cost.)
+    w = Window.partitionBy("band_id", "band_hash")
+    banded = (
+        banded.withColumn("__bc", F.count(F.lit(1)).over(w))
+        .filter(F.col("__bc") <= max_bucket)
+        .drop("__bc")
+    )
 
-    # r17 (optimization round, guide §2.4/§3.1): force the band self-
-    # join to SORT-MERGE. Both sides are the same frame, already hash-
-    # partitioned AND sorted by (band_id, band_hash) — the hot-bucket
-    # window's required distribution — so SMJ adds no exchange and no
-    # sort, while the planner's default broadcast built the ENTIRE
-    # banded frame (O(n·bands) rows — input-sized, 17 MiB at sf0.1,
-    # unboundedly larger at scale) into a driver-collected broadcast:
-    # a scale hazard AND an extra AQE broadcast-build job per consumer
-    # (jobs 8→7 on dedup_minhash, 16→15 on corpus_pipeline; A/B walls
-    # flat-to-better same-phase, r17 notes). A localCheckpoint of the
-    # banded frame was also tried: it removed the duplicate window but
-    # ADDED materialization jobs (16→18) — rejected.
+    # Force the band self-join to SORT-MERGE. Invariant: the hot-bucket
+    # window above always runs, so both sides — the same frame — are
+    # already hash-partitioned AND sorted by (band_id, band_hash), and
+    # SMJ adds no exchange and no sort. The planner's default broadcast
+    # would build the ENTIRE banded frame (O(n·bands) rows — input-
+    # sized, 17 MiB at sf0.1, unboundedly larger at scale) into a
+    # driver-collected broadcast: a scale hazard AND an extra AQE
+    # broadcast-build job per consumer (jobs 8→7 on dedup_minhash,
+    # 16→15 on corpus_pipeline). A localCheckpoint of the banded frame
+    # removes the duplicate window but ADDS materialization jobs
+    # (16→18).
     banded = banded.hint("merge")
     a = banded.alias("a")
     b = banded.alias("b")
@@ -318,15 +320,14 @@ def near_dedup_corpus(
         df, text_col, id_col, num_hashes, bands, shingle_n,
         portable=portable,
     )
-    # r17 (optimization round, guide §2.4): no .distinct() on the
-    # victim ids — LEFT ANTI ignores duplicate build-side keys, so the
-    # dedup aggregate bought nothing semantically and cost an exchange
-    # + two agg stages at every scale (jobs 11→10 here, 14→13 on
-    # corpus_pipeline). The duplicate factor the anti join now ships is
-    # bounded by construction (a doc pairs within its ≤ max_bucket
-    # band buckets, and the pair frame was already dropDuplicates'd on
-    # (id_a, id_b)), and the rows are bare 8-byte ids — cheaper to
-    # ship than to aggregate first.
+    # No .distinct() on the victim ids — LEFT ANTI ignores duplicate
+    # build-side keys, so a dedup aggregate buys nothing semantically
+    # and costs an exchange + two agg stages at every scale (jobs
+    # 11→10 here, 14→13 on corpus_pipeline). The duplicate factor the
+    # anti join ships is bounded by construction (a doc pairs within
+    # its ≤ max_bucket band buckets, and the pair frame was already
+    # dropDuplicates'd on (id_a, id_b)), and the rows are bare 8-byte
+    # ids — cheaper to ship than to aggregate first.
     victims = (
         pairs.filter(F.col("est_jaccard") >= threshold)
         .select(F.col("id_b").alias(id_col))
@@ -459,13 +460,13 @@ def winnowing_fingerprints(
     hash_fn=F.xxhash64,
 ) -> DataFrame:
     """§2.11 — winnowing document fingerprints (Schleimer et al.): hash
-    every POSITIONAL k-gram (duplicates kept — through r8 this ran over
-    the distinct-gram sequence, which breaks the textbook guarantee
-    window and has no order-stable SQL twin), then keep the MINIMUM
-    hash of each sliding window of ``window`` consecutive k-gram
-    hashes; the distinct minima are the document's fingerprint set
-    (guaranteed to share a fingerprint with any document overlapping by
-    ≥ window+k-1 tokens). Returns one row per (id, fingerprint).
+    every POSITIONAL k-gram (duplicates kept — the distinct-gram
+    sequence would break the textbook guarantee window and has no
+    order-stable SQL twin), then keep the MINIMUM hash of each sliding
+    window of ``window`` consecutive k-gram hashes; the distinct minima
+    are the document's fingerprint set (guaranteed to share a
+    fingerprint with any document overlapping by ≥ window+k-1 tokens).
+    Returns one row per (id, fingerprint).
 
     ``hash_fn`` defaults to xxhash64 (production); pass
     :func:`md5_prefix_hash` for the engine-portable form the DuckDB

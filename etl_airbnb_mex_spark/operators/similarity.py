@@ -226,8 +226,7 @@ def ivf_build(
     subsequent probe skips the training pass entirely; centers are
     metadata (k·dim floats). :func:`knn_cosine_ivf` composes this with
     :func:`ivf_probe` for the one-shot form; call them separately to
-    amortize the build over many queries (the r2 verdict's precompute
-    note, now API).
+    amortize the build over many queries.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -358,17 +357,16 @@ def ivf_probe_pinned(
     TakeOrderedAndProject. A probe touches n_probe/n_centroids of the
     corpus regardless of corpus size.
 
-    Contract (ADVICE r10 #2, closed r12): ``query_df`` must hold AT
-    MOST one row — the probe selection and the final top-k are global
-    (orderBy + limit), so a multi-row query frame would silently mix
-    centroid picks and ranked neighbors ACROSS queries. Enforced with
-    a ``take(2)`` guard: > 1 row raises, 0 rows returns an empty
-    result like :func:`ivf_probe`. The collected row then ships as a
-    LITERAL 1-row frame, so the guard's eager pass REPLACES the lazy
-    plan's own evaluation of ``query_df`` (which re-ran per action
-    before r12) — net scans of the query frame are unchanged at one,
-    and the proof-of-singleness is what that one pass buys (review
-    r12). Batch multi-query probing belongs in a ``__qid``-partitioned
+    Contract: ``query_df`` must hold AT MOST one row — the probe
+    selection and the final top-k are global (orderBy + limit), so a
+    multi-row query frame would silently mix centroid picks and ranked
+    neighbors ACROSS queries. Enforced with a ``take(2)`` guard: > 1 row
+    raises, 0 rows returns an empty result like :func:`ivf_probe`. The
+    collected row then ships as a LITERAL 1-row frame, so the guard's
+    eager pass REPLACES the lazy plan's own evaluation of ``query_df``
+    (which would otherwise re-run per action) — net scans of the query
+    frame stay at one, and the proof-of-singleness is what that one pass
+    buys. Batch multi-query probing belongs in a ``__qid``-partitioned
     variant, not in silent cross-query mixing.
     """
     q_rows = query_df.select(
@@ -552,7 +550,7 @@ def cosine_near_dup_bucketed(
     # table it buckets into) instead of once per CANDIDATE PAIR — at
     # occupancy m that is L·n vector-rows shuffled vs Σ m²/2 pair rows
     # each dragging two d-double payloads, and the m²/2 dots run as a
-    # single dgemm instead of per-pair einsum rows (r7: sf0.1 wall
+    # single dgemm instead of per-pair einsum rows (sf0.1 wall
     # 5.2s → 1.5s on the registered 4-bit form). A pair co-bucketing
     # in several tables is computed once per table; max() collapses
     # the duplicates (deterministic — the values differ at most in the
@@ -792,7 +790,7 @@ def cluster_pair_cosines(
     ``<c>_a``/``<c>_b`` for each carry column. ``cos_raw`` is the
     UNROUNDED double cosine: callers apply the engine-side
     ``F.round(..., 6) >= threshold`` cut so the rounding rule is
-    Spark's HALF_UP, identical to the previous pair-join form (numpy
+    Spark's HALF_UP, identical to a per-pair join form (numpy
     rounds half-to-even — rounding in the UDF would diverge from the
     DuckDB oracle at boundaries). The in-UDF pre-filter keeps pairs
     with ``cos_raw >= threshold - 1e-6`` — wider than any 6-dp
@@ -800,13 +798,13 @@ def cluster_pair_cosines(
     keep is lost, and sub-threshold pairs never leave the task.
 
     Defensive: rows whose vector is NULL or off-dimension are dropped
-    inside the task (same NaN-rejection the pair-dot form had).
+    inside the task (the same NaN-rejection a per-pair dot applies).
 
-    ``emit_group_size=True`` (r17, VERDICT r16 #2): the output gains an
-    ``n_members long`` column and every cluster additionally emits ONE
-    sentinel row (``ka``/``kb``/``cos_raw`` NULL, ``n_members`` = the
-    cluster's FULL row count, dropped rows included) — pair rows carry
-    ``n_members`` NULL. A consumer that needs per-cluster member counts
+    ``emit_group_size=True``: the output gains an ``n_members long``
+    column and every cluster additionally emits ONE sentinel row
+    (``ka``/``kb``/``cos_raw`` NULL, ``n_members`` = the cluster's FULL
+    row count, dropped rows included) — pair rows carry ``n_members``
+    NULL. A consumer that needs per-cluster member counts
     (semantic_dedup_clusters) then derives them from this single
     grouped pass instead of aggregating the embeddings frame a second
     time: one FlatMapGroupsInPandas, one scan, and the
@@ -842,7 +840,9 @@ def cluster_pair_cosines(
         import numpy as np
         import pandas as pd
 
-        def finish(out: dict, n_pairs: int, labels) -> "pd.DataFrame":
+        def finish(
+            out: dict, n_rows: int, n_pairs: int, labels
+        ) -> "pd.DataFrame":
             if not emit_group_size:
                 return pd.DataFrame(out, columns=out_cols)
             # sentinel row first: full group size BEFORE the keep
@@ -865,7 +865,7 @@ def cluster_pair_cosines(
         dim = max(dims) if dims else 0
         keep = [i for i, d in enumerate(dims) if d == dim]
         if len(keep) < 2:
-            return finish({}, 0, labels)
+            return finish({}, n_rows, 0, labels)
         pdf = pdf.iloc[keep]
         # id-sort so (i < j) positions == (ka < kb) ids
         pdf = pdf.sort_values(id_col, kind="mergesort")
@@ -886,6 +886,6 @@ def cluster_pair_cosines(
             vals = pdf[c].to_numpy()
             out[f"{c}_a"] = vals[ii]
             out[f"{c}_b"] = vals[jj]
-        return finish(out, len(ii), labels)
+        return finish(out, n_rows, len(ii), labels)
 
     return df.groupBy(*label_cols).applyInPandas(per_cluster, out_schema)

@@ -60,9 +60,10 @@ def shj_local_map_threshold(
     hashmap_expansion: float = 6.0,
 ) -> int:
     """Safe ``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold``
-    for a given executor shape — the formula behind the r11 sf24 OOM
-    fix (VERDICT r11, session conf below; exercised by the q21 SMJ
-    fallback noted in BENCH_SIDECAR.json:bucketed_layout):
+    for a given executor shape — the bound that keeps concurrent
+    shuffled-hash-join builds inside the execution pool (session conf
+    below; exercised by the q21 SMJ fallback noted in
+    BENCH_SIDECAR.json:bucketed_layout):
 
         threshold = heap · execution_fraction / slots / expansion
 
@@ -152,17 +153,16 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(16 * 1024 * 1024))
         # Let AQE demote SortMergeJoin to ShuffledHashJoin when RUNTIME
         # stats show every build-side partition fits a small local hash
-        # map (default 0 disables the rewrite entirely). This is the
-        # r10 fix for the one non-flat q-suite wall: q5's orderkey join
-        # planned SMJ and sorted the full 24M-row lineitem shuffle at
-        # sf4 — measured 7.1 → 3.2 s (q9 3.3 → 2.8 s; q1/q21 unchanged)
-        # with the conversion on. The threshold must be CONCURRENCY-
-        # aware, not just per-partition (r11 hard lesson): the gate
-        # compares COMPRESSED shuffle bytes, the in-memory
+        # map (default 0 disables the rewrite entirely). Without it
+        # q5's orderkey join plans SMJ and sorts the full 24M-row
+        # lineitem shuffle at sf4 — measured 7.1 → 3.2 s (q9 3.3 →
+        # 2.8 s; q1/q21 unchanged) with the conversion on. Invariant:
+        # the threshold is CONCURRENCY-aware, not just per-partition.
+        # The gate compares COMPRESSED shuffle bytes, the in-memory
         # LongToUnsafeRowMap is ~4-6× that, SHJ build sides CANNOT
-        # spill, and all 32 slots build at once — at 64 MiB the r10
-        # setting passed the gate at sf24 (orders build side ≈ 18 MiB
-        # compressed/partition) and died in
+        # spill, and all 32 slots build at once — a 64 MiB setting
+        # passes the gate at sf24 (orders build side ≈ 18 MiB
+        # compressed/partition) and dies in
         # cannotAcquireMemoryToBuildLongHashedRelation: 32 × ~100 MB
         # maps ≈ the whole 8g-heap execution pool. Safe bound =
         # executionPool / slots / expansion ≈ (0.6·8g)/32/6 ≈ 16 MiB;
@@ -184,8 +184,8 @@ def get_spark(
         # layout a production table actually has; the local test tables
         # are ONE compressed parquet file each (sf1 lineitem = 110 MB,
         # 6×1M-row row groups), so at 128 MiB the whole fact scan is a
-        # single task while DuckDB reads row groups on 32 threads — the
-        # r9 join-suite probe measured q1 at 28× DuckDB purely on that
+        # single task while DuckDB reads row groups on 32 threads — a
+        # join-suite probe measured q1 at 28× DuckDB purely on that
         # parallelism floor. 16 MiB splits along row-group boundaries
         # restore the parallelism the same data would have as a real
         # multi-file table; AQE coalesces the extra post-shuffle

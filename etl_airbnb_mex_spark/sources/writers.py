@@ -300,7 +300,7 @@ def write_zordered_parquet(
 def _walk_parquet_files(root: str) -> list[str]:
     """All ``*.parquet`` files under ``root``, recursively — partitioned
     datasets nest files under ``key=value/`` directories, so a flat
-    top-level glob sees nothing there (ADVICE.md r4 #4)."""
+    top-level glob sees nothing there."""
     import os
 
     out: list[str] = []
@@ -324,7 +324,7 @@ def dataset_manifest(spark, path: str) -> DataFrame:
     agg); sizes come from the filesystem listing (driver-side, one
     entry per file — metadata scale by definition). The listing walks
     RECURSIVELY so partitioned/nested layouts report real byte sizes
-    (a flat glob returned n_bytes=0 for them, ADVICE.md r4 #4);
+    (a flat glob would report n_bytes=0 for them);
     spark part-file basenames embed a UUID, so basename keys are
     collision-free across partition directories.
     """

@@ -41,8 +41,8 @@ def table_path(sf_dir: str, name: str) -> str:
 
 #: (sf_dir, table) -> inferred StructType. Without it, EVERY
 #: spark.read.parquet fires a footer/schema-inference Spark job — a
-#: q5-shaped 6-table query paid 6 scheduling round-trips per run
-#: before any real work (r13, the r12 verdict's q5 16-job finding).
+#: q5-shaped 6-table query pays 6 scheduling round-trips per run
+#: before any real work.
 #: Schema is a catalog fact: infer it once per process per table, then
 #: hand it to the reader so the job disappears. On a real deployment
 #: the schema comes from the metastore/table format and this cache is
@@ -52,10 +52,10 @@ def table_path(sf_dir: str, name: str) -> str:
 #: every table, events' NANOS column included). The entry carries the
 #: file's (mtime_ns, size) signature so an in-process regeneration of
 #: the same path with a different schema re-infers instead of silently
-#: reading NULLs through a stale user-supplied schema (ADVICE r13 #2 —
-#: the wiped-.scaledata regen workflow rewrites files in place). The
+#: reading NULLs through a stale user-supplied schema (the
+#: wiped-.scaledata regen workflow rewrites files in place). The
 #: dict is keyed by (sf_dir, name) with the signature stored in the
-#: VALUE (ADVICE r14 #4): a stale signature replaces its entry instead
+#: VALUE: a stale signature replaces its entry instead
 #: of accreting a new key per regeneration, so long regen loops stay
 #: bounded at one entry per table.
 _SCHEMA_CACHE: dict[tuple[str, str], tuple[tuple, "object"]] = {}
@@ -106,8 +106,8 @@ def read_dim_driver_side(
 
     nation/region are catalog-style constants (25/5 rows at any SF);
     queries that only need them to derive literal filters/maps (q5's
-    region→nation prune) were paying two scheduled Spark jobs per run
-    for what is a metadata lookup. pyarrow reads the footer + one tiny
+    region→nation prune) would otherwise pay two scheduled Spark jobs
+    per run for what is a metadata lookup. pyarrow reads the footer + one tiny
     row group in microseconds; if the path is not driver-readable
     (object-store URI on a real deployment without local pyarrow fs
     support) it degrades to the Spark collect it replaces. Only
@@ -150,8 +150,7 @@ def parallelize_scan(
     the small-file/compressed-text regime, the same reason production
     pipelines repartition after reading gzip shards.
 
-    ``cap`` (r16, optimization round): bound the widening below the
-    full shuffle width. Round-robin repartition destroys key locality
+    ``cap`` bounds the widening below the full shuffle width. Round-robin repartition destroys key locality
     for any downstream partial aggregation — EVERY task then builds a
     hash map over (nearly) the full key space, so at full width the
     executor CPU of an agg-dominated pass inflates with the task count
@@ -160,7 +159,7 @@ def parallelize_scan(
     per-row compute dominates (minhash signatures, LSH banding, regex
     scrubbing) want the full width; agg-dominated token-stat passes
     want a small multiple of the split count — measured best at 8 for
-    tfidf_topk (interleaved A/B, OPTIMIZATION_r16.md)."""
+    tfidf_topk (interleaved A/B at sf0.1)."""
     target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if cap is not None:
         target = min(target, cap)

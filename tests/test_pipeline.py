@@ -338,8 +338,9 @@ def test_full_pipeline_run(spark, tmp_path_factory):
 
 
 def test_pipeline_reports_action_metrics(spark, tmp_path_factory):
-    """S12 + §3.1.f — the run report carries per-action metrics
-    (extraction/load/verification wall clocks and plan heads)."""
+    """S12 + §3.1.f — the run report carries one row per Spark action:
+    the load and the verification, with wall clock and row count. No
+    extraction action exists: the write's plan counts extracted rows."""
     from etl_airbnb_mex_spark.plans.pipeline import run_pipeline
 
     tmp = tmp_path_factory.mktemp("etl_metrics")
@@ -350,11 +351,93 @@ def test_pipeline_reports_action_metrics(spark, tmp_path_factory):
         spark, {"reviews": str(tmp / "reviews_raw")}, str(tmp / "out")
     )
     actions = {a["accion"]: a for a in report["acciones"]}
-    assert "extraccion_reviews" in actions
-    assert "carga_reviews" in actions
-    assert "verificacion_reviews" in actions
+    assert "extraccion_reviews" not in actions
+    assert actions["carga_reviews"]["filas"] == 5
     assert actions["verificacion_reviews"]["filas"] == 5
     assert all(a["duracion_ms"] >= 0 for a in report["acciones"])
+
+
+def test_pipeline_counts_rows_in_flight(spark, tmp_path_factory):
+    """One input table costs at most 5 Spark jobs (its write, which
+    counts extracted and transformed rows through observations, and the
+    verify re-read); absent tables cost none. The NULL-key drop and the
+    dedup show as extraidos − transformados, and an existing empty input
+    is still written."""
+    import os
+
+    from etl_airbnb_mex_spark.plans.pipeline import run_pipeline
+    from etl_airbnb_mex_spark.sources.readers import AIRBNB_SCHEMAS
+
+    tmp = tmp_path_factory.mktemp("etl_observed")
+    lst = [make_listing(id=i) for i in range(1, 9)] + [
+        make_listing(id=None), make_listing(id=1, name="DUP should drop"),
+    ]
+    spark.createDataFrame(lst).write.parquet(str(tmp / "listings_raw"))
+    spark.createDataFrame(
+        [make_review(id=None), make_review(id=None, comments="other")],
+        AIRBNB_SCHEMAS["reviews"],
+    ).write.parquet(str(tmp / "reviews_raw"))
+    spark.createDataFrame([], AIRBNB_SCHEMAS["calendar"]).write.parquet(
+        str(tmp / "calendar_raw"))
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run_in_group(group: str, paths: dict[str, str]):
+        sc.setJobGroup(group, group)
+        try:
+            report = run_pipeline(spark, paths, str(tmp / group))
+        finally:
+            sc._jsc.clearJobGroup()
+        # Job starts reach the status tracker through the listener bus.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return report, len(tracker.getJobIdsForGroup(group))
+
+    report, jobs = run_in_group(
+        "one_table", {"listings": str(tmp / "listings_raw")})
+    assert jobs <= 5
+    t = report["tablas"]["listings"]
+    assert (t["extraidos"], t["transformados"], t["cargados"]) == (10, 8, 8)
+    for absent in ("reviews", "calendar"):
+        t = report["tablas"][absent]
+        assert (t["extraidos"], t["transformados"], t["cargados"]) == (0, 0, 0)
+        assert "ruta" not in t
+
+    _, jobs = run_in_group("no_tables", {})
+    assert jobs == 0
+
+    report = run_pipeline(
+        spark,
+        {"reviews": str(tmp / "reviews_raw"),
+         "calendar": str(tmp / "calendar_raw")},
+        str(tmp / "out"),
+    )
+    t = report["tablas"]["reviews"]
+    assert (t["extraidos"], t["transformados"], t["cargados"]) == (2, 0, 0)
+    t = report["tablas"]["calendar"]
+    assert (t["extraidos"], t["transformados"], t["cargados"]) == (0, 0, 0)
+    assert os.path.isdir(t["ruta"])
+
+
+def test_pipeline_rejects_limit_below_one(spark, tmp_path_factory):
+    """A cap below one row is bad input: run_pipeline raises naming the
+    value, and the CLI exits 1 instead of reporting a 0-row success."""
+    from etl_airbnb_mex_spark.cli import main
+    from etl_airbnb_mex_spark.plans.pipeline import run_pipeline
+
+    tmp = tmp_path_factory.mktemp("etl_limit")
+    spark.createDataFrame(
+        [make_review(id=i) for i in range(1, 4)]
+    ).write.parquet(str(tmp / "reviews_raw"))
+    paths = {"reviews": str(tmp / "reviews_raw")}
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match=f"got {bad}"):
+            run_pipeline(spark, paths, str(tmp / "out"), limit=bad)
+    cfg = tmp / "etl.json"
+    cfg.write_text(json.dumps(
+        {"entradas": paths, "salida": str(tmp / "out"), "limite": 0}))
+    assert main(["--config", str(cfg)]) == 1
+    assert not (tmp / "out").exists()
 
 
 def test_quality_report_on_transformed_reviews(reviews_out):
