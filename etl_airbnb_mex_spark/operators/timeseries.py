@@ -1,9 +1,9 @@
 """Time-series / event-window operators (SURVEY.md §2.5 A11–A12, §2.10).
 
-Batch-mode window()/session_window() aggregations are used here — the
-identical expressions run under Structured Streaming in
-``streaming/windows.py`` with watermarks; batch mode is the
-oracle-checkable face of the same operator.
+The event-time windows are batch window()/session_window()
+aggregations over a finished table; the reference has no streaming
+(SURVEY.md §2.10), so there are no watermarks or state. The window
+queries check them against DuckDB.
 """
 
 from __future__ import annotations
@@ -178,8 +178,8 @@ def tumbling_window_agg(
     df: DataFrame, ts_col: str, duration: str = "1 hour",
     group_cols: list[str] | None = None, value_col: str | None = None,
 ) -> DataFrame:
-    """§2.10 — tumbling event-time window aggregation (batch mode; the
-    streaming variant adds withWatermark and runs the same plan)."""
+    """§2.10 — tumbling event-time window aggregation over a batch
+    table: one count (and rounded value sum) per window and group."""
     group_cols = group_cols or []
     aggs = [F.count(F.lit(1)).alias("cnt")]
     if value_col:

@@ -1828,8 +1828,8 @@ def attribution_last_touch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "POWER) — so the z cut and the 4 dp rounding are bit-identical on "
     "both engines. One corpus-sized shuffle (the user_id window); "
     "frames are 7-row, memory O(1) per row; the output sort exchanges "
-    "only the surviving anomaly rows. The streaming twin of this "
-    "shape is ewma_smooth.",
+    "only the surviving anomaly rows. The smoothing query over the "
+    "same per-user event order is ewma_smooth.",
 )
 def rolling_zscore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

@@ -454,7 +454,7 @@ def set_except_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# §2.10 event-time windows (batch face of the streaming operators)
+# §2.10 event-time windows over the batch events table
 # --------------------------------------------------------------------------
 
 @register(
@@ -464,8 +464,8 @@ def set_except_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            event_type, count(*) AS cnt, round(sum(value), 6) AS sum_value
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    "Tumbling event-time window aggregation (batch mode; streaming twin "
-    "adds withWatermark — SURVEY.md §2.10).",
+    "Tumbling event-time window aggregation over the batch events "
+    "table (SURVEY.md §2.10).",
 )
 def window_tumbling_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_window_agg(

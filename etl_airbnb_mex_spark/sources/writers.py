@@ -363,7 +363,7 @@ def compact_parquet(
 ) -> int:
     """Small-file compaction: rewrite a fragmented parquet directory
     into ceil(total_bytes / target) files — the maintenance op that
-    keeps scan task counts sane after streaming/incremental writes
+    keeps scan task counts sane after many small incremental writes
     (thousands of KB-files make a 100 TB scan schedule millions of
     no-op tasks; 128 MiB files match maxPartitionBytes so one task
     reads one file).

@@ -555,12 +555,27 @@ def test_no_container_columns_in_oracle_surface():
 
 
 def test_cited_python_files_exist():
-    """Every ``scripts/*.py`` path and bare ``*.py`` file name cited in
+    """Every ``*.py`` path and bare ``*.py`` file name cited in
     the engine, the tests, README.md or .claude/ names a file in the
-    repo, so deleting a tool cannot leave a dangling citation."""
+    repo, so deleting a module or a tool cannot leave a dangling
+    citation.
+
+    A path whose first directory is ``scripts``, ``tests``,
+    ``perfbench`` or the package resolves from the repo root; one whose
+    first directory is an engine subpackage resolves under the package
+    (a deleted subpackage stays listed, so citing it still fails).
+    ``{a,b}`` brace lists expand. Other paths, such as the reference
+    repo's ``src/*.py``, are out of scope."""
     import re
 
-    scripts = re.compile(r"\bscripts/(\{[\w,]+\}|\w+)\.py\b")
+    pkg = "etl_airbnb_mex_spark"
+    roots = dict.fromkeys(("scripts", "tests", "perfbench", pkg), _REPO)
+    roots.update(dict.fromkeys(
+        ("functions", "multimodal", "operators", "plans", "queries",
+         "sources", "streaming"),
+        _REPO / pkg,
+    ))
+    path = re.compile(r"(?<![\w/-])((?:\w+/)+)(\{[\w,]+\}|\w+)\.py\b")
     bare = re.compile(r"(?<![\w/.{,-])(\w+\.py)\b")
     sources = [_REPO / "README.md"] + [
         p for d in ("etl_airbnb_mex_spark", "tests", ".claude")
@@ -574,10 +589,14 @@ def test_cited_python_files_exist():
     for src in sources:
         text = src.read_text()
         where = src.relative_to(_REPO)
-        for m in scripts.finditer(text):
-            for stem in m.group(1).strip("{}").split(","):
-                if not (_REPO / "scripts" / f"{stem}.py").is_file():
-                    missing.append(f"{where}: {stem}.py in scripts")
+        for m in path.finditer(text):
+            head = m.group(1)
+            root = roots.get(head.split("/", 1)[0])
+            if root is None:
+                continue
+            for stem in m.group(2).strip("{}").split(","):
+                if not (root / head / f"{stem}.py").is_file():
+                    missing.append(f"{where}: {head}{stem}.py")
         missing += [
             f"{where}: {m.group(1)}" for m in bare.finditer(text)
             if m.group(1) not in names
