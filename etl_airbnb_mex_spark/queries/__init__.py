@@ -78,20 +78,17 @@ _PRIORITY: tuple[str, ...] = (
     "bpe_merges",          # r16: gained the unrolled 10-round DuckDB
     #                      trainer oracle — the driver now asserts the
     #                      exact merge sequence
-    "q5_local_supplier_volume",  # VERDICT r15 wrong-#1: its shared
-    #                      _q5_from_frames builder was code-touched in
-    #                      r15 (custkey_first branch) without a fresh
-    #                      driver row — lockstep applied one round late
+    "q5_local_supplier_volume",  # VERDICT r15 wrong-#1: its plan
+    #                      code was touched in r15 without a fresh
+    #                      CORRECTNESS_r* row — lockstep applied one
+    #                      round late
     # -- new entry this round (never driver-checked before):
     #    the IVF build→probe lifecycle, VERDICT r15 #5 --
     "ivf_build_probe",
-    # -- r16 lockstep, second batch (VERDICT r15 #3): the shared
-    #    _q9_from_frames builder gained the cents_encoded path and the
-    #    twin moved onto the cents-encoded li_ok_q9c layout (ratio
-    #    2.08→1.58 at sf24, sidecar q9_twin_ab) — both call sites get
-    #    fresh driver rows the same round --
+    # -- r16 lockstep, second batch (VERDICT r15 #3): q9's plan code
+    #    was touched in r16 — it gets a fresh CORRECTNESS_r* row the
+    #    same round --
     "q9_product_margin",
-    "q9_bucketed",
     # -- the r11-provenance cohort (VERDICT r15 #2): oldest
     #    oracle-bearing entries, none code-touched since r11 --
     "doc_length_band_filter",
@@ -173,6 +170,4 @@ def _load() -> None:
         from . import decision  # noqa: F401
         from . import llmprep  # noqa: F401
         from . import mleval  # noqa: F401
-        from . import bucketed  # noqa: F401  (after decision/extensions:
-        #                        the twins reuse their oracle SQL)
         _loaded = True

@@ -238,49 +238,6 @@ def q3_shipping_priority_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "consumers pay no cluster work at all.",
 )
 def q5_local_supplier_volume_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _q5_from_frames(
-        spark,
-        sf_dir,
-        li=load_table(spark, sf_dir, "lineitem"),
-        o=load_table(spark, sf_dir, "orders"),
-        c=load_table(spark, sf_dir, "customer"),
-        s=load_table(spark, sf_dir, "supplier"),
-    )
-
-
-def _q5_from_frames(
-    spark: SparkSession,
-    sf_dir: str,
-    li: DataFrame,
-    o: DataFrame,
-    c: DataFrame,
-    s: DataFrame,
-    custkey_first: bool = False,
-) -> DataFrame:
-    """The registered q5 plan, parameterized by its SF-scaled input
-    frames so the bucketed-layout twin (queries/bucketed.py,
-    VERDICT r13 #8) executes the IDENTICAL logical plan over a
-    different table layout — layout is an optimization, never a
-    semantics change. ``sf_dir`` is still needed for the driver-side
-    dim resolution (nation/region are spec-bounded catalog constants,
-    never layout candidates).
-
-    ``custkey_first`` (r15, VERDICT r14 #10) flips the join order for
-    the o_ck/c_ck-bucketed layout: orders ⋈ customer on the custkey
-    FIRST (both sides pre-partitioned, exchange-free), then the small
-    orders-cardinality oc stream re-keys to the orderkey to meet the
-    li_ok-bucketed lineitem ⋈ supplier side. Either ordering pays
-    exactly one data-scale exchange — the stream that leaves its key
-    domain — but they differ in WHICH stream: fact-rooted re-keys the
-    joined lineitem stream (~|lineitem| × ASIA × year rows wide of the
-    custkey domain), custkey-first re-keys the filtered oc stream
-    (~|orders| × year × ASIA rows, ≈4x fewer and narrower at any SF).
-    The c_nationkey = s_nationkey locality conjunct moves onto the
-    orderkey join as a residual in this ordering (supplier is not yet
-    joined at the oc stage); the equi-key subset mechanism keeps the
-    bucketed li side exchange-free exactly as it keeps c in the
-    fact-rooted ordering. Result-identical by construction; measured
-    in BENCH_SIDECAR.json:q5_order_ab."""
     # Metadata-scale eager step: nation/region are fixed 25/5-row
     # tables at every SF (TPC-H spec) — resolving the pruned dim
     # driver-side (zero Spark jobs, pyarrow footer read) removes the
@@ -311,41 +268,31 @@ def _q5_from_frames(
         # make the result empty; the name column must still be a plain
         # typed literal (indexing a non-map literal fails analysis)
         name_expr = F.lit(None).cast("string")
-    c = c.select(
+    c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     ).filter(F.col("c_nationkey").isin(asia_keys))
-    o = o.filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
-    li = li.select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    s = s.select(
+    s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey"
     ).filter(F.col("s_nationkey").isin(asia_keys))
     rev_e4 = F.round(F.col("l_extendedprice") * 100).cast("long") * (
         F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
     )
-    if custkey_first:
-        oc = o.join(c, F.col("o_custkey") == c["c_custkey"]).select(
-            "o_orderkey", "c_nationkey"
-        )
-        joined = li.join(s, F.col("l_suppkey") == s["s_suppkey"]).join(
-            oc,
-            (F.col("l_orderkey") == F.col("o_orderkey"))
+    joined = (
+        li.join(s, F.col("l_suppkey") == s["s_suppkey"])
+        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(
+            c,
+            (F.col("o_custkey") == c["c_custkey"])
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-    else:
-        joined = (
-            li.join(s, F.col("l_suppkey") == s["s_suppkey"])
-            .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(
-                c,
-                (F.col("o_custkey") == c["c_custkey"])
-                & (F.col("c_nationkey") == F.col("s_nationkey")),
-            )
-        )
+    )
     return (
         joined
         .groupBy("s_nationkey")
@@ -942,70 +889,32 @@ def q6_forecast_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per (nation, year), decimal swap documented at q1.",
 )
 def q9_product_margin_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _q9_from_frames(
-        li=load_table(spark, sf_dir, "lineitem"),
-        o=load_table(spark, sf_dir, "orders"),
-        s=load_table(spark, sf_dir, "supplier"),
-        n=F.broadcast(
-            load_table(spark, sf_dir, "nation").select(
-                "n_nationkey", "n_name"
-            )
-        ),
-        p=F.broadcast(
-            load_table(spark, sf_dir, "part")
-            .filter(F.col("p_type") == "ECONOMY")
-            .select("p_partkey", "p_retailprice")
-        ),
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_partkey",
+        "l_quantity", "l_extendedprice", "l_discount",
     )
-
-
-def _q9_from_frames(
-    li: DataFrame, o: DataFrame, s: DataFrame, n: DataFrame, p: DataFrame,
-    cents_encoded: bool = False,
-) -> DataFrame:
-    """The registered q9 plan, parameterized by its input frames so the
-    plain entry and the bucketed twin execute the IDENTICAL logical
-    plan over a different table layout. ``n`` and ``p`` arrive
-    pre-filtered/projected and pre-hinted — both callers broadcast them
-    (nation is spec-bounded; ECONOMY part is ~1/6 of an SF-scaled dim).
-
-    ``cents_encoded=True`` (r16, VERDICT r15 #3): ``li`` carries the
-    margin inputs PRE-ENCODED as integer cents (``l_eprice_e2`` /
-    ``l_disc_e2`` / ``l_qty`` longs, written by the ``li_ok_q9c``
-    layout with the IDENTICAL round()+cast chain this builder applies
-    per scan when False) — the per-row expression drops three
-    round()+cast chains and the scan decodes delta-packed longs
-    instead of doubles. Bit-identical results by construction (same
-    integer arithmetic, moved from read time to write time); the join
-    / agg tail below is shared verbatim so the two paths cannot
-    drift. Measured sf24/sf32: −24 % executor CPU vs the full-width
-    twin (sidecar q9_twin_ab)."""
-    if cents_encoded:
-        li = li.select(
-            "l_orderkey", "l_suppkey", "l_partkey",
-            "l_eprice_e2", "l_disc_e2", "l_qty",
-        )
-        margin_e4 = (
-            F.col("l_eprice_e2")
-            * (F.lit(100) - F.col("l_disc_e2"))
-            - F.col("l_qty")
-            * F.round(F.col("p_retailprice") * 100).cast("long")
-            * F.lit(100)
-        )
-    else:
-        li = li.select(
-            "l_orderkey", "l_suppkey", "l_partkey",
-            "l_quantity", "l_extendedprice", "l_discount",
-        )
-        margin_e4 = (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            - F.round(F.col("l_quantity")).cast("long")
-            * F.round(F.col("p_retailprice") * 100).cast("long")
-            * F.lit(100)
-        )
-    o = o.select("o_orderkey", "o_orderdate")
-    s = s.select("s_suppkey", "s_nationkey")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate"
+    )
+    s = load_table(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_nationkey"
+    )
+    # nation is spec-bounded; ECONOMY part is ~1/6 of an SF-scaled dim
+    n = F.broadcast(
+        load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    )
+    p = F.broadcast(
+        load_table(spark, sf_dir, "part")
+        .filter(F.col("p_type") == "ECONOMY")
+        .select("p_partkey", "p_retailprice")
+    )
+    margin_e4 = (
+        F.round(F.col("l_extendedprice") * 100).cast("long")
+        * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
+        - F.round(F.col("l_quantity")).cast("long")
+        * F.round(F.col("p_retailprice") * 100).cast("long")
+        * F.lit(100)
+    )
     # r13: the margin expression is computed IMMEDIATELY after the
     # (broadcast) part join, so the big orderkey exchange carries one
     # long instead of the four numeric inputs (24 B vs 48 B rows,
@@ -1187,22 +1096,12 @@ def q20_excess_shipments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ok-keyed exchange themselves — AQE picks per actual size).",
 )
 def q21_waiting_suppliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _q21_from_frames(
-        li=load_table(spark, sf_dir, "lineitem"),
-        o=load_table(spark, sf_dir, "orders"),
-        s=load_table(spark, sf_dir, "supplier"),
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_shipdate"
     )
-
-
-def _q21_from_frames(
-    li: DataFrame, o: DataFrame, s: DataFrame
-) -> DataFrame:
-    """The registered q21 plan, parameterized by input frames for the
-    bucketed-layout twin (queries/bucketed.py, VERDICT r13 #8): with
-    lineitem and orders co-bucketed on the orderkey the equi-join AND
-    both orderkey-clustered aggregations run exchange-free."""
-    li = li.select("l_orderkey", "l_suppkey", "l_shipdate")
-    o = o.select("o_orderkey", "o_orderdate")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate"
+    )
     late = F.when(
         F.col("l_shipdate")
         > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS"),
@@ -1225,7 +1124,9 @@ def _q21_from_frames(
         )
         .filter((F.col("__n") > 1) & (F.col("__nlate") == 1))
     )
-    s = F.broadcast(s.select("s_suppkey", "s_name"))
+    s = F.broadcast(
+        load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    )
     return (
         per_order.join(s, F.col("__late_sk") == F.col("s_suppkey"))
         .groupBy("s_name")

@@ -93,20 +93,8 @@ TS_FMT = "%Y-%m-%d %H:%M:%S"
     "~SF 10^5 per segment, decimal swap documented at q1.",
 )
 def join_inner_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _join_inner_fk_from_frames(
-        o=load_table(spark, sf_dir, "orders"),
-        c=load_table(spark, sf_dir, "customer"),
-    )
-
-
-def _join_inner_fk_from_frames(o: DataFrame, c: DataFrame) -> DataFrame:
-    """The registered join_inner_fk plan, parameterized by input
-    frames for the bucketed-layout twin (queries/bucketed.py, VERDICT
-    r13 #8): with orders bucketed on o_custkey the partial agg needs
-    no exchange, and with customer co-bucketed on c_custkey neither
-    does the join — the bucketed run drops BOTH data-scale exchanges
-    (measured 6->2 at sf4, BENCH_SIDECAR.json:bucketed_layout)."""
-    c = c.hint("SHUFFLE_HASH")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").hint("SHUFFLE_HASH")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     per_cust = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("__cnt"),

@@ -62,8 +62,8 @@ def shj_local_map_threshold(
     """Safe ``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold``
     for a given executor shape — the bound that keeps concurrent
     shuffled-hash-join builds inside the execution pool (session conf
-    below; exercised by the q21 SMJ fallback noted in
-    BENCH_SIDECAR.json:bucketed_layout):
+    below). A build side above the threshold stays a sort-merge join,
+    which spills instead of holding an unspillable hash map:
 
         threshold = heap · execution_fraction / slots / expansion
 
@@ -193,7 +193,10 @@ def get_spark(
         # On a real 100 TB cluster, set 128m+ via spark-submit (inputs
         # arrive as thousands of files; this knob stops mattering).
         .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
-        # Managed-table warehouse (bucketed tables): keep out of the repo.
+        # Catalog warehouse: the in-memory catalog makes its default-
+        # database directory here the first time the catalog is touched
+        # (``spark.catalog.listTables()``); without this conf that is
+        # ./spark-warehouse in the caller's working directory.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

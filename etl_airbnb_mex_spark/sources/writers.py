@@ -389,56 +389,3 @@ def compact_parquet(
         .parquet(dst_path)
     )
     return len(_walk_parquet_files(dst_path))
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: tuple[str, ...],
-    n_buckets: int = 16,
-    sort_cols: tuple[str, ...] | None = None,
-    path: str | None = None,
-) -> None:
-    """S7 extension — hash-BUCKETED (and optionally sorted) table
-    layout: the shuffle-elimination story for recurring joins and
-    aggregations at 100 TB. Two tables written with ``bucketBy(n, k)``
-    on their join key (same n) join with NO Exchange on either side —
-    the bucket id IS the partitioning, established once at write time
-    and reused by every subsequent join/groupBy on that key; adding
-    ``sortBy(k)`` also removes the sort-merge join's per-task Sort
-    (read side: one file per bucket — guaranteed by the repartition
-    below — plus ``spark.sql.legacy.bucketedTableScan.outputOrdering``
-    = true, which Spark 3+ keeps off by default).
-    ``tests/test_writers.py::test_bucketed_join_has_no_exchange``
-    asserts both properties against the physical plan, with a
-    non-bucketed control join proving the assertion bites.
-
-    Complements the other layout writers: range-clustering
-    (``write_clustered_parquet``) and Z-order (``write_zordered_
-    parquet``) optimize SCAN pruning; bucketing optimizes JOIN/AGG
-    exchange elimination. Bucketed layout requires the table catalog
-    (``saveAsTable`` — bucket metadata lives in the metastore, plain
-    ``parquet(path)`` cannot record it); pass ``path`` for an
-    external-table location.
-
-    ``n_buckets`` is a layout-time commitment: choose it for the
-    TARGET scale (e.g. 100 TB / n_buckets ≈ a task's working set) —
-    both join sides must agree on it.
-    """
-    # One writing task per bucket → exactly one file per bucket. This
-    # both bounds file count (a w-task write would emit w×n files) and
-    # is the precondition for SORT elision at read time: Spark trusts
-    # sortBy metadata only when a bucket is a single file (multi-file
-    # buckets would need a merge, so the scan reports unsorted).
-    cols = [F.col(c) for c in bucket_cols]
-    writer = (
-        df.repartition(n_buckets, *cols)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(name)

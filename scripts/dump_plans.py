@@ -48,8 +48,7 @@ HEADLINE = (
     "heavy_hitters_sketch", "activity_streaks", "golden_record_merge",
     "lang_id_ngram", "roc_auc", "psi_drift", "woe_iv",
     "calibration_bins", "feature_hashing", "mutual_info",
-    "histogram_equidepth", "join_inner_fk_bucketed", "q21_bucketed",
-    "q5_bucketed", "q9_bucketed",
+    "histogram_equidepth",
 )
 
 

@@ -397,7 +397,7 @@ def test_bool_encode_total_binary(spark, raw):
 
 
 # ---------------------------------------------------------------------------
-# Skew + bucketing posture (SURVEY.md §4.3)
+# Skew posture (SURVEY.md §4.3)
 # ---------------------------------------------------------------------------
 
 def test_salted_join_matches_plain_join(spark, sf_dir):
@@ -416,38 +416,6 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
     assert sorted(map(tuple, salted.collect())) == sorted(
         map(tuple, plain.collect())
     )
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key join with ZERO Exchange — the
-    write-once/join-many posture for 100 TB fact-fact joins."""
-    from etl_airbnb_mex_spark.sources.writers import write_bucketed_table
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    write_bucketed_table(
-        o, "b_orders", ("o_custkey",), 8, ("o_custkey",),
-        path=str(tmp_path / "b_orders"),
-    )
-    write_bucketed_table(
-        c, "b_customer", ("c_custkey",), 8, ("c_custkey",),
-        path=str(tmp_path / "b_customer"),
-    )
-    bo, bc = spark.table("b_orders"), spark.table("b_customer")
-    # hint('merge'): the fact-fact regime this posture exists for — at
-    # test scale the planner would otherwise broadcast the small side
-    # (and mark the bucketed scan unused).
-    joined = (
-        bo.hint("merge")
-        .join(bc.hint("merge"), bo["o_custkey"] == bc["c_custkey"])
-        .select("o_orderkey", "c_name")
-    )
-    plan = _formatted_plan(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan
-    # and it actually runs correctly
-    expected = o.join(c, o["o_custkey"] == c["c_custkey"]).count()
-    assert joined.count() == expected
 
 
 def test_asof_join_is_single_shuffle(spark, sf_dir):

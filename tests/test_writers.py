@@ -205,69 +205,3 @@ def test_compaction_and_manifest(spark, sf_dir, tmp_path):
                         target_file_bytes=1 << 30)  # everything fits one
     assert n == 1
     assert spark.read.parquet(compacted).count() == total_rows
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Co-located bucketed join: two tables bucketed on the join key
-    with the same bucket count join with NO Exchange (and, having been
-    sortBy'd, no per-task Sort for the SMJ). A non-bucketed control
-    join over the same data must show an Exchange — proving the
-    assertion isn't vacuous."""
-    from etl_airbnb_mex_spark.sources.writers import write_bucketed_table
-    from etl_airbnb_mex_spark.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    write_bucketed_table(
-        orders, "t_orders_b", ("o_custkey",), 8, ("o_custkey",),
-        path=str(tmp_path / "orders_b"),
-    )
-    write_bucketed_table(
-        cust, "t_cust_b", ("c_custkey",), 8, ("c_custkey",),
-        path=str(tmp_path / "cust_b"),
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # Sort elision from sortBy metadata is behind a legacy flag since
-    # Spark 3.0 (one-file-per-bucket scans report ordering only when
-    # it is on); Exchange elimination needs no flag.
-    spark.conf.set(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-    )
-    try:
-        ob = spark.table("t_orders_b")
-        cb = spark.table("t_cust_b")
-        joined = ob.join(
-            cb, ob["o_custkey"] == cb["c_custkey"]
-        )
-        plan = joined._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("simple")
-        )
-        assert "Exchange" not in plan, plan
-        # sortBy removed the SMJ's per-task sort ("Sort [" is the
-        # operator node; plain "Sort" would also match SortMergeJoin)
-        assert "Sort [" not in plan, plan
-
-        control = orders.join(
-            cust, orders["o_custkey"] == cust["c_custkey"]
-        )
-        control_plan = control._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("simple")
-        )
-        assert "Exchange" in control_plan
-
-        # correctness: bucketed result identical to the plain join
-        assert joined.count() == control.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "false"
-        )
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_cust_b")
