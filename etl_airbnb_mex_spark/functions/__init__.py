@@ -33,13 +33,11 @@ from .text import (
     tokenize,
 )
 from .arrays import (
-    amenity_flag,
     clean_string_array,
     parse_string_array,
 )
 
 __all__ = [
-    "amenity_flag",
     "bool_encode",
     "bool_encode_narrow",
     "clean_price",

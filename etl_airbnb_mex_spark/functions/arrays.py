@@ -52,26 +52,6 @@ AMENITY_NAMES = (
 )
 
 
-def amenity_flag(arr: Column | str, name: str) -> Column:
-    """F21 — 1 if any array element case-insensitively *contains* the
-    amenity name as a substring, else 0. NULL arrays flag 0, matching
-    both the reference (missing amenities → all-zero flags,
-    src/transformacion.py:169-183) and :func:`amenity_flags_packed`.
-
-    Single-flag form. For the 10-flag batch use
-    :func:`amenity_flags_packed`: evaluating ``exists`` per flag
-    re-evaluates the (expensive, non-codegen) array-parse expression per
-    flag — measured 11× slower at sf0.1.
-    """
-    needle = name.lower()
-    return F.coalesce(
-        F.exists(
-            _col(arr), lambda x: F.contains(F.lower(x), F.lit(needle))
-        ).cast("int"),
-        F.lit(0),
-    )
-
-
 #: Join separator for packed containment checks: a control char that the
 #: needles never contain, so a needle cannot falsely span two elements.
 _SEP = chr(1)
@@ -80,11 +60,17 @@ _SEP = chr(1)
 def amenity_flags_packed(
     arr: Column | str, names: tuple[str, ...] = AMENITY_NAMES
 ) -> list[Column]:
-    """F21, all flags in one pass: join the lowered elements with an
-    unmatchable separator and run plain ``contains`` per needle. The
-    joined-string subtree is IDENTICAL across all flags, so Spark's
-    subexpression elimination evaluates the parse/join once (per-flag
-    ``exists`` defeats CSE — higher-order functions don't share).
+    """F21, all flags in one pass: flag ``amenity_<name>`` is 1 if any
+    array element case-insensitively *contains* the name as a
+    substring, else 0. NULL arrays flag 0, matching the reference
+    (missing amenities → all-zero flags, src/transformacion.py:169-183).
+
+    Join the lowered elements with an unmatchable separator and run
+    plain ``contains`` per needle. The joined-string subtree is
+    IDENTICAL across all flags, so Spark's subexpression elimination
+    evaluates the parse/join once. A per-flag ``exists`` defeats CSE
+    (higher-order functions don't share) and re-evaluates the
+    non-codegen array parse per flag — measured 11× slower at sf0.1.
     Equivalent semantics: needle ⊆ some element ⇔ needle ⊆ joined
     string, since needles contain no separator.
     """

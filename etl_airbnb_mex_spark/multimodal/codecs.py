@@ -1,6 +1,6 @@
 """Real media codecs from the standard library + numpy — no PIL/libav.
 
-This container has no image/audio packages, so the decodable surface is
+The engine ships no image packages, so the decodable surface is
 the set of formats whose wire format is pure stdlib work:
 
 - **PNG** (``\\x89PNG``): zlib-inflate the IDAT stream, undo per-scanline
@@ -11,14 +11,12 @@ the set of formats whose wire format is pure stdlib work:
 - **BMP** (``BM``): uncompressed 24-bit BI_RGB, bottom-up, 4-byte row
   padding.
 - **PGM/PPM** (``P5``/``P6``): binary netpbm, maxval ≤ 255.
-- **WAV** (``RIFF``): stdlib ``wave`` — 8/16/32-bit PCM to float
-  samples.
 
 Everything is deterministic byte math — decoders are exact, not
 approximations — so the Spark-side multimodal operators
 (:mod:`etl_airbnb_mex_spark.multimodal.ops`) run a REAL codec path for
-these formats and keep the clearly-marked ``FAKEMEDIA1`` fallback for
-formats that genuinely need a native library (JPEG, H.264, ...).
+these formats and raise on formats that genuinely need a native
+library (JPEG, H.264, ...).
 
 Scale note: these run inside Arrow-batched ``mapInPandas`` workers; the
 hot loop is numpy slicing per image, and the only per-row Python is the
@@ -211,55 +209,6 @@ def pnm_decode(data: bytes) -> np.ndarray:
 
 
 # --------------------------------------------------------------------------
-# WAV (PCM)
-# --------------------------------------------------------------------------
-
-
-def wav_decode(data: bytes) -> tuple[np.ndarray, int]:
-    """Decode PCM WAV bytes → (samples (n, channels) float64 in [-1, 1],
-    sample_rate) via the stdlib ``wave`` module."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(data), "rb") as wf:
-        n = wf.getnframes()
-        width = wf.getsampwidth()
-        channels = wf.getnchannels()
-        rate = wf.getframerate()
-        raw = wf.readframes(n)
-    if width == 2:
-        arr = np.frombuffer(raw, np.int16).astype(np.float64) / 32768.0
-    elif width == 1:
-        arr = (np.frombuffer(raw, np.uint8).astype(np.float64) - 128.0) / 128.0
-    elif width == 4:
-        arr = np.frombuffer(raw, np.int32).astype(np.float64) / 2147483648.0
-    else:
-        raise ValueError(f"unsupported WAV sample width {width}")
-    return arr.reshape(-1, channels), rate
-
-
-def wav_encode(
-    samples: np.ndarray, sample_rate: int = 16000
-) -> bytes:
-    """Encode float samples in [-1, 1] (n,) or (n, channels) to 16-bit
-    PCM WAV bytes."""
-    import io
-    import wave
-
-    arr = np.asarray(samples, dtype=np.float64)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    pcm = np.clip(np.round(arr * 32767.0), -32768, 32767).astype(np.int16)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(arr.shape[1])
-        wf.setsampwidth(2)
-        wf.setframerate(sample_rate)
-        wf.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
-# --------------------------------------------------------------------------
 # Resize (nearest-neighbor — exact integer math, no resample kernel)
 # --------------------------------------------------------------------------
 
@@ -281,6 +230,4 @@ def sniff_format(data: bytes) -> str | None:
         return "bmp"
     if data[:2] in (b"P5", b"P6"):
         return "pnm"
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        return "wav"
     return None

@@ -1,36 +1,32 @@
 """Multimodal operators (north star §2.11 'multimodal columns').
 
 Model: media rows are ``(media_id, kind, data binary, meta struct)`` —
-the payload is opaque to Spark SQL; decode / feature-extraction / resize
-/ frame-sampling run as Arrow-batched pandas transforms via
+the payload is opaque to Spark SQL; the image perceptual hash and the
+video frame dedup run as Arrow-batched pandas transforms via
 ``mapInPandas`` so the binary never round-trips through Python row by
-row and the operator parallelizes per input partition.
+row and the operator parallelizes per input partition. Near-duplicate
+pairing then rides plain DataFrame ops on the 64-bit hashes.
 
-CODECS: PNG / BMP / PGM / PPM / WAV decode (and PNG/WAV encode +
-nearest-neighbor resize) are REAL, implemented from the wire formats
-with stdlib zlib/struct/wave + numpy (:mod:`.codecs`) — no PIL/libav in
-this container, none needed for these formats. Formats that genuinely
-require a native library (JPEG, H.264, ...) raise NotImplementedError
-from the same dispatch point, and the deterministic ``FAKEMEDIA1``
-payload remains as a codec-free test fixture. Everything Spark-side —
-schema, partitioning, UDF signatures, Arrow batch shape, explode
-semantics — is shared by all formats; adding a JPEG decoder is one
-dispatch-table entry.
+CODECS: PNG / BMP / PGM / PPM decode (and PNG encode + nearest-neighbor
+resize) are REAL, implemented from the wire formats with stdlib
+zlib/struct + numpy (:mod:`.codecs`) — no PIL/libav needed for these
+formats. Formats that genuinely require a native library (JPEG, H.264,
+...) raise NotImplementedError from the one dispatch point in
+``_dhash_bytes``; video is the length-prefixed PNGSEQ1 container of
+PNG frames. Adding a JPEG decoder is one dispatch entry.
 
 Scale notes: batches are bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set to a small value
 for fat binaries); repartition on media_id upstream if payload sizes are
-skewed. Features come back as plain ``array<double>`` columns feeding
-the similarity-search operators (operators.similarity).
+skewed.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,195 +53,6 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
-
-_FAKE_MAGIC = b"FAKEMEDIA1"
-
-
-def _fake_payload(media_id: int, n: int = 64) -> bytes:
-    """Deterministic pseudo-payload: sha256 counter stream (no RNG)."""
-    out = b""
-    counter = 0
-    while len(out) < n:
-        out += hashlib.sha256(f"{media_id}:{counter}".encode()).digest()
-        counter += 1
-    return _FAKE_MAGIC + out[: n]
-
-
-def make_fake_media(spark: SparkSession, n: int = 30) -> DataFrame:
-    """Deterministic fake media table for tests/demos (kinds cycle
-    image/audio/video; payload sized by kind)."""
-    kinds = ("image", "audio", "video")
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        meta = {
-            "image": (32, 24, None, 1, "fake-img"),
-            "audio": (None, None, 16000, None, "fake-pcm"),
-            "video": (16, 12, None, 8, "fake-vid"),
-        }[kind]
-        rows.append((i, kind, _fake_payload(i, 64 + 16 * (i % 5)), meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def _decode_payload(data: bytes) -> list[float]:
-    """Codec dispatch. REAL stdlib decoders cover PNG / BMP / PGM / PPM
-    / WAV (:mod:`etl_airbnb_mex_spark.multimodal.codecs` — exact byte
-    math, no PIL/libav needed); the deterministic ``FAKEMEDIA1`` stub
-    remains for test fixtures; anything else (JPEG, H.264, ...) raises
-    like a real decoder missing its codec would — those formats
-    genuinely need a native library this container doesn't ship."""
-    from . import codecs
-
-    if data is None:
-        raise NotImplementedError("NULL media payload")
-    raw = bytes(data)
-    fmt = codecs.sniff_format(raw)
-    if fmt == "png":
-        return [float(x) for x in codecs.png_decode(raw).ravel()]
-    if fmt == "bmp":
-        return [float(x) for x in codecs.bmp_decode(raw).ravel()]
-    if fmt == "pnm":
-        return [float(x) for x in codecs.pnm_decode(raw).ravel()]
-    if fmt == "wav":
-        samples, _rate = codecs.wav_decode(raw)
-        return [float(x) for x in samples.ravel()]
-    if raw.startswith(_FAKE_MAGIC):
-        return [float(b) for b in raw[len(_FAKE_MAGIC):]]
-    raise NotImplementedError(
-        "no codec for this payload (supported here: PNG, BMP, PGM/PPM, "
-        "WAV PCM, FAKEMEDIA1; JPEG/video need a native library)"
-    )
-
-
-_DECODED_SCHEMA = (
-    "media_id bigint, kind string, n_bytes int, pixels array<double>"
-)
-
-
-def decode_media(df: DataFrame) -> DataFrame:
-    """Decode the binary payload into a numeric array column
-    (mapInPandas: one Arrow batch in, one out; binary stays columnar)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["data"].map(
-                        lambda d: len(bytes(d)) if d is not None else 0
-                    ),
-                    "pixels": pdf["data"].map(_decode_payload),
-                }
-            )
-
-    return df.mapInPandas(batches, _DECODED_SCHEMA)
-
-
-_FEATURES_SCHEMA = "media_id bigint, kind string, features array<double>"
-
-
-def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
-    """Fixed-dim feature vector per media row: chunked byte means over
-    the decoded payload (vectorized numpy inside the Arrow batch). The
-    output feeds operators.similarity.knn_cosine directly."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def feat(data) -> list[float]:
-            px = np.asarray(_decode_payload(data), dtype="float64")
-            chunks = np.array_split(px, dim)
-            return [float(c.mean()) if len(c) else 0.0 for c in chunks]
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "features": pdf["data"].map(feat),
-                }
-            )
-
-    return df.mapInPandas(batches, _FEATURES_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize images to (width, height). For REAL image payloads (PNG /
-    BMP / PGM / PPM) the pixels are actually resampled —
-    nearest-neighbor via :func:`codecs.resize_nearest` — and re-encoded
-    as PNG; ``FAKEMEDIA1`` fixtures pass their payload through
-    unchanged (no pixel grid to resample). Undecodable formats raise,
-    like every codec op here.
-
-    Returns (media_id, data, meta with width/height replaced)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from . import codecs
-
-        def resample(data) -> bytes:
-            raw = bytes(data)
-            fmt = codecs.sniff_format(raw)
-            if fmt in ("png", "bmp", "pnm"):
-                img = {
-                    "png": codecs.png_decode,
-                    "bmp": codecs.bmp_decode,
-                    "pnm": codecs.pnm_decode,
-                }[fmt](raw)
-                return codecs.png_encode(
-                    codecs.resize_nearest(img, width, height)
-                )
-            _decode_payload(raw)  # raises on undecodable formats
-            return raw
-
-        for pdf in it:
-            data = pdf["data"].map(resample)
-            meta = pdf["meta"].map(
-                lambda m: {**m, "width": width, "height": height}
-            )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "data": data, "meta": meta}
-            )
-
-    schema = T.StructType(
-        [f for f in MEDIA_SCHEMA.fields if f.name in ("media_id", "data", "meta")]
-    )
-    return df.filter(df["kind"] == "image").mapInPandas(batches, schema)
-
-
-_FRAMES_SCHEMA = "media_id bigint, frame_no int, frame array<double>"
-
-
-def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Video frame sampling: one output ROW per kept frame (table-valued
-    shape — mapInPandas naturally emits more rows than it consumes).
-    Frames = equal slices of the decoded payload by meta.n_frames."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            out_ids, out_nos, out_frames = [], [], []
-            for _, row in pdf.iterrows():
-                n_frames = int(row["meta"]["n_frames"] or 1)
-                px = np.asarray(_decode_payload(row["data"]), dtype="float64")
-                for frame_no, frame in enumerate(np.array_split(px, n_frames)):
-                    if frame_no % every_n == 0:
-                        out_ids.append(row["media_id"])
-                        out_nos.append(frame_no)
-                        out_frames.append([float(x) for x in frame])
-            yield pd.DataFrame(
-                {"media_id": out_ids, "frame_no": out_nos, "frame": out_frames}
-            )
-
-    return df.filter(df["kind"] == "video").mapInPandas(batches, _FRAMES_SCHEMA)
-
 
 _DHASH_SCHEMA = "media_id bigint, dhash bigint"
 
@@ -375,209 +182,6 @@ def image_near_dup_pairs(
     )
 
 
-_AUDIO_FEAT_SCHEMA = (
-    "media_id bigint, rms double, zero_cross_rate double, "
-    "spectral_centroid_hz double"
-)
-
-
-def audio_features(df: DataFrame) -> DataFrame:
-    """Per-clip audio descriptors from REAL WAV payloads: RMS level,
-    zero-crossing rate, and spectral centroid (magnitude-weighted mean
-    FFT frequency) — the screening features an audio-corpus pipeline
-    gates on (silence / clipping / noise detection) before expensive
-    transcription. Vectorized numpy inside Arrow batches; FAKEMEDIA
-    fixtures are treated as raw 8-bit samples at a nominal rate."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from . import codecs
-
-        def feats(data):
-            raw = bytes(data)
-            if codecs.sniff_format(raw) == "wav":
-                samples, rate = codecs.wav_decode(raw)
-                x = samples.astype("float64").ravel()
-            else:
-                x = np.asarray(_decode_payload(raw), dtype="float64")
-                x = x - x.mean()
-                rate = 16000
-            n = len(x)
-            if n == 0:
-                return 0.0, 0.0, 0.0
-            rms = float(np.sqrt(np.mean(x * x)))
-            zc = float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
-            mag = np.abs(np.fft.rfft(x))
-            freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-            tot = mag.sum()
-            cent = float((freqs * mag).sum() / tot) if tot > 0 else 0.0
-            return rms, zc, cent
-
-        for pdf in it:
-            out = pdf["data"].map(feats)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "rms": out.map(lambda t: t[0]),
-                    "zero_cross_rate": out.map(lambda t: t[1]),
-                    "spectral_centroid_hz": out.map(lambda t: t[2]),
-                }
-            )
-
-    return df.filter(df["kind"] == "audio").mapInPandas(
-        batches, _AUDIO_FEAT_SCHEMA
-    )
-
-
-_AUG_SCHEMA = (
-    "media_id bigint, variant string, width int, height int, data binary"
-)
-
-
-def image_augment(
-    df: DataFrame,
-    crop_frac: float = 0.8,
-    brightness: float = 1.25,
-) -> DataFrame:
-    """Deterministic image augmentation fan-out — the corpus-expansion
-    step of a vision training pipeline: each decodable image emits
-    three variants (``hflip`` mirror, ``crop`` center-crop of
-    ``crop_frac`` then nearest-resize back to the original size,
-    ``bright`` channel-clipped brightness scale), all REAL pixel math
-    over the engine's own codecs, re-encoded PNG. Variants are
-    ENUMERATED, not sampled, so the op is deterministic end-to-end —
-    a sampled policy would seed from a hash of (media_id, epoch) at
-    this seam, never from an RNG (the engine's no-nondeterminism
-    rule). In-row fan-out bounded ×3, kind-gated Arrow mapInPandas
-    like decode/resize; undecodable payloads (JPEG — native-lib
-    constraint) are skipped, as in the codec-gated decode path.
-    """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from . import codecs
-
-        def decode(raw: bytes):
-            fmt = codecs.sniff_format(raw)
-            if fmt == "png":
-                return codecs.png_decode(raw)
-            if fmt == "bmp":
-                return codecs.bmp_decode(raw)
-            if fmt in ("pgm", "ppm", "pnm"):
-                return codecs.pnm_decode(raw)
-            return None
-
-        for pdf in it:
-            rows = []
-            for media_id, data in zip(pdf["media_id"], pdf["data"]):
-                img = decode(bytes(data))
-                if img is None:
-                    continue
-                h, w = img.shape[:2]
-                ch, cw = max(1, int(h * crop_frac)), max(
-                    1, int(w * crop_frac)
-                )
-                y0, x0 = (h - ch) // 2, (w - cw) // 2
-                variants = {
-                    "hflip": img[:, ::-1],
-                    "crop": codecs.resize_nearest(
-                        img[y0:y0 + ch, x0:x0 + cw], w, h
-                    ),
-                    "bright": np.clip(
-                        img.astype(np.float64) * brightness, 0, 255
-                    ).astype(np.uint8),
-                }
-                for name in sorted(variants):
-                    out = np.ascontiguousarray(variants[name])
-                    rows.append(
-                        (
-                            int(media_id), name, w, h,
-                            bytearray(codecs.png_encode(out)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "variant", "width", "height", "data"],
-            )
-
-    return df.filter(df["kind"] == "image").mapInPandas(
-        batches, _AUG_SCHEMA
-    )
-
-
-_AUDIO_RESAMPLE_SCHEMA = (
-    "media_id bigint, sr_in int, sr_out int, n_in bigint, n_out bigint, "
-    "data binary"
-)
-
-
-def audio_resample(df: DataFrame, target_rate: int = 8000) -> DataFrame:
-    """Resample WAV payloads to one target rate — the normalization an
-    audio-training corpus applies before batched feature extraction /
-    ASR (mixed-rate sources → a single model rate). REAL DSP over the
-    engine's own WAV codec: decode → per-channel linear interpolation
-    at the exact rate ratio → re-encode 16-bit PCM. Linear interp has
-    no anti-alias low-pass, so content above the target Nyquist folds
-    — acceptable for speech-band targets, documented rather than
-    hidden (a windowed-sinc kernel drops in at the same seam).
-
-    Spark shape: kind gate → Arrow mapInPandas, in-row per clip, rate
-    conversion vectorized in numpy; clips already at ``target_rate``
-    round-trip untouched in length. Non-WAV audio payloads (opaque
-    fixture bytes) are skipped, as in the codec-gated decode path.
-    """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from . import codecs
-
-        for pdf in it:
-            rows = []
-            for media_id, data in zip(pdf["media_id"], pdf["data"]):
-                raw = bytes(data)
-                if codecs.sniff_format(raw) != "wav":
-                    continue
-                x, sr = codecs.wav_decode(raw)
-                n_in = x.shape[0]
-                if sr == target_rate or n_in == 0:
-                    y = x
-                else:
-                    n_out = max(1, round(n_in * target_rate / sr))
-                    # sample positions in input coordinates; clamp the
-                    # upper neighbor at the final sample (no wrap)
-                    pos = np.arange(n_out) * (sr / target_rate)
-                    i0 = np.minimum(
-                        np.floor(pos).astype(np.int64), n_in - 1
-                    )
-                    i1 = np.minimum(i0 + 1, n_in - 1)
-                    frac = (pos - i0)[:, None]
-                    y = x[i0] * (1.0 - frac) + x[i1] * frac
-                rows.append(
-                    (
-                        int(media_id), int(sr), int(target_rate),
-                        int(n_in), int(y.shape[0]),
-                        bytearray(codecs.wav_encode(y, target_rate)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sr_in", "sr_out", "n_in", "n_out",
-                    "data",
-                ],
-            )
-
-    return df.filter(df["kind"] == "audio").mapInPandas(
-        batches, _AUDIO_RESAMPLE_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------------
 # Real video plumbing: length-prefixed PNG-sequence container.
 # ---------------------------------------------------------------------------
@@ -676,9 +280,9 @@ def video_frame_dedup(
                     rows["kept"].append(kept)
         yield pd.DataFrame(rows)
 
-    # Per-kind gate first, like image_dhash/audio_features: on a mixed
-    # media table an image/audio payload would make _iter_pngseq raise
-    # before any video row is reached.
+    # Per-kind gate first, like image_dhash: on a mixed media table an
+    # image/audio payload would make _iter_pngseq raise before any video
+    # row is reached.
     return df.filter(df["kind"] == "video").mapInPandas(
         batches, _VFRAME_SCHEMA
     )

@@ -133,62 +133,10 @@ def read_jsonl(
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    else:
-        # Schema inference = the reference's pd.DataFrame(list_of_dicts)
-        # (S5) — one extra pass; explicit schemas preferred at scale.
-        pass
+    # Without a schema: inference = the reference's
+    # pd.DataFrame(list_of_dicts) (S5) — one extra pass; explicit
+    # schemas preferred at scale.
     return reader.json(path)
-
-
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """ORC reader (S6 breadth — the other columnar interchange format a
-    lakehouse ingests next to parquet). Spark's native ORC source
-    carries the same optimizer contract as parquet: column pruning and
-    predicate pushdown reach the scan (asserted in the round-trip
-    test), min/max stripe statistics prune row groups. With an
-    explicit schema, evolution is by-name like the parquet path."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink twin of the parquet overwrite writer (S7 breadth)."""
-    df.write.mode(mode).orc(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """CSV reader with explicit schema and PERMISSIVE bad-record
-    capture: malformed lines land intact in ``corrupt_col`` instead of
-    failing the job or being silently dropped — the quarantine-column
-    pattern (filter ``corrupt_col IS NOT NULL`` into a reject sink,
-    proceed with the rest). An explicit schema is required: schema
-    inference is an extra full pass over the data AND types drift run
-    to run — both wrong at 100 TB.
-
-    Note Spark's documented caveat: a query that selects ONLY the
-    corrupt column sees no parse attempt (nothing forces one) — keep at
-    least one data column in the projection when auditing rejects.
-    """
-    full = T.StructType(
-        schema.fields + [T.StructField(corrupt_col, T.StringType())]
-    )
-    return (
-        spark.read.schema(full)
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .csv(path)
-    )
 
 
 def read_mongo_or_parquet(

@@ -14,7 +14,7 @@ import os
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,38 +52,6 @@ def write_parquet_overwrite(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_clustered_parquet(
-    df: DataFrame,
-    path: str,
-    cluster_by: tuple[str, ...],
-    num_files: int | None = None,
-) -> None:
-    """Range-cluster rows across files so parquet min/max footer stats
-    (zone maps) actually prune: ``repartitionByRange`` on the cluster
-    key(s) makes file value-ranges disjoint, ``sortWithinPartitions``
-    tightens row-group stats inside each file. A point/range filter on
-    the leading cluster key then skips every non-overlapping file at
-    PLANNING time (parquet row-group/file skipping) — the 100 TB layout
-    decision that turns a full scan into a touch of a few files.
-    Unlike ``partitionBy`` (one DIRECTORY per value — wrong for
-    high-cardinality numeric keys), clustering keeps file count fixed
-    and bounded.
-
-    ``num_files`` defaults to the session's shuffle parallelism.
-    """
-    if num_files is None:
-        num_files = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    cols = [F.col(c) for c in cluster_by]
-    (
-        df.repartitionByRange(num_files, *cols)
-        .sortWithinPartitions(*cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def write_excel_report(
@@ -214,178 +182,3 @@ def write_json_report(report: dict[str, Any], path: str) -> None:
     with open(path, "w") as fh:
         json.dump(report, fh, indent=2, default=str)
 
-
-def zorder_key(
-    x: Column,
-    y: Column,
-    x_min: float,
-    x_max: float,
-    y_min: float,
-    y_max: float,
-    bits: int = 16,
-) -> Column:
-    """Z-order (Morton) curve key for two numeric columns: quantize
-    each to ``bits`` bits over its [min, max] range, then interleave
-    the bits — points close on the curve are close in BOTH dimensions,
-    which is what lets one sort order serve filters on either key.
-    Pure integer Column arithmetic (shifts/masks), whole-stage codegen.
-    """
-    def quant(c: Column, lo: float, hi: float) -> Column:
-        span = (hi - lo) or 1.0
-        q = F.floor(
-            (c.cast("double") - F.lit(lo)) / F.lit(span)
-            * F.lit(float(2 ** bits - 1))
-        ).cast("long")
-        return F.least(F.lit(2 ** bits - 1), F.greatest(F.lit(0), q))
-
-    qx, qy = quant(x, x_min, x_max), quant(y, y_min, y_max)
-    parts = []
-    for i in range(bits):
-        parts.append(F.shiftleft(F.shiftright(qx, i).bitwiseAND(1), 2 * i))
-        parts.append(
-            F.shiftleft(F.shiftright(qy, i).bitwiseAND(1), 2 * i + 1)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
-    return out
-
-
-def write_zordered_parquet(
-    df: DataFrame,
-    path: str,
-    zorder_by: tuple[str, str],
-    num_files: int | None = None,
-    bits: int = 16,
-) -> None:
-    """Multi-dimensional clustering: range-cluster files along the
-    Z-ORDER curve of two keys so parquet zone maps prune point/range
-    filters on EITHER key — what ``write_clustered_parquet`` (1-D
-    range clustering) cannot give: sorting by x makes y's per-file
-    ranges full-width, so any y filter scans every file. Along the
-    Morton curve each file covers a compact 2-D tile, so both
-    dimensions' per-file ranges stay narrow (a point filter touches
-    O(√n_files) tiles instead of all of them). This is the layout
-    behind Delta/Iceberg OPTIMIZE ZORDER BY, expressed as plain
-    repartitionByRange + sort.
-
-    The quantization ranges come from ONE min/max aggregate (4 scalars
-    — metadata, same discipline as the centroid literals). Write-side
-    utility: eager by nature.
-    """
-    xc, yc = zorder_by
-    lim = df.agg(
-        F.min(F.col(xc).cast("double")),
-        F.max(F.col(xc).cast("double")),
-        F.min(F.col(yc).cast("double")),
-        F.max(F.col(yc).cast("double")),
-    ).collect()[0]
-    zk = zorder_key(
-        F.col(xc), F.col(yc), lim[0], lim[1], lim[2], lim[3], bits
-    )
-    if num_files is None:
-        num_files = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    (
-        df.withColumn("__zk", zk)
-        .repartitionByRange(num_files, F.col("__zk"))
-        .sortWithinPartitions("__zk")
-        .drop("__zk")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def _walk_parquet_files(root: str) -> list[str]:
-    """All ``*.parquet`` files under ``root``, recursively — partitioned
-    datasets nest files under ``key=value/`` directories, so a flat
-    top-level glob sees nothing there."""
-    import os
-
-    out: list[str] = []
-    for dirpath, _dirnames, filenames in os.walk(root):
-        out.extend(
-            os.path.join(dirpath, f)
-            for f in filenames
-            if f.endswith(".parquet")
-        )
-    return out
-
-
-def dataset_manifest(spark, path: str) -> DataFrame:
-    """File-level manifest of a parquet dataset: one row per file with
-    row count and byte size — the bookkeeping view behind compaction
-    decisions and scan-cost estimates (what a table format's metadata
-    layer maintains; computed here from the data for plain parquet
-    directories).
-
-    Plan: one scan grouped by ``input_file_name`` (file-keyed hash
-    agg); sizes come from the filesystem listing (driver-side, one
-    entry per file — metadata scale by definition). The listing walks
-    RECURSIVELY so partitioned/nested layouts report real byte sizes
-    (a flat glob would report n_bytes=0 for them);
-    spark part-file basenames embed a UUID, so basename keys are
-    collision-free across partition directories.
-    """
-    import os
-
-    sizes = {
-        os.path.basename(p): os.path.getsize(p)
-        for p in _walk_parquet_files(path)
-    }
-    rows = (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("file_uri"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .collect()
-    )
-    out = [
-        (
-            os.path.basename(r["file_uri"].split("://")[-1]),
-            int(r["n_rows"]),
-            int(sizes.get(
-                os.path.basename(r["file_uri"].split("://")[-1]), 0
-            )),
-        )
-        for r in rows
-    ]
-    return spark.createDataFrame(
-        out, "file string, n_rows bigint, n_bytes bigint"
-    )
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite a fragmented parquet directory
-    into ceil(total_bytes / target) files — the maintenance op that
-    keeps scan task counts sane after many small incremental writes
-    (thousands of KB-files make a 100 TB scan schedule millions of
-    no-op tasks; 128 MiB files match maxPartitionBytes so one task
-    reads one file).
-
-    Uses ``coalesce`` (narrow — no shuffle: existing partitions are
-    glued, which is exactly right for compaction) rather than
-    ``repartition``. Returns the output file count. Layout-preserving
-    compaction of a CLUSTERED dataset should re-run
-    write_clustered_parquet instead — coalesce keeps row order only
-    within glued groups.
-    """
-    import math
-    import os
-
-    total = sum(
-        os.path.getsize(p) for p in _walk_parquet_files(src_path)
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    (
-        spark.read.parquet(src_path)
-        .coalesce(n_files)
-        .write.mode("overwrite")
-        .parquet(dst_path)
-    )
-    return len(_walk_parquet_files(dst_path))

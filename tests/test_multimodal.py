@@ -1,93 +1,19 @@
-"""Multimodal tests (north star §2.11): schema, Arrow batch shape,
-decode determinism, feature wiring into similarity search, frame
-sampling row expansion — plus the REAL stdlib codecs (PNG/BMP/PNM/WAV
-exact decode, nearest-neighbor resize) and the NotImplementedError
-boundary for formats that need a native library (JPEG)."""
+"""Multimodal tests (north star §2.11): the REAL stdlib codecs
+(PNG/BMP/PNM exact decode, nearest-neighbor resize), the dhash
+near-duplicate join, PNGSEQ1 video frame dedup and the
+NotImplementedError boundary for formats that need a native library
+(JPEG, non-PNGSEQ1 video)."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import PythonException
 
 from etl_airbnb_mex_spark.multimodal import (
     MEDIA_SCHEMA,
-    decode_media,
-    extract_features,
-    make_fake_media,
-    resize_images,
-    sample_frames,
+    image_dhash,
+    video_frame_dedup,
 )
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    df = make_fake_media(spark, 30)
-    df.persist()
-    yield df
-    df.unpersist()
-
-
-def test_media_schema(media):
-    assert media.schema == MEDIA_SCHEMA
-    assert media.count() == 30
-    kinds = {r["kind"] for r in media.select("kind").distinct().collect()}
-    assert kinds == {"image", "audio", "video"}
-
-
-def test_decode_deterministic(media):
-    rows = {r["media_id"]: r for r in decode_media(media).collect()}
-    assert len(rows) == 30
-    # payload sizes follow the construction: 64 + 16*(id%5) bytes
-    assert rows[0]["n_bytes"] == 10 + 64           # magic + payload
-    assert len(rows[0]["pixels"]) == 64
-    assert len(rows[4]["pixels"]) == 64 + 16 * 4
-    # determinism: re-decode equals first decode
-    again = {r["media_id"]: r for r in decode_media(media).collect()}
-    assert rows[7]["pixels"] == again[7]["pixels"]
-
-
-def test_features_feed_knn(media, spark):
-    """Features are array<double> and plug straight into knn_cosine."""
-    from pyspark.sql import functions as F
-
-    from etl_airbnb_mex_spark.operators.similarity import knn_cosine
-
-    feats = extract_features(media, dim=8)
-    row = feats.collect()[0]
-    assert len(row["features"]) == 8
-    emb = feats.select(
-        F.col("media_id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    top = knn_cosine(emb, emb.filter(F.col("vec_id") == 0), k=5).collect()
-    assert len(top) == 5
-    assert all(r["vec_id"] != 0 for r in top)
-
-
-def test_resize_updates_meta(media):
-    out = resize_images(media, 8, 6).collect()
-    assert len(out) == 10                      # only image rows
-    assert all(r["meta"]["width"] == 8 and r["meta"]["height"] == 6 for r in out)
-
-
-def test_sample_frames_expands_rows(media):
-    frames = sample_frames(media, every_n=2).collect()
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r["frame_no"])
-    assert len(by_media) == 10                 # video rows only
-    for nos in by_media.values():
-        assert nos == [0, 2, 4, 6]             # every 2nd of 8 frames
-
-
-def test_codec_raises_on_formats_needing_native_libs(spark):
-    """Payloads in formats that genuinely need a native codec (JPEG
-    magic here) hit the clearly-marked NotImplementedError — the
-    documented codec boundary, not silent garbage."""
-    df = spark.createDataFrame(
-        [(99, "image", b"\xff\xd8\xff\xe0jfif-ish", (1, 1, None, 1, "jpg"))],
-        MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="(?i)no codec"):
-        decode_media(df).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -202,18 +128,6 @@ def test_pnm_roundtrip():
     assert np.array_equal(pnm_decode(pgm), gray)
 
 
-def test_wav_roundtrip_16bit():
-    import numpy as np
-
-    from etl_airbnb_mex_spark.multimodal.codecs import wav_decode, wav_encode
-
-    t = np.arange(400) / 400.0
-    sig = 0.5 * np.sin(2 * np.pi * 5 * t)
-    out, rate = wav_decode(wav_encode(sig, sample_rate=8000))
-    assert rate == 8000
-    assert out.shape == (400, 1)
-    assert np.abs(out[:, 0] - sig).max() < 1.0 / 32768
-
 def test_resize_nearest_exact_downscale():
     import numpy as np
 
@@ -222,67 +136,6 @@ def test_resize_nearest_exact_downscale():
     img = _checker(4, 4, 3)
     out = resize_nearest(img, 2, 2)
     assert np.array_equal(out, img[::2, ::2])
-
-
-def test_spark_decode_real_png_payloads(spark):
-    """End-to-end: real PNG bytes flow through the Arrow-batched
-    decode_media and come back as the exact pixel values."""
-    import numpy as np
-
-    from etl_airbnb_mex_spark.multimodal.codecs import png_encode
-
-    imgs = {i: _checker(6, 5, 3) + i for i in range(4)}
-    df = spark.createDataFrame(
-        [
-            (i, "image", png_encode(img % 256), (5, 6, None, 1, "png"))
-            for i, img in imgs.items()
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r["pixels"] for r in decode_media(df).collect()}
-    for i, img in imgs.items():
-        assert rows[i] == [float(x) for x in (img % 256).ravel()]
-
-
-def test_spark_resize_real_png_resamples_pixels(spark):
-    """resize_images on a real PNG actually resamples: output payload
-    decodes to the nearest-neighbor grid at the target size."""
-    import numpy as np
-
-    from etl_airbnb_mex_spark.multimodal.codecs import (
-        png_decode,
-        png_encode,
-        resize_nearest,
-    )
-
-    img = _checker(8, 8, 3)
-    df = spark.createDataFrame(
-        [(7, "image", png_encode(img), (8, 8, None, 1, "png"))],
-        MEDIA_SCHEMA,
-    )
-    (row,) = resize_images(df, 4, 4).collect()
-    assert row["meta"]["width"] == 4 and row["meta"]["height"] == 4
-    assert np.array_equal(
-        png_decode(bytes(row["data"])), resize_nearest(img, 4, 4)
-    )
-
-
-def test_spark_decode_wav_payloads(spark):
-    import numpy as np
-
-    from etl_airbnb_mex_spark.multimodal.codecs import wav_encode
-
-    sig = np.linspace(-0.9, 0.9, 256)
-    df = spark.createDataFrame(
-        [(11, "audio", wav_encode(sig, 16000), (None, None, 16000, None, "wav"))],
-        MEDIA_SCHEMA,
-    )
-    (row,) = decode_media(df).collect()
-    got = np.asarray(row["pixels"])
-    assert got.shape == (256,)
-    # encode scales by 32767, decode by 1/32768: worst case |x|/32768
-    # quantizer-mismatch bias + 0.5/32768 rounding
-    assert np.abs(got - sig).max() < 2.0 / 32768
 
 
 def test_image_dhash_near_dup_detection(spark):
@@ -335,34 +188,6 @@ def test_image_dhash_near_dup_detection(spark):
     assert got == want                      # banded join == brute force
     for b in range(5):
         assert (2 * b, 2 * b + 1) in want   # noised twin is a near-dup
-
-
-def test_audio_features_detect_tone_frequency(spark):
-    """Spectral centroid of a pure tone ~ the tone's frequency; a
-    louder clip has higher RMS; higher-pitch tones cross zero more."""
-    import numpy as np
-
-    from etl_airbnb_mex_spark.multimodal.codecs import wav_encode
-    from etl_airbnb_mex_spark.multimodal.ops import (
-        MEDIA_SCHEMA,
-        audio_features,
-    )
-
-    rate = 16000
-    t = np.arange(rate) / rate  # 1 second
-    rows = []
-    for mid, (freq, amp) in enumerate([(440.0, 0.2), (2000.0, 0.8)]):
-        samples = amp * np.sin(2 * np.pi * freq * t)  # floats in [-1, 1]
-        rows.append(
-            (mid, "audio", bytearray(wav_encode(samples, rate)),
-             (None, None, rate, None, "wav"))
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.media_id: r for r in audio_features(df).collect()}
-    assert got[0].spectral_centroid_hz == pytest.approx(440, rel=0.15)
-    assert got[1].spectral_centroid_hz == pytest.approx(2000, rel=0.15)
-    assert got[1].rms > got[0].rms * 2
-    assert got[1].zero_cross_rate > got[0].zero_cross_rate * 2
 
 
 def test_video_pngseq_frame_dedup(spark):
@@ -428,87 +253,22 @@ def test_video_frame_dedup_driver_query(spark, sf_dir):
         assert r.n_sampled == scenes * run_len
 
 
-def test_audio_resample_preserves_tone_and_length(spark):
-    """16 kHz -> 8 kHz halves the sample count and keeps a speech-band
-    tone's spectral centroid; an already-at-rate clip round-trips with
-    identical length; upsampling 8k -> 16k doubles it. Feature check
-    runs through audio_features ON the resampled payloads - the real
-    downstream consumer."""
-    import numpy as np
-
-    from etl_airbnb_mex_spark.multimodal.codecs import wav_encode
-    from etl_airbnb_mex_spark.multimodal.ops import (
+def test_kept_operators_raise_on_undecodable_payloads(spark):
+    """The codec boundary of the two kept operators: a JPEG image and a
+    non-PNGSEQ1 video need a native library, so they raise
+    NotImplementedError inside the Arrow worker — the documented
+    boundary, not silent garbage."""
+    jpeg = spark.createDataFrame(
+        [(99, "image", b"\xff\xd8\xff\xe0jfif-ish", (1, 1, None, 1, "jpg"))],
         MEDIA_SCHEMA,
-        audio_features,
-        audio_resample,
     )
-
-    tone = 440.0
-    rows = []
-    for mid, rate in [(0, 16000), (1, 8000)]:
-        t = np.arange(rate) / rate  # 1 second at the native rate
-        samples = 0.5 * np.sin(2 * np.pi * tone * t)
-        rows.append(
-            (mid, "audio", bytearray(wav_encode(samples, rate)),
-             (None, None, rate, None, "wav"))
-        )
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: r for r in audio_resample(df, 8000).collect()}
-    assert out[0].sr_in == 16000 and out[0].sr_out == 8000
-    assert out[0].n_in == 16000 and out[0].n_out == 8000
-    # at-rate clip untouched in length
-    assert out[1].n_in == 8000 and out[1].n_out == 8000
-
-    # resampled payloads are real WAVs the feature op consumes; the
-    # 440 Hz tone (well under the 4 kHz Nyquist) survives
-    res_rows = [
-        (mid, "audio", bytearray(bytes(r.data)),
-         (None, None, r.sr_out, None, "wav"))
-        for mid, r in out.items()
-    ]
-    rdf = spark.createDataFrame(res_rows, MEDIA_SCHEMA)
-    feats = {r.media_id: r for r in audio_features(rdf).collect()}
-    assert feats[0].spectral_centroid_hz == pytest.approx(tone, rel=0.15)
-
-    # upsample doubles the count
-    up = {r.media_id: r for r in audio_resample(df, 16000).collect()}
-    assert up[1].n_out == 16000
-
-
-def test_image_augment_variants_are_real_pixel_math(spark):
-    """Three deterministic variants per decodable image: hflip is the
-    exact mirror, crop keeps the original dimensions, bright raises
-    mean luminance and clips; every payload round-trips through the
-    PNG codec; non-image kinds are gated out."""
-    import numpy as np
-
-    from etl_airbnb_mex_spark.multimodal.codecs import (
-        png_decode,
-        png_encode,
-    )
-    from etl_airbnb_mex_spark.multimodal.ops import (
+    with pytest.raises(PythonException, match="undecodable image format") as e:
+        image_dhash(jpeg).collect()
+    assert "NotImplementedError" in str(e.value)
+    mp4 = spark.createDataFrame(
+        [(98, "video", b"\x00\x00\x00\x18ftypmp42", (1, 1, None, 1, "mp4"))],
         MEDIA_SCHEMA,
-        image_augment,
     )
-
-    # a 8x6 horizontal gradient (asymmetric so hflip is detectable)
-    img = np.zeros((6, 8, 3), dtype=np.uint8)
-    img[:, :, 0] = np.arange(8, dtype=np.uint8)[None, :] * 30
-    img[:, :, 1] = 100
-    rows = [
-        (0, "image", bytearray(png_encode(img)),
-         (8, 6, None, None, "png")),
-        (1, "audio", bytearray(b"\x00" * 16), (None, None, 16000, None, None)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.variant: r for r in image_augment(df).collect()}
-    assert set(got) == {"hflip", "crop", "bright"}  # audio row gated out
-    for r in got.values():
-        assert (r.media_id, r.width, r.height) == (0, 8, 6)
-    flipped = png_decode(bytes(got["hflip"].data))
-    assert np.array_equal(flipped, img[:, ::-1])
-    cropped = png_decode(bytes(got["crop"].data))
-    assert cropped.shape == img.shape
-    bright = png_decode(bytes(got["bright"].data))
-    assert bright.mean() > img.mean()
-    assert bright.max() <= 255
+    with pytest.raises(PythonException, match="PNGSEQ1") as e:
+        video_frame_dedup(mp4).collect()
+    assert "NotImplementedError" in str(e.value)

@@ -200,33 +200,6 @@ def test_mongo_live_read_smoke(spark, tmp_path, monkeypatch):
         proc.wait(timeout=10)
 
 
-def test_read_csv_quarantines_corrupt_records(spark, tmp_path):
-    """PERMISSIVE CSV: well-formed rows parse, malformed rows land in
-    the corrupt-record column with the raw line intact."""
-    from pyspark.sql import types as T
-
-    from etl_airbnb_mex_spark.sources.readers import read_csv
-
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "id,price,city\n"
-        "1,10.5,mexico\n"
-        "2,notanumber,cdmx\n"
-        "3,7.25,puebla\n"
-    )
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("price", T.DoubleType()),
-        T.StructField("city", T.StringType()),
-    ])
-    df = read_csv(spark, str(p), schema).cache()
-    good = df.filter("_corrupt_record IS NULL").collect()
-    bad = df.filter("_corrupt_record IS NOT NULL").collect()
-    df.unpersist()
-    assert sorted(r.id for r in good) == [1, 3]
-    assert len(bad) == 1 and "notanumber" in bad[0]._corrupt_record
-
-
 def test_parallelize_scan_widens_only_under_split(spark, sf_dir):
     """The scan-widening guard (tables.parallelize_scan): an
     under-split scan repartitions up to the session shuffle width; a
@@ -248,41 +221,6 @@ def test_parallelize_scan_widens_only_under_split(spark, sf_dir):
     # already-wide input: the SAME DataFrame comes back (no-op)
     wide = d.repartition(target + 4)
     assert parallelize_scan(wide, spark) is wide
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path_factory):
-    """ORC format breadth (S6/S7): parquet -> ORC round-trip preserves
-    rows and schema, and the optimizer contract holds on the ORC scan
-    - the filter reaches PushedFilters and the projection prunes
-    ReadSchema, same as the parquet path."""
-    from pyspark.sql import functions as F
-
-    from etl_airbnb_mex_spark.sources.readers import read_orc, write_orc
-    from etl_airbnb_mex_spark.tables import load_table
-
-    path = str(tmp_path_factory.mktemp("orc") / "orders")
-    orders = load_table(spark, sf_dir, "orders")
-    write_orc(orders, path)
-
-    back = read_orc(spark, path)
-    assert back.count() == orders.count()
-    assert dict(back.dtypes) == dict(orders.dtypes)
-
-    q = back.filter(F.col("o_totalprice") > 1000.0).select(
-        "o_orderkey", "o_totalprice"
-    )
-    plan = q._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "PushedFilters: [" in plan
-    assert "GreaterThan(o_totalprice" in plan
-    assert "o_custkey" not in plan.split("ReadSchema")[1].splitlines()[0]
-    # values parity on an aggregate through the ORC scan
-    a = orders.agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))).collect()
-    b = back.agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))).collect()
-    assert a == b
 
 
 def test_load_table_schema_cache_matches_inference(spark, sf_dir):

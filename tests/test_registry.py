@@ -556,9 +556,9 @@ def test_no_container_columns_in_oracle_surface():
 
 def test_cited_python_files_exist():
     """Every ``*.py`` path and bare ``*.py`` file name cited in
-    the engine, the tests, README.md or .claude/ names a file in the
-    repo, so deleting a module or a tool cannot leave a dangling
-    citation.
+    the engine, the tests, README.md, SURVEY.md or .claude/ names a
+    file in the repo, so deleting a module or a tool cannot leave a
+    dangling citation.
 
     A path whose first directory is ``scripts``, ``tests``,
     ``perfbench`` or the package resolves from the repo root; one whose
@@ -577,7 +577,7 @@ def test_cited_python_files_exist():
     ))
     path = re.compile(r"(?<![\w/-])((?:\w+/)+)(\{[\w,]+\}|\w+)\.py\b")
     bare = re.compile(r"(?<![\w/.{,-])(\w+\.py)\b")
-    sources = [_REPO / "README.md"] + [
+    sources = [_REPO / "README.md", _REPO / "SURVEY.md"] + [
         p for d in ("etl_airbnb_mex_spark", "tests", ".claude")
         for p in sorted((_REPO / d).rglob("*")) if p.suffix in (".py", ".md")
     ]
