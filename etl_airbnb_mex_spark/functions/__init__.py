@@ -18,7 +18,6 @@ from .cleaning import (
 )
 from .dates import (
     date_normalize,
-    date_parts,
     month_name,
     month_trunc,
     weekday_mon0,
@@ -44,7 +43,6 @@ __all__ = [
     "clean_price_null",
     "clean_string_array",
     "date_normalize",
-    "date_parts",
     "lang_id_score",
     "map_with_default",
     "month_name",

@@ -10,7 +10,7 @@ Key parity traps handled here (SURVEY.md §7.4):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .cleaning import _col
@@ -44,21 +44,3 @@ def month_trunc(col: Column | str) -> Column:
     """F17 — truncate timestamp to month start (pd .dt.to_period('M'))."""
     return F.date_trunc("month", _col(col))
 
-
-def date_parts(df: DataFrame, col: str, prefix: str = "") -> DataFrame:
-    """F16 — derive year/month/day/quarter/weekday/month-name columns.
-
-    Reference: ``src/transformacion.py:44-58`` adds ``año, mes, dia,
-    trimestre, dia_semana, nombre_mes`` per date column. Column names here
-    are English; the pipeline layer applies the reference's Spanish names.
-    """
-    c = F.col(col)
-    p = prefix or f"{col}_"
-    return (
-        df.withColumn(f"{p}year", F.year(c))
-        .withColumn(f"{p}month", F.month(c))
-        .withColumn(f"{p}day", F.dayofmonth(c))
-        .withColumn(f"{p}quarter", F.quarter(c))
-        .withColumn(f"{p}weekday", weekday_mon0(c))
-        .withColumn(f"{p}month_name", month_name(c))
-    )

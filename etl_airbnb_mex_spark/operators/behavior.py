@@ -46,8 +46,7 @@ def funnel_conversion(
     funnel stage (measured 12 → 7 jobs on the 3-stage registered
     query).
 
-    r17 runtime-plan audit (VERDICT r16 #8, AQE-final dump committed
-    at plans/r17/funnel_conversion_r16shape_executed.txt): exchange
+    The AQE-final plan of the registered query shows that exchange
     reuse between a union branch and the next stage's join input is
     PARTIAL — the analyzer re-aliases one consumer of each frontier
     (self-join expr-id dedup), so its canonical form stops matching
@@ -55,8 +54,8 @@ def funnel_conversion(
     (one ReusedExchange, 5 shuffle stages for 3 funnel stages). Still
     a measured win over the BNLJ chain (7 vs 12 jobs); the recomputed
     frontiers are small filtered aggregates, and pinning them with
-    localCheckpoint would add materialization jobs (the r17 banded-
-    frame A/B measured that class of fix as a regression).
+    localCheckpoint would add materialization jobs (an A/B of that
+    class of fix on a banded-frame query measured a regression).
     """
     frontier = None
     tagged = None

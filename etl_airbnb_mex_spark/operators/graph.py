@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 #: Rounding-boundary guard band for cross-engine-deterministic
 #: per-round rounding, in GRID units (fractions of one 10^-dp step).
-#: This is the FLOOR of a magnitude-aware band (ADVICE r12 #1): drift
+#: This is the FLOOR of a magnitude-aware band: drift
 #: between engines is a few ulps OF THE VALUE, and one ulp of the
 #: scaled value grows with its magnitude — ~2e-7 grid units for ranks
 #: ~1e-3 on a 1e-12 grid, but ~2e-6 at rank 0.01 and ~2.4e-4 at rank
@@ -30,12 +30,12 @@ from pyspark.sql import functions as F
 #: can actually reach there (false-trip ~2·k·ulp, still ≤ ~1e-3 even
 #: at rank 1 — and rank ~1 only occurs on near-single-node graphs
 #: with few (node, round) trials). Either way a hit means "the
-#: canonical-rounding argument does not hold on this data"
-#: (ADVICE r10 #3).
+#: canonical-rounding argument does not hold on this data" and the
+#: query must be re-registered rows-only.
 _ROUND_GUARD_GRID = 1e-6
 #: Ulp multiplier for the magnitude-aware part of the band: covers
-#: the observed few-ulp cross-engine drift (a two-ulp straddle, the
-#: worst case ADVICE r12 #1 names) with 2x margin.
+#: the observed few-ulp cross-engine drift (a two-ulp straddle is the
+#: worst case seen) with 2x margin.
 _GUARD_ULPS = 4.0
 
 
@@ -53,7 +53,7 @@ def _boundary_guarded_round(value: Column, dp: int, guard: float) -> Column:
     ``F.when(assert_true(...).isNull(), ...)`` so column pruning can
     never drop it, and it adds no action — the whole loop stays lazy.
 
-    The band is magnitude-aware (ADVICE r12 #1): ``guard`` grid units
+    The band is magnitude-aware: ``guard`` grid units
     is only a meaningful resolution while one ulp of the scaled value
     is smaller than it — true for ranks ~1e-3 at dp=12 (scaled ~1e9,
     ulp ~2e-7 grid units) but not at rank 0.01 (ulp ~2e-6) or rank ~1
@@ -71,7 +71,7 @@ def _boundary_guarded_round(value: Column, dp: int, guard: float) -> Column:
     # floor for small ranks and widens to k ulps where the grid-unit
     # band drops below what double resolution can represent.
     ulp_grid = F.abs(scaled) * F.lit(2.0 ** -52)
-    # Clamp to 0.25 (ADVICE r13 #3): dist ranges over [0, 0.5], so an
+    # Clamp to 0.25: dist ranges over [0, 0.5], so an
     # unbounded ulp band would exceed the maximum attainable distance
     # once |scaled| > ~1.1e15/_GUARD_ULPS and the assert would fire
     # unconditionally. Past |scaled| = 2^52 pmod(scaled, 1) is
@@ -86,7 +86,7 @@ def _boundary_guarded_round(value: Column, dp: int, guard: float) -> Column:
         dist >= guard_eff,
         F.concat(
             F.lit(
-                "pagerank round_ranks boundary hit (ADVICE r10 #3): a "
+                "pagerank round_ranks boundary hit: a "
                 "pre-rounding rank is within the guard band of the "
                 f".5e-{dp} rounding boundary — per-round rounding is "
                 "not cross-engine safe on this data; re-register the "
@@ -135,7 +135,7 @@ def pagerank(
     :func:`_boundary_guarded_round`: an in-plan assert_true aborts
     loudly if any pre-rounding rank falls within the guard band of a
     boundary (probabilistically ~never; if it ever fires, the query
-    must be re-registered rows-only — ADVICE r10 #3).
+    must be re-registered rows-only).
     """
     # The edge frame re-joins EVERY round; materialize it once so its
     # upstream plan (scan/distinct/joins) does not re-execute per

@@ -224,8 +224,7 @@ def asof_join(
     this: an open interval, valid_to NULL, beats every closed one).
     For 'forward' (``first``) it is the tiebreak-minimum, with a NULL
     tiebreak losing to every non-NULL value. Without a tiebreak,
-    equal-ts right duplicates carry an engine-dependent row
-    (ADVICE.md r4 #3).
+    equal-ts right duplicates carry an engine-dependent row.
     """
     lcols = left.columns
     # Left rows are tagged __side=1. Right rows sort BEFORE left at equal

@@ -41,8 +41,8 @@ def _canon(v: Any) -> Any:
     on one side and a float on the other NEVER compare equal — the
     driver's value-hash stringifies pandas cells, so DuckDB
     HUGEINT→float64 ``555.0`` vs Spark bigint ``555`` is a driver
-    failure even though Python's ``555 == 555.0`` (hit in
-    CORRECTNESS_r04: entropy_by_group, rare_label_collapse). Local
+    failure even though Python's ``555 == 555.0`` (``entropy_by_group``
+    and ``rare_label_collapse`` once failed this way). Local
     green must imply driver green, so be exactly as strict.
     """
     if v is None:
@@ -104,7 +104,7 @@ def compare_query(
     if spec.oracle is not None:
         # Faithfulness to the driver: its pandas canonicalizer
         # sort_values over result columns and cannot hash list/dict
-        # cells (round-1 parse_array err, VERDICT.md r1 §Wrong #1).
+        # cells (``parse_array`` once failed there with a list column).
         # This replica converts lists to tuples and would silently
         # pass, so reject container-typed columns up front — compare
         # a to_json/array_join rendering instead. Schema-only check,
@@ -124,8 +124,8 @@ def compare_query(
         # DuckDB DATE via .df() becomes a midnight Timestamp
         # ('2020-01-03 00:00:00') while Spark DateType via toPandas
         # stays datetime.date ('2020-01-03') — a date-valued oracle
-        # would false-fail on the driver with identical values
-        # (ADVICE.md r5 #2). Reject DateType up front; render dates
+        # would false-fail on the driver with identical values.
+        # Reject DateType up front; render dates
         # with date_format(...) / strftime(...) strings, or cast to
         # timestamp on BOTH sides (midnight timestamps compare fine).
         bad_dates = [

@@ -16,8 +16,8 @@ Oracle design rules (each learned from a driver failure class):
   3. CAST integer sums to BIGINT in the oracle SQL: DuckDB types
      ``sum(BIGINT)`` as HUGEINT, which the driver's pandas conversion
      renders float64 (``555.0``) while Spark emits bigint ``555`` —
-     hash mismatch with identical values (CORRECTNESS_r04:
-     entropy_by_group, rare_label_collapse). The local replica
+     hash mismatch with identical values (``entropy_by_group`` and
+     ``rare_label_collapse`` failed this way). The local replica
      (oracle.py) now fetches via pandas and compares type-strictly,
      so a bare-HUGEINT column fails in pytest before it can reach
      the driver.
@@ -59,101 +59,16 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-#: Driver-surface ordering. The driver verifies only the FIRST 50
-#: registry entries in iteration order, so at most 50 names lead it:
-#: first every entry whose code changed since its last driver row
-#: (changed code gets a fresh row in the same run), then the
-#: oracle-bearing entries with the oldest driver provenance. Every
-#: oracle-bearing entry outside this window has a driver row in some
-#: ``CORRECTNESS_r*.json`` (tests/test_registry.py checks both).
-_PRIORITY: tuple[str, ...] = (
-    # -- code changed in r16 (lockstep rule) --
-    "approx_distinct",     # r16: converted to bounded-assertion form
-    #                      with an oracle — (exact, within_10pct) —
-    #                      VERDICT r15 #1; first driver hash ever
-    "percentiles_approx",  # r16: same conversion (exact quartiles +
-    #                      sketch-in-bracket boolean)
-    "hll_distinct_rollup",  # r16: same conversion (per-month exact +
-    #                      within_10pct)
-    "bpe_merges",          # r16: gained the unrolled 10-round DuckDB
-    #                      trainer oracle — the driver now asserts the
-    #                      exact merge sequence
-    "q5_local_supplier_volume",  # VERDICT r15 wrong-#1: its plan
-    #                      code was touched in r15 without a fresh
-    #                      CORRECTNESS_r* row — lockstep applied one
-    #                      round late
-    # -- new entry this round (never driver-checked before):
-    #    the IVF build→probe lifecycle, VERDICT r15 #5 --
-    "ivf_build_probe",
-    # -- r16 lockstep, second batch (VERDICT r15 #3): q9's plan code
-    #    was touched in r16 — it gets a fresh CORRECTNESS_r* row the
-    #    same round --
-    "q9_product_margin",
-    # -- the r11-provenance cohort (VERDICT r15 #2): oldest
-    #    oracle-bearing entries, none code-touched since r11 --
-    "doc_length_band_filter",
-    "embedding_quantize",
-    "entropy_by_group",
-    "event_transitions",
-    "ewma_smooth",
-    "fuzzy_vocab_pairs",
-    "graph_reachability",
-    "grouped_split",
-    "having_join_bigorders",
-    "interarrival_stats",
-    "intervals_merge",
-    "inverted_index",
-    "join_spatial_grid",
-    "kcore_parts",
-    "knn_cosine",
-    "mixture_resample",
-    "pareto_revenue_share",
-    "pit_lookup",
-    "promo_revenue_share",
-    "quality_gate_by_group",
-    "rare_label_collapse",
-    "repeat_purchase_rate",
-    "rolling_median",
-    "rolling_zscore",
-    "sample_k_per_group",
-    "sample_weighted_topk",
-    "segment_overlap",
-    "session_path_topn",
-    "ship_delay_priority",
-    "skyline_pareto",
-    "sliding_distinct_users",
-    "snapshot_diff",
-    "source_mix_report",
-    "subquery_correlated_qty",
-    "supplier_revenue_concentration",
-    "tfidf_topk",
-    "time_rollup_multigrain",
-    "unicode_normalize",
-    "unigram_logprob",
-    "weighted_median",
-    # -- spare slots filled with the head of the r12 cohort (the
-    #    next-oldest provenance, alphabetical — an early start on the
-    #    r17 rotation queue) --
-    "activity_streaks",
-    "basket_lift",
-)
-
-
-def _ordered() -> list[QuerySpec]:
-    _load()
-    prio = [REGISTRY[n] for n in _PRIORITY if n in REGISTRY]
-    rest = [s for s in REGISTRY.values() if s.name not in _PRIORITY]
-    return prio + rest
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {spec.name: spec.spark for spec in _ordered()}
+    _load()
+    return {name: spec.spark for name, spec in REGISTRY.items()}
 
 
 def all_oracle_sql() -> dict[str, str]:
+    _load()
     return {
-        spec.name: spec.oracle
-        for spec in _ordered()
+        name: spec.oracle
+        for name, spec in REGISTRY.items()
         if spec.oracle is not None
     }
 

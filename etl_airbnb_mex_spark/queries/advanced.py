@@ -364,7 +364,7 @@ def time_rollup_multigrain_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "user_id unioned into monthly estimates without rescanning the "
     "fact table (operators/timeseries.py:hll_distinct_rollup) — the "
     "DataSketches pattern that makes distinct-count rollups "
-    "incremental at 100 TB. Bounded-assertion form (VERDICT r15 #1): "
+    "incremental at 100 TB. Bounded-assertion form: "
     "the plan runs the sketch rollup AND the exact monthly distinct, "
     "emitting (month, exact, |approx−exact| ≤ 10%·exact). HLL union "
     "is a commutative per-register max, so the estimate — and hence "
@@ -863,7 +863,7 @@ def pit_lookup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # [t, t) sorts before the live interval [t, NULL/later), and the
     # backward carry takes the LAST — so the live interval is carried
     # deterministically, matching the oracle's containment join, which
-    # can never match a zero-length interval (ADVICE.md r4 #3).
+    # can never match a zero-length interval.
     looked = asof_join(
         facts,
         iv.select(
@@ -1219,7 +1219,7 @@ def event_transitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Fixed round budget for BOTH engines (r11, ADVICE r10 #1): the
+#: Fixed round budget for BOTH engines: the
 #: oracle re-lists the surviving edge set once per round, so any
 #: budget ≥ the actual rounds-to-fixpoint reproduces the (unique)
 #: k-core exactly — and the Spark peel now runs with
@@ -1323,7 +1323,7 @@ def kcore_parts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # max_iter tied to the oracle's round budget: convergence past
     # _KCORE_ROUNDS raises here rather than mismatching a
-    # partially-peeled oracle (ADVICE r10 #1)
+    # partially-peeled oracle
     return kcore_decompose(edges, k=k, max_iter=_KCORE_ROUNDS)
 
 
@@ -1397,7 +1397,7 @@ def graph_reachability_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_oracle_sql(n_merges: int = 10, end_marker: str = "</w>") -> str:
-    """Unrolled BPE trainer as ONE DuckDB query (VERDICT r15 #1) — the
+    """Unrolled BPE trainer as ONE DuckDB query — the
     oracle twin of operators/corpus.py:bpe_train, built by template so
     the driver can hash-assert the full merge table. Each round k is
     three chained CTEs: p{k} adjacent-pair counts over the vocab frame
@@ -1461,7 +1461,7 @@ def _bpe_oracle_sql(n_merges: int = 10, end_marker: str = "</w>") -> str:
     "word-frequency table (adjacent-pair agg -> deterministic top-1 "
     "-> Arrow-batched merge application), exactly how reference BPE "
     "scales. Returns the learned merge table (rank, left, right, "
-    "pair_count). Oracle since r16 (VERDICT r15 #1): the full trainer "
+    "pair_count). Oracle: the full trainer "
     "unrolled as one DuckDB query (_bpe_oracle_sql) — the driver now "
     "hash-asserts the exact merge sequence, tie-breaks included; the "
     "pytest vs a single-process Python BPE stays as the third leg.",
@@ -1595,7 +1595,7 @@ def _word_5grams(toks: DataFrame) -> DataFrame:
     auto-step DOWNWARD ([1, 0, -1, ...]) and slice() throws on the
     non-positive starts (pyspark 4.1 SparkRuntimeException). The
     oracle's range(1, len-3) is empty there, so emit no grams — the
-    doc drops from the output on both sides (ADVICE.md r4 #1).
+    doc drops from the output on both sides.
     """
     gram_positions = F.when(
         F.size("t") >= 5, F.sequence(F.lit(1), F.size("t") - 4)
@@ -1642,7 +1642,7 @@ def _word_5grams(toks: DataFrame) -> DataFrame:
     "on decontaminate); counts here stay exact for the oracle.",
 )
 def boilerplate_ngram_frac_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r17 cap sweep (VERDICT r16 #3, guide §2.6): width 8 measured
+    # Scan-width cap sweep: width 8 measured
     # min 1.74→1.08 s / median 1.97→1.19 s (interleaved, 5 passes) —
     # the 5-gram position explode was serialized on the 1-split scan.
     docs = parallelize_scan(

@@ -234,7 +234,7 @@ def q3_shipping_priority_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "swap documented at q1). The dim resolution is a DRIVER-SIDE "
     "pyarrow footer read (tables.read_dim_driver_side — zero Spark "
     "jobs, Spark-collect fallback for non-local paths), so unlike "
-    "ivf_probe_pinned's eager guard (ADVICE r12 #3) plan-only "
+    "ivf_probe_pinned's eager guard, plan-only "
     "consumers pay no cluster work at all.",
 )
 def q5_local_supplier_volume_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -580,8 +580,8 @@ def dataset_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sort_array + array_join): per-nation customer id lists. Sorted on "
     "both sides because collection order is partition-dependent; the "
     "compared columns are the CSV rendering + length (the driver's "
-    "canonicalizer cannot hash raw array values — parse_array lesson, "
-    "VERDICT.md r1 §Wrong #1).",
+    "canonicalizer cannot hash raw array values, which once failed "
+    "parse_array).",
 )
 def group_collect_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
@@ -770,7 +770,7 @@ def window_cume_dist_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "Engine extension (SURVEY.md §2.5 notes): approx_count_distinct — the "
     "documented 100 TB swap for countDistinct (single pass, no distinct "
-    "shuffle). Bounded-assertion form (VERDICT r15 #1): the plan computes "
+    "shuffle). Bounded-assertion form: the plan computes "
     "BOTH the HLL++ estimate (rsd=0.02) and the exact count and emits "
     "(exact, |approx−exact| ≤ 10%·exact) — deterministic regardless of "
     "partial-merge order because HLL register union is commutative and "
@@ -1717,8 +1717,8 @@ def _ivf_build_probe_sql(
 @register(
     "ivf_build_probe",
     _ivf_build_probe_sql(n_centroids=8, n_probe=3, k=10, query_id=1),
-    "§2.11 — IVF build→probe LIFECYCLE as one driver query (VERDICT "
-    "r15 #5): the coarse quantizer is BUILT from the corpus in-query — "
+    "§2.11 — IVF build→probe LIFECYCLE as one driver query: the "
+    "coarse quantizer is BUILT from the corpus in-query — "
     "one metadata-scale aggregation picks 8 seed vectors (bucket = "
     "vec_id mod 8, min engine-portable multiplicative hash per bucket, "
     "operators/setops.py:hash_bucket) — then the probe runs the exact "
@@ -1905,7 +1905,7 @@ def pii_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def repetition_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokenize, word_repetition_ratio
 
-    # r17 cap sweep (VERDICT r16 #3, guide §2.6): the 1-split text scan
+    # Scan-width cap sweep: the 1-split text scan
     # serialized the in-row tokenize on one core; width 8 measured
     # min 0.44→0.27 s / median 0.55→0.31 s (interleaved, 5 passes).
     d = parallelize_scan(
@@ -1965,7 +1965,7 @@ def repetition_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tfidf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpus import tfidf_topk
 
-    # r17 (ADVICE r16 #2): project to the two consumed columns BEFORE
+    # Project to the two consumed columns BEFORE
     # the widening exchange, matching the other cap=8 call sites —
     # the full documents table (lang/source/etc.) was riding the
     # round-robin repartition for nothing. n_docs = count(*) is
@@ -3124,7 +3124,7 @@ def anomaly_zscore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dup_ngram_frac_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpus import dup_ngram_fraction
 
-    # r17 cap sweep (VERDICT r16 #3): the heaviest single-task tail
+    # Scan-width cap sweep: the heaviest single-task tail
     # entry — the in-row bigram build + array_distinct serialized on
     # one core. Width 16 measured min 5.24→0.84 s / median
     # 6.62→1.49 s (interleaved, 5 passes); per-row compute dominates
@@ -3243,7 +3243,9 @@ def monthly_cumulative_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "Robust location/scale: median + MAD — two chained median "
     "aggregates in ONE lazy plan (first broadcasts back as a 1-row "
-    "scalar); exact for parity, approx/sortrank swap documented "
+    "scalar); both medians are exact, through the stats.exact_quantiles "
+    "branch picked once on the input: a native percentile aggregate at "
+    "or below NATIVE_QUANTILE_MAX_BYTES, bucket-select above it "
     "(operators/stats.py:mad_robust).",
 )
 def mad_robust_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3580,8 +3582,8 @@ def chi_square_assoc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dof counts CATEGORIES, and a NULL category is a category: the
     # oracle's count(*) over the GROUP BY margin frames counts a NULL
     # lang/source group, while a bare countDistinct(col) would skip it
-    # (ADVICE r16 #1 — latent dof drift if either categorical is ever
-    # null; current data has none). Counting distinct over the
+    # (a latent dof drift if either categorical is ever null; current
+    # data has none). Counting distinct over the
     # (isnull, value) STRUCT keeps NULL as one distinct group with no
     # sentinel-collision risk, on the same ≤|langs|·|sources| frame.
     n_cats = lambda c: F.countDistinct(  # noqa: E731
@@ -3654,9 +3656,9 @@ def ffill_timeseries_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Unordered-pair encoding base: pair key = least·2³¹ + greatest, one
 #: 8-byte long per pair. Exact while every part id < 2³¹ (TPC-H partkey
 #: = 200k·SF → SF ≈ 10,000); the decode below is INTEGER arithmetic
-#: (shiftright / %), so there is no floating-point bound — the r8 form
-#: decoded with F.floor(pc / enc), whose DOUBLE division loses exactness
-#: past 2⁵³ ≈ partkey 4.2M (ADVICE r8 #1).
+#: (shiftright / %), so there is no floating-point bound — decoding
+#: with F.floor(pc / enc) would go through a DOUBLE division that loses
+#: exactness past 2⁵³ ≈ partkey 4.2M.
 _PAIR_ENC = 2_147_483_648
 
 
@@ -3686,15 +3688,13 @@ def _basket_pair_counts(baskets: DataFrame) -> DataFrame:
     exactly once (the set is a collect_set, so values are distinct and
     ``y > x`` is a total tiebreak), encoded as the single 8-byte long
     ``x·2³¹ + y`` with x < y guaranteed by construction (no
-    least/greatest needed). The r12 registered form (VERDICT r11 #2):
-    the r8–r11 shape built a nested array-of-arrays via
-    transform(slice)+flatten BEFORE its explode — the per-row nested
-    allocation measured +22% at sf4 (11.45 s vs 9.38 s, phase-stamped
-    r11 experiment, BENCH_SIDECAR scale_trend.notes.copurchase_pairs);
-    the double explode streams pairs through codegen with only the
-    filtered tail array materialized per (row, x). Shared by
-    copurchase_pairs / basket_lift / triangle_count (the r8 edge
-    build, 18.2 s → 6.5 s at sf2 vs the order-keyed self-join).
+    least/greatest needed). An earlier shape built a nested
+    array-of-arrays via transform(slice)+flatten BEFORE its explode —
+    the per-row nested allocation measured +22% at sf4 (11.45 s vs
+    9.38 s, phase-stamped); the double explode streams pairs through
+    codegen with only the filtered tail array materialized per (row,
+    x). Shared by copurchase_pairs / basket_lift / triangle_count (the
+    edge build, 18.2 s → 6.5 s at sf2 vs the order-keyed self-join).
     Returns (__pc encoded pair, n_orders).
     """
     enc = F.lit(_PAIR_ENC)
@@ -4085,10 +4085,9 @@ def triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE groupBy(order) + IN-ROW pair expansion, each unordered pair
     # one encoded 8-byte long (sf2 edge build measured 18.2 s → 6.5 s
     # vs the r7 self-join; AQE re-splits the post-explode skew). The
-    # decode is integer (shiftright/%) — the r8 F.floor(pc/enc) DOUBLE
-    # division was exact only below partkey 2^53/2^31 ≈ 4.2M
-    # (ADVICE r8 #1); shiftright holds over the full 2^31 encoding
-    # range.
+    # decode is integer (shiftright/%) — an F.floor(pc/enc) DOUBLE
+    # division would be exact only below partkey 2^53/2^31 ≈ 4.2M;
+    # shiftright holds over the full 2^31 encoding range.
     edges = (
         _basket_pair_counts(_order_baskets(spark, sf_dir))
         .filter(F.col("n_orders") >= 2)

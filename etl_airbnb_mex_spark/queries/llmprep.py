@@ -213,7 +213,7 @@ def semantic_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle parity with list_cosine_similarity is unchanged
     # (operators/similarity.py:cluster_pair_cosines).
     #
-    # r17 (VERDICT r16 #2, guide §4 + §2.3): ONE grouped Arrow pass.
+    # ONE grouped Arrow pass.
     # emit_group_size adds a per-cluster sentinel row carrying
     # n_members (full cluster row count — so labels with zero pairs
     # stay represented), and the final frame is a single narrow agg
@@ -731,15 +731,13 @@ def bigram_surprisal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from bigram types (1.78 → 2.46 s, shuffle 4.6 → 8.6 MB: it
     # traded cheap map-side-combined branch shuffles for a second
     # full pass of the raw token stream through an exchange).
-    # r17 runtime-plan audit (VERDICT r16 #8, dump committed at
-    # plans/r17/bigram_surprisal_r16shape_executed.txt): exchange
-    # reuse across the widened branches is PARTIAL at runtime — the
-    # doc-keyed branch pushes a different projection below its
-    # exchange, so the AQE final plan holds 3 text scans + 3 widening
-    # exchanges with 1 ReusedExchange, not the single materialized
-    # scan the r16 prose assumed. Acceptable by measurement: the scan
-    # is O(compressed bytes), trivial next to the explode+agg work in
-    # each branch, and the restructure that would force one scan is
+    # The AQE-final plan shows that exchange reuse across the widened
+    # branches is PARTIAL at runtime — the doc-keyed branch pushes a
+    # different projection below its exchange, so the AQE final plan
+    # holds 3 text scans + 3 widening exchanges with 1 ReusedExchange,
+    # not a single materialized scan. Acceptable by measurement: the
+    # scan is O(compressed bytes), trivial next to the explode+agg work
+    # in each branch, and the restructure that would force one scan is
     # exactly the rejected A/B above.
     d = parallelize_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
@@ -1084,8 +1082,8 @@ def lang_id_ngram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelize_scan: a compressed single-file documents table scans
     # as 1-2 splits — the trigram explode would serialize on one core
     # (tables.py:parallelize_scan).
-    # r17 (VERDICT r16 #7, guide §2.3): doc_id pruned from the widened
-    # checkpointed frame — neither pass uses it (the learn pass keys on
+    # doc_id is pruned from the widened checkpointed frame — neither
+    # pass uses it (the learn pass keys on
     # (lang, tri); the scoring pass groups straight to the
     # (lang, predicted) matrix), so it was dead weight in the exchange
     # and the checkpoint.

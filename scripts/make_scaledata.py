@@ -1,5 +1,5 @@
 """Build larger-SF replicas of the driver's sf0.1 testdata for the
-scale-trend benchmark (VERDICT r6 "Next round" #2).
+scale-trend benchmark.
 
 The driver ships sf{0.001,0.01,0.1} only; the recurring claim that the
 engine's fixed distributed overhead amortizes with volume (while the
@@ -32,9 +32,9 @@ so the scaled tables model MORE data, not repeated data:
 
 Determinism: numpy RandomState seeded by replica index only.
 
-Graph-density invariant (r11, VERDICT r10 #4): the r10 verdict
-hypothesized that tiling inflates co-purchase wedge density so
-triangle_count's "true work" grows superlinearly with SF. MEASURED
+Graph-density invariant: tiling might inflate co-purchase wedge
+density, so that triangle_count's "true work" grows superlinearly
+with SF. MEASURED
 (``--check-graph`` below, DuckDB over the tiled lineitem): the
 co-purchase graph (parts sharing an order, pair-count >= 2) is
 EXACTLY K disjoint copies of the sf0.1 graph — edges 3,573 -> 71,460

@@ -276,7 +276,7 @@ def test_bpe_train_matches_reference_implementation(spark):
 
 
 def test_word_5grams_short_docs_emit_nothing(spark):
-    """ADVICE.md r4 #1: a document with < 5 tokens must emit zero grams
+    """A document with < 5 tokens must emit zero grams
     (the oracle's range(1, len-3) is empty) instead of crashing on
     Spark's auto-descending sequence(1, size-4) + negative slice()."""
     from etl_airbnb_mex_spark.queries.advanced import _word_5grams
@@ -301,7 +301,7 @@ def test_word_5grams_short_docs_emit_nothing(spark):
 
 
 def test_asof_join_right_tiebreak_is_deterministic(spark):
-    """ADVICE.md r4 #3: multiple RIGHT rows at one (key, ts) must carry
+    """Multiple RIGHT rows at one (key, ts) must carry
     a deterministic row. With right_tiebreak, backward carries the
     tiebreak-MAXIMUM (NULLs last) and forward the tiebreak-MINIMUM."""
     from etl_airbnb_mex_spark.operators.joins import asof_join

@@ -159,7 +159,7 @@ def test_generar_graficos_artifacts(listings, reviews, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Reference-golden relationships (VERDICT.md r1 "Next round" #4)
+# Reference-golden relationships
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")

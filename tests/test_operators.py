@@ -245,32 +245,6 @@ def test_cosine_near_dup_bucketed_subset_of_exact(spark, sf_dir):
     assert len(got) >= 0.05 * len(exact)  # 2 tables × 4 bits @ θ≈72°
 
 
-#: Registered queries whose physical plan legitimately contains a
-#: BroadcastNestedLoopJoin (crossJoin against a broadcast 1-row
-#: scalar frame). SINGLE SOURCE OF TRUTH: tests/test_registry.py's
-#: audited allowlist — a second literal copy here drifted when the
-#: round-6 window rotated new scalar-broadcast queries in.
-from tests.test_registry import _SCALAR_BNLJ_OK
-
-
-def test_driver_window_plans_have_no_unbounded_products(spark, sf_dir):
-    """Explain-plan regression guard over the whole 50-slot driver
-    window (VERDICT.md r3 stretch #7): no CartesianProduct anywhere,
-    and BroadcastNestedLoopJoin only for the audited scalar-broadcast
-    allowlist — in particular the rewritten cosine_near_dup must plan
-    as a pure (table, bucket) equi-join."""
-    from etl_airbnb_mex_spark.queries import all_queries
-
-    offenders = []
-    for name, fn in list(all_queries().items())[:50]:
-        plan = _formatted_plan(fn(spark, sf_dir))
-        if "CartesianProduct" in plan:
-            offenders.append(f"{name}: CartesianProduct")
-        if "BroadcastNestedLoopJoin" in plan and name not in _SCALAR_BNLJ_OK:
-            offenders.append(f"{name}: BroadcastNestedLoopJoin")
-    assert not offenders, "unbounded join plans:\n" + "\n".join(offenders)
-
-
 # ---------------------------------------------------------------------------
 # Hypothesis property checks on scalar builders (SURVEY.md §5.3.5)
 # ---------------------------------------------------------------------------
@@ -563,7 +537,7 @@ def test_ivf_probe_pinned_matches_semantics(spark, sf_dir):
 
 
 def test_ivf_probe_pinned_rejects_multirow_query(spark, sf_dir):
-    """ADVICE r10 #2 (closed r12): the probe pick and top-k are GLOBAL,
+    """The probe pick and top-k are GLOBAL,
     so a multi-row query frame used to silently mix centroid picks and
     neighbors across queries — it must raise instead. The empty-result
     schema stays identical to the non-empty path (name AND type)."""
@@ -589,8 +563,8 @@ def test_ivf_probe_pinned_rejects_multirow_query(spark, sf_dir):
 
 
 def test_ivf_lifecycle_partitioned_write(spark, sf_dir, tmp_path):
-    """The 100 TB deployment shape behind the ivf_build_probe entry
-    (VERDICT r15 #5): assignments are WRITTEN partitioned by list id,
+    """The 100 TB deployment shape behind the ivf_build_probe entry:
+    assignments are WRITTEN partitioned by list id,
     so a probe reads only the probed lists — the list filter must reach
     the scan as a PartitionFilter (pruning), and the probe over the
     written table must reproduce the in-memory probe's rows exactly."""
@@ -646,7 +620,7 @@ def test_pagerank_round_ranks_stability(spark):
 
 
 def test_pagerank_rounding_boundary_guard(spark):
-    """ADVICE r10 #3 (closed r12): per-round rounding is cross-engine
+    """Per-round rounding is cross-engine
     safe only when every pre-rounding rank sits clear of the .5
     boundary. The guard expression must (a) pass values a full grid
     step away, (b) pass values just OUTSIDE the band, (c) abort loudly
@@ -675,7 +649,7 @@ def test_pagerank_rounding_boundary_guard(spark):
     # ON the boundary: the in-plan assert fires with the loud message
     with pytest.raises(SparkRuntimeException, match="boundary hit"):
         run([1.5e-12])
-    # magnitude-aware band (ADVICE r12 #1): at rank ~0.0086 the scaled
+    # magnitude-aware band: at rank ~0.0086 the scaled
     # value sits near 2^33 where one ulp is ~1.9e-6 grid units — a
     # two-ulp straddle of the .5 boundary (dist 3.8e-6) passed the old
     # fixed 1e-6 band silently but is exactly the cross-engine-drift
@@ -686,7 +660,7 @@ def test_pagerank_rounding_boundary_guard(spark):
     # ...while a same-magnitude value CLEAR of the boundary (dist 0.5
     # vs the widened ~8.9e-6 band) still rounds normally
     run([0.01])
-    # clamp (ADVICE r13 #3): at |scaled| ~1e16 the 4-ulp band would
+    # clamp: at |scaled| ~1e16 the 4-ulp band would
     # exceed the max attainable dist of 0.5 and fire unconditionally;
     # with the 0.25 clamp a large value clear of any .5 straddle
     # (1e4.25 at dp=12 -> scaled 2.5e15, frac representable, dist 0.25
@@ -753,9 +727,9 @@ def test_ngram_jaccard_verified_matches_bruteforce(spark, docs):
 
 def test_pair_encoding_integer_exact_near_2_31(spark):
     """The encoded-pair decode must be integer-exact over the FULL
-    2^31 encoding range: the r8 form decoded src with F.floor(pc/enc)
-    whose DOUBLE division loses exactness past partkey ~4.2M
-    (2^53/2^31, ADVICE r8 #1); the shiftright/% decode has no
+    2^31 encoding range: decoding src with F.floor(pc/enc) goes
+    through a DOUBLE division that loses exactness past partkey ~4.2M
+    (2^53/2^31); the shiftright/% decode has no
     floating-point bound. Exercise ids right at the top of the range."""
     import itertools
 
@@ -786,7 +760,7 @@ def test_global_order_prefix_null_nan_rank_order(spark):
     """Null and NaN order values must rank exactly as Spark's ascending
     sort places them (nulls FIRST, NaN LAST) — the r8 form dropped
     nulls into the last bucket while sorting them first inside it,
-    producing ranks inconsistent with a true global sort (ADVICE r8 #3).
+    producing ranks inconsistent with a true global sort.
     """
     from pyspark.sql import Window
 
@@ -822,7 +796,7 @@ def test_global_order_prefix_inf_rank_order(spark):
     places them (null < −Inf < finite < +Inf < NaN). Before r10 they
     were a documented precondition violation (an infinite min/max made
     every bucket width NaN); now limits come from finite values only
-    and the infinities pin to the edge buckets (VERDICT r9 #6)."""
+    and the infinities pin to the edge buckets."""
     from pyspark.sql import Window
 
     from etl_airbnb_mex_spark.operators.stats import global_order_prefix
@@ -1028,7 +1002,7 @@ def test_parse_array_roundtrips_clean_json(spark, words):
 def test_split_by_hash_safe_for_huge_and_negative_keys(spark):
     """The split bucket must be overflow-free int64 arithmetic: keys
     above ~3.5e9 would wrap the naive key*salt form, and negative keys
-    must normalize via pmod (ADVICE r1). Pin the exact buckets against a
+    must normalize via pmod. Pin the exact buckets against a
     Python big-int reference of (k mod 2^32 * salt) mod 2^32 mod 100."""
     from etl_airbnb_mex_spark.operators.setops import split_by_hash
 
@@ -1587,7 +1561,7 @@ def test_percentiles_nan_is_missing_on_every_method(spark):
 
 
 def test_iqr_outliers_nan_excluded_from_both_sides(spark):
-    """ADVICE r13 #1: Spark orders NaN above every double, so NaN rows
+    """Spark orders NaN above every double, so NaN rows
     satisfied `c > hi` while the keep_n denominator excluded them —
     numerator and denominator described different populations. The
     contract (r11 NaN-as-missing, matching pandas skipna) is that NaN
@@ -2338,7 +2312,7 @@ def test_cluster_pair_cosines_matches_bruteforce(spark):
 
 
 def test_cluster_pair_cosines_emit_group_size(spark):
-    """r17 single-Arrow-pass contract (VERDICT r16 #2): with
+    """Single-Arrow-pass contract: with
     emit_group_size=True every cluster emits exactly one sentinel row
     (ka/kb/cos_raw NULL) whose n_members is the FULL cluster row count
     — NULL and off-dimension vectors included, and clusters too ragged

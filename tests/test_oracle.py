@@ -29,7 +29,7 @@ def test_query_matches_oracle(spark, sf_dir, con, name):
 
 
 def test_bare_hugeint_oracle_fails_locally(spark, sf_dir, con):
-    """The CORRECTNESS_r04 failure class must be un-reintroducible:
+    """The bare-HUGEINT failure class must be un-reintroducible:
     DuckDB types a bare sum(BIGINT) as HUGEINT, which its pandas
     conversion renders float64 while Spark emits int64 — the driver's
     value-hash then mismatches on representation alone. The replica

@@ -582,7 +582,7 @@ def test_shj_threshold_formula_matches_shipped_conf():
     concurrent builders and the hashmap expansion. Pin the formula on
     synthetic (pool, slots, expansion) triples and assert the shipped
     16 MiB conf sits AT OR BELOW the local-shape bound — if either
-    side drifts, this test names which (VERDICT r11 #10)."""
+    side drifts, this test names which."""
     import pytest
 
     from etl_airbnb_mex_spark.session import (

@@ -111,7 +111,7 @@ def test_ensure_columns_schema_drift(spark):
 
 
 def test_mongo_source_falls_back_to_parquet(spark, tmp_path, monkeypatch):
-    """S1 config path (VERDICT.md r1 #5): with no Mongo URI set, the
+    """S1 config path: with no Mongo URI set, the
     reader must serve the declared schema from parquet."""
     import pytest
 
@@ -147,7 +147,7 @@ def test_mongo_source_branch_selects_connector(spark, monkeypatch):
 
 
 def test_mongo_live_read_smoke(spark, tmp_path, monkeypatch):
-    """Live-Mongo end-to-end smoke (VERDICT r9 #8): seed a local mongod,
+    """Live-Mongo end-to-end smoke: seed a local mongod,
     read the collection through read_mongo_or_parquet's connector
     branch, and assert rows + declared schema. Requires BOTH a mongod
     binary on PATH and the MongoDB Spark connector on the session
@@ -246,7 +246,7 @@ def test_load_table_schema_cache_matches_inference(spark, sf_dir):
 
 
 def test_load_table_schema_cache_invalidates_on_regen(spark, tmp_path):
-    """ADVICE r13 #2: the cache key carries the file's (mtime_ns,
+    """The cache key carries the file's (mtime_ns,
     size), so regenerating a table at the same path with a DIFFERENT
     schema re-infers instead of reading NULLs through the stale
     user-supplied schema (spark.read.schema() is not validated against
@@ -271,7 +271,7 @@ def test_load_table_schema_cache_invalidates_on_regen(spark, tmp_path):
     again = T.load_table(spark, sf_dir, "nation")
     assert set(again.columns) == {"n_nationkey2", "extra"}
     assert again.filter("n_nationkey2 IS NULL").count() == 0
-    # ADVICE r14 #4: regeneration REPLACES the entry (sig lives in the
+    # Regeneration REPLACES the entry (sig lives in the
     # value, not the key) — a regen loop must not grow the cache
     assert (
         len([k for k in T._SCHEMA_CACHE if k == (sf_dir, "nation")]) == 1

@@ -1,33 +1,24 @@
 """Registry-surface invariants the driver contract depends on.
 
-The driver verifies only the FIRST 50 entries of ``queries()`` in
-iteration order, so ordering is part of the contract: the window
-(queries/__init__.py:_PRIORITY) holds the entries with the weakest
-driver provenance, and every oracle-bearing entry outside it has a
-driver row in some ``CORRECTNESS_r*.json``.
+``queries()`` and ``oracle_sql()`` list every registered entry in
+registration order, and every oracle-bearing entry is checked against
+DuckDB (tests/test_oracle.py).
 """
 
 from __future__ import annotations
 
-import json
 import pathlib
+import re
 
-from etl_airbnb_mex_spark.queries import (
-    REGISTRY,
-    _PRIORITY,
-    all_oracle_sql,
-    all_queries,
-)
+from etl_airbnb_mex_spark.queries import REGISTRY, all_oracle_sql, all_queries
 
 _REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def test_readme_registry_counts_match():
     """README quotes the registry size as evidence; hard-coded counts
-    drift when queries are added (VERDICT.md r4 "What's wrong" #3).
+    drift when queries are added.
     Fails until README matches len(REGISTRY) / the oracle count."""
-    import re
-
     text = (_REPO / "README.md").read_text()
     m = re.search(
         r"registry: (\d+) entries.*?\((\d+) carry oracles\)",
@@ -45,48 +36,12 @@ def test_readme_registry_counts_match():
     )
 
 
-def test_priority_ops_fill_driver_window_exactly():
-    names = list(all_queries())
-    assert len(_PRIORITY) <= 50
-    assert names[: len(_PRIORITY)] == list(_PRIORITY)
-
-
-#: Oracle-bearing entries registered AFTER this round's rotation was
-#: sized — they queue for the NEXT rotation (only when the 50-slot
-#: window is already full; round-4 additions go straight into
-#: _PRIORITY while slots remain). Keep in sync when adding queries;
-#: the test below fails if anything OLDER is left unverified and
-#: outside the window.
-_QUEUED_FOR_NEXT_ROTATION: set[str] = {
-    # (empty: the round-6 window absorbed all round-6 additions —
-    # the 7 late ones displaced an equal number of stale-refresh
-    # slots, listed for round 7 in queries/__init__.py.)
-}
-
-
-def test_window_covers_all_unverified_oracle_entries():
-    """Every oracle-bearing entry must either have a driver CORRECTNESS
-    row from a past round, sit inside this round's 50-slot window, or be
-    explicitly queued as a post-rotation addition — the r2 verdict's top
-    gap, kept closed as the registry grows."""
-    checked: set[str] = set()
-    for f in _REPO.glob("CORRECTNESS_r*.json"):
-        checked |= set(json.loads(f.read_text()))
-    window = set(list(all_queries())[:50])
-    unverified = [
-        n for n, s in REGISTRY.items()
-        if s.oracle is not None and n not in checked and n not in window
-        and n not in _QUEUED_FOR_NEXT_ROTATION
-    ]
-    assert not unverified, f"oracle entries never driver-checked and outside window: {unverified}"
-
-
 def test_every_query_survives_analysis(spark, sf_dir):
     """Analysis-time smoke over the WHOLE registry (no execution): build
     each query's DataFrame and force analysis via ``.schema``. This is
     the cheap guard that would have caught both pyspark-4.1 TIMESTAMP_NTZ
     breakages (unix_micros rejection, withWatermark rejection) without
-    running a single job (VERDICT.md r2, "Next round" #5)."""
+    running a single job."""
     failures = []
     for name, fn in all_queries().items():
         try:
@@ -110,10 +65,9 @@ def test_ordering_is_complete_and_stable():
 #: Queries whose physical plan legitimately contains a
 #: BroadcastNestedLoopJoin: every one is a ``crossJoin(F.broadcast(x))``
 #: where ``x`` is a 1-row (or k-row, metadata-scale) aggregate/centroid
-#: frame — a scalar broadcast, not a data-scale nested loop. Audited in
-#: VERDICT.md r3 ("every crossJoin is a broadcast 1-row scalar").
-#: ``ngram_jaccard`` is the gated O(n²) pytest-oracle demo, demoted to
-#: the registry tail by design.
+#: frame — a scalar broadcast, not a data-scale nested loop; every
+#: entry was audited. ``ngram_jaccard`` is the gated O(n²)
+#: pytest-oracle demo.
 _SCALAR_BNLJ_OK: set[str] = {
     "funnel_conversion", "feature_scale", "sample_weighted", "mad_robust",
     "key_skew_profile", "chi_square_assoc", "outliers_iqr",
@@ -176,7 +130,7 @@ _SCALAR_BNLJ_OK: set[str] = {
 
 
 def test_physical_plans_have_no_scale_killers(spark, sf_dir):
-    """Explain-plan regression guard (VERDICT.md r3, "Next round" #3/#7):
+    """Explain-plan regression guard:
 
     * NO query's plan may contain ``CartesianProduct`` (an un-broadcast
       cross join shuffles n×m rows — always wrong here).
@@ -216,7 +170,7 @@ def test_physical_plans_have_no_scale_killers(spark, sf_dir):
 #: Queries whose optimized plan legitimately contains an UNPARTITIONED
 #: Window (Exchange SinglePartition → one task). Allowed ONLY when the
 #: window's input frame is already aggregated to metadata scale — each
-#: entry audited (VERDICT.md r4 stretch #7):
+#: entry audited:
 #:   flagship_topn_pct / pct_of_total — pct-of-total over a grouped agg
 #:     (≤ dozens of rows: return flags / order priorities).
 #:   window_lag_delta / monthly_cumulative / mom_growth — lag & cumsum
@@ -294,7 +248,7 @@ _GLOBAL_WINDOW_OK: set[str] = {
 #: entries are global_order_prefix's bucket-offset prefix (≤4096 rows
 #: by construction); roc_auc's axis is its FIXED quantization grid
 #: (score range / grid step — metadata-scale at any input size; moved
-#: off the bucket prefix in r12, VERDICT r11 #5). Any other
+#: off the bucket prefix to cut 10 jobs to 4). Any other
 #: unpartitioned window in these queries fails even though the query
 #: is allowlisted.
 _BOUNDED_AXIS_WINDOW_OK: dict[str, str] = {
@@ -355,7 +309,7 @@ def _assert_bounded_axis(name: str, windows: list, axis: str) -> None:
 def test_no_unaudited_single_partition_windows(spark, sf_dir):
     """A Window with an empty partitionSpec funnels its whole input
     through ONE task — the scale-killer class the CartesianProduct/BNLJ
-    guard cannot see (VERDICT.md r4 stretch #7). Walk every registered
+    guard cannot see. Walk every registered
     query's optimized logical plan and flag unpartitioned Window nodes;
     each must be on the audited metadata-scale allowlist (and, for the
     bucket-prefix queries, each window must be the bucket-total prefix
@@ -411,9 +365,9 @@ def test_large_input_quantiles_keep_bounded_bucket_window(spark):
 
 #: Queries whose physical plan legitimately evaluates Python — every
 #: entry is Arrow-batched (pandas_udf → ArrowEvalPython, mapInPandas →
-#: MapInPandas), never row-at-a-time. Audited (VERDICT.md r6 "What's
-#: wrong" #2: the two pandas_udfs measured 8×/2.4× over the interpreted
-#: higher-order-function forms they replaced):
+#: MapInPandas), never row-at-a-time. Audited (the two pandas_udfs
+#: measured 8×/2.4× over the interpreted higher-order-function forms
+#: they replaced):
 #:   knn_cosine_lsh — LSH sign-sketch pandas_udf
 #:     (operators/similarity.py:_lsh_bucket_udf).
 #:   cosine_near_dup / split_leakage_audit — per-group BLAS gram matrix
@@ -453,15 +407,13 @@ _PYTHON_EVAL_NODES = (
 
 
 def test_no_row_at_a_time_python_in_any_plan(spark, sf_dir):
-    """Python-eval plan guard (VERDICT.md r6, "Next round" #3): the
+    """Python-eval plan guard: the
     CartesianProduct/BNLJ/global-Window guards cannot see an
     accidentally-interpreted row-at-a-time UDF. Walk every registered
     query's physical plan: ``BatchEvalPython`` (per-row Python, ~10-100×
     slower than Arrow) is banned outright; the Arrow-batched node types
     are allowed only for the audited entries in ``_PYTHON_EVAL_OK``.
     Set-equality both directions keeps the allowlist honest."""
-    import re
-
     def python_nodes(df) -> set[str]:
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -503,14 +455,12 @@ def test_no_row_at_a_time_python_in_any_plan(spark, sf_dir):
 
 
 def test_semantic_dedup_single_arrow_pass(spark, sf_dir):
-    """r17 (VERDICT r16 #2): semantic_dedup_clusters derives member
-    counts from the SAME grouped Arrow pass that computes the pair
-    cosines (emit_group_size sentinel rows) — the plan must hold
-    exactly ONE FlatMapGroupsInPandas and NO join (the r16 shape
-    aggregated the embeddings a second time and broadcast-joined the
-    counts back, shuffling/scanning the embeddings payload twice)."""
-    import re
-
+    """semantic_dedup_clusters derives member counts from the SAME
+    grouped Arrow pass that computes the pair cosines (emit_group_size
+    sentinel rows) — the plan must hold exactly ONE
+    FlatMapGroupsInPandas and NO join (an earlier shape aggregated the
+    embeddings a second time and broadcast-joined the counts back,
+    shuffling/scanning the embeddings payload twice)."""
     df = all_queries()["semantic_dedup_clusters"](spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -554,11 +504,24 @@ def test_no_container_columns_in_oracle_surface():
                 idx += len(marker)
 
 
+def _citing_sources() -> list[tuple[pathlib.Path, str]]:
+    """(repo-relative path, text) of every file whose citations the
+    guards below check."""
+    files = [
+        _REPO / n for n in ("README.md", "SURVEY.md", "__spark_entry__.py")
+    ]
+    files += [
+        p for d in ("etl_airbnb_mex_spark", "tests", "scripts", ".claude")
+        for p in sorted((_REPO / d).rglob("*")) if p.suffix in (".py", ".md")
+    ]
+    return [(p.relative_to(_REPO), p.read_text()) for p in files]
+
+
 def test_cited_python_files_exist():
     """Every ``*.py`` path and bare ``*.py`` file name cited in
-    the engine, the tests, README.md, SURVEY.md or .claude/ names a
-    file in the repo, so deleting a module or a tool cannot leave a
-    dangling citation.
+    the engine, ``tests/``, ``scripts/``, ``__spark_entry__.py``,
+    README.md, SURVEY.md or ``.claude/`` names a file in the repo, so
+    deleting a module or a tool cannot leave a dangling citation.
 
     A path whose first directory is ``scripts``, ``tests``,
     ``perfbench`` or the package resolves from the repo root; one whose
@@ -566,8 +529,6 @@ def test_cited_python_files_exist():
     (a deleted subpackage stays listed, so citing it still fails).
     ``{a,b}`` brace lists expand. Other paths, such as the reference
     repo's ``src/*.py``, are out of scope."""
-    import re
-
     pkg = "etl_airbnb_mex_spark"
     roots = dict.fromkeys(("scripts", "tests", "perfbench", pkg), _REPO)
     roots.update(dict.fromkeys(
@@ -577,18 +538,12 @@ def test_cited_python_files_exist():
     ))
     path = re.compile(r"(?<![\w/-])((?:\w+/)+)(\{[\w,]+\}|\w+)\.py\b")
     bare = re.compile(r"(?<![\w/.{,-])(\w+\.py)\b")
-    sources = [_REPO / "README.md", _REPO / "SURVEY.md"] + [
-        p for d in ("etl_airbnb_mex_spark", "tests", ".claude")
-        for p in sorted((_REPO / d).rglob("*")) if p.suffix in (".py", ".md")
-    ]
     names = {p.name for p in _REPO.glob("*.py")} | {
         p.name for d in ("etl_airbnb_mex_spark", "tests", "scripts", "perfbench")
         for p in (_REPO / d).rglob("*.py")
     }
     missing = []
-    for src in sources:
-        text = src.read_text()
-        where = src.relative_to(_REPO)
+    for where, text in _citing_sources():
         for m in path.finditer(text):
             head = m.group(1)
             root = roots.get(head.split("/", 1)[0])
@@ -602,6 +557,34 @@ def test_cited_python_files_exist():
             if m.group(1) not in names
         ]
     assert not missing, "citations of missing files:\n" + "\n".join(missing)
+
+
+#: Stems of the per-round review and benchmark files an earlier
+#: harness kept at the repo root; they are gone, so a citation of one
+#: points at nothing. Each stem is spelled with one character class so
+#: that this pattern does not match its own source line.
+_ROUND_ARTIFACT = re.compile(
+    r"VERDIC[T]|ADVIC[E]|CORRECTNES[S]_r|BENCH_[r]\d|BENCH_SIDECA[R]"
+    r"|PERF_[r]\d|VERIFY_[r]\d|OPTIMIZATION_[r]|plans/[r]1[67]"
+)
+
+
+def test_cited_root_documents_exist():
+    """Every repo-root document (``README.md``, ``PLANS.md``, ...) cited
+    by the files the guard above reads exists, and none of them cites a
+    round artifact. A reason or a measurement is stated where it is
+    used, not left behind a file name."""
+    doc = re.compile(r"(?<![\w/.-])([A-Z][A-Z0-9_]*\.(?:md|json))\b")
+    bad = []
+    for where, text in _citing_sources():
+        bad += [
+            f"{where}: {m.group(1)}" for m in doc.finditer(text)
+            if not (_REPO / m.group(1)).is_file()
+        ]
+        for m in _ROUND_ARTIFACT.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            bad.append(f"{where}:{line}: {m.group(0)}")
+    assert not bad, "dangling document citations:\n" + "\n".join(bad)
 
 
 def test_all_oracle_sql_parses_in_duckdb(sf_dir):

@@ -1,8 +1,8 @@
-"""sf1 error-bound checks for the sketch operators (VERDICT r10 #8).
+"""sf1 error-bound checks for the sketch operators.
 
-Since r16 the registered approx_distinct / percentiles_approx /
+The registered approx_distinct / percentiles_approx /
 hll_distinct_rollup entries are bounded-assertion forms the driver
-hash-asserts at sf0.01 (VERDICT r15 #1: exact values + an
+hash-asserts at sf0.01 (exact values + an
 estimate-within-published-error boolean). These tests stay as the
 LARGE-scale leg: they bound the RAW estimates at sf1 (~6M lineitem
 rows, built by scripts/make_scaledata.py 1.0), where a sketch cannot
@@ -93,8 +93,8 @@ def test_hll_rollup_bound_sf1(spark):
 
 
 def test_bounded_assertion_entries_hold_sf1(spark):
-    """The r16 registered bounded-assertion forms (VERDICT r15 #1)
-    assert their booleans at the driver's sf0.01; this is the sf1
+    """The registered bounded-assertion forms assert their booleans
+    at the driver's sf0.01; this is the sf1
     scale leg — the SAME registered plans, 100× the data, every
     estimate-within-published-error boolean still TRUE. A mis-set
     tolerance that squeaks by at sf0.01 fails here."""
